@@ -2,9 +2,9 @@
 (src/main/scala) together with the benchmark's own sources (perfbench/src)
 with the Scala compiler that ships in the Spark distribution, packs them
 with the program's resources (src/main/resources) into one jar, and
-records a class-data-sharing archive of the classes a run loads (one
-toy-size pass over every workload), so each benchmark JVM starts from
-pre-parsed classes instead of spending its first seconds loading Spark.
+writes the repo's DuckDB oracle SQL of the queries corpus_dedup checks
+against to its oracle/ directory. Runs use a plain JVM on that jar and
+the Spark jars.
 
 The output directory is keyed by a hash of every input file, so an
 unchanged tree is built once and reused.
@@ -18,6 +18,8 @@ import shutil
 import subprocess
 import sys
 import zipfile
+
+import dedup_inputs
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -58,28 +60,24 @@ def resources():
                   if os.path.isfile(p))
 
 
-def java_cmd(out, extra=()):
-    """The JVM command line of a benchmark run against build `out`."""
+def java_cmd(out, main="perfbench.Main"):
+    """The JVM command line of `main` against build `out`."""
     tmp = os.path.join(BUILD, "tmp")
     os.makedirs(tmp, exist_ok=True)
     cmd = ["java", "-Xmx3g", "-Xss8m", "-XX:-UsePerfData", "-Djava.io.tmpdir=" + tmp,
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
     for p in JVM_OPENS:
         cmd += ["--add-opens", p + "=ALL-UNNAMED"]
-    jsa = os.path.join(out, "perfbench.jsa")
-    if os.path.exists(jsa) and not extra:
-        cmd.append("-XX:SharedArchiveFile=" + jsa)
-    cmd += list(extra)
     cmd += ["-cp", os.path.join(out, "perfbench.jar") + os.pathsep + os.path.join(spark_jars(), "*"),
-            "perfbench.Main"]
+            main]
     return cmd
 
 
-def main_args(workload, seed, seconds, trace, scale, corrupt=False):
+def main_args(workload, seed, seconds, trace, scale, corrupt, inputs_only, inputs):
     return ["--workload", workload, "--seed", str(seed), "--seconds", str(seconds),
-            "--trace", str(trace), "--work", BUILD, "--python", sys.executable,
-            "--oracle", os.path.join(HERE, "oracle.py"), "--scale", scale,
-            "--corrupt-expected", "1" if corrupt else "0"]
+            "--trace", str(trace), "--work", BUILD, "--scale", scale,
+            "--corrupt-expected", "1" if corrupt else "0",
+            "--inputs-only", "1" if inputs_only else "0", "--inputs", inputs]
 
 
 def ensure_built():
@@ -123,16 +121,11 @@ def ensure_built():
                 if os.path.isfile(p):
                     jar.write(p, os.path.relpath(p, base))
     shutil.rmtree(classes)
-
-    # A failed archive pass leaves a build that only starts slower.
-    print("perfbench: recording the class-data-sharing archive", file=sys.stderr)
-    train = java_cmd(out, ["-XX:ArchiveClassesAtExit=" + os.path.join(out, "perfbench.jsa")])
-    train += main_args("all", 1, 1, 1, "toy")
-    with open(os.path.join(out, "archive.log"), "w") as log:
-        if subprocess.run(train, stdout=log, stderr=log).returncode != 0:
-            print("perfbench: archive pass failed; running without it", file=sys.stderr)
-            for p in glob.glob(os.path.join(out, "perfbench.jsa*")):
-                os.remove(p)
+    dump = java_cmd(out, "perfbench.OracleSql") + [os.path.join(out, "oracle")]
+    if subprocess.run(dump + [q for _, q, _ in dedup_inputs.QUERIES], stdout=sys.stderr).returncode != 0:
+        shutil.rmtree(out, ignore_errors=True)
+        print("perfbench: writing the oracle SQL failed", file=sys.stderr)
+        return None
     open(os.path.join(out, "_OK"), "w").close()
     return out
 

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
+/** `inputs`: the directory of inputs made outside the JVM (corpus_dedup). */
 final case class Args(workload: String, seed: Long, seconds: Double, trace: Boolean,
-                      work: String, toy: Boolean, corrupt: Boolean,
-                      python: String, oracleScript: String)
+                      work: String, toy: Boolean, corrupt: Boolean, inputsOnly: Boolean,
+                      inputs: String)
 
 object Args {
   def parse(a: Array[String]): Args = {
@@ -14,7 +15,7 @@ object Args {
     def req(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     Args(req("workload"), req("seed").toLong, req("seconds").toDouble, req("trace") == "1",
       req("work"), m.get("scale").contains("toy"), m.get("corrupt-expected").contains("1"),
-      m.getOrElse("python", "python3"), req("oracle"))
+      m.get("inputs-only").contains("1"), m.getOrElse("inputs", ""))
   }
 }
 
@@ -32,6 +33,12 @@ object Digest {
   def rowHash(cols: Seq[String]): Column =
     conv(substring(md5(concat_ws("\u0001", cols.map(c => col(c).cast("string")): _*)), 1, 15), 16, 10)
       .cast("decimal(38,0)")
+
+  /** `rowHash` of one row's values, outside Spark. */
+  def rowHashOf(values: Seq[String]): BigInt = {
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(values.mkString("\u0001").getBytes("UTF-8"))
+    BigInt(md5.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15), 16)
+  }
 
   /** Digest plus extra aggregates evaluated in the same pass. `key`
     * empty skips the distinct count (and its exchange).
@@ -125,32 +132,29 @@ final class Ctx(val args: Args) {
 
   // ---- set-up ----
   private val jvmStartMs = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
-  private val setups = ArrayBuffer.empty[Double]
-  var excludedFromSetupS = 0.0 // input generation and oracle, cached per seed
+  private var excludedS = 0.0
+  private var _setupS = 0.0
+  def setupS: Double = _setupS
 
-  /** Set up `n` times (one in a traced run): the first from JVM start,
-    * the rest from a fresh session. `start` (re)creates the session,
-    * `warm` runs the warm-up reps and warms the page cache. The timed
-    * reps start from the last set-up.
-    */
-  def setup(n: Int)(start: => Unit)(warm: => Unit): Unit = {
-    (1 to n).foreach { i =>
-      val t0 = if (i == 1) jvmStartMs * 1000000L else System.currentTimeMillis() * 1000000L
-      start
-      warm
-      val s = (System.currentTimeMillis() * 1000000L - t0) / 1e9 - (if (i == 1) excludedFromSetupS else 0.0)
-      setups += s
-      log(f"setup $i: $s%.3f s")
-    }
+  /** Make or load the inputs; the time is not part of the set-up. */
+  def inputs[T](make: => T): T = {
+    val t0 = System.nanoTime()
+    try make finally excludedS += (System.nanoTime() - t0) / 1e9
   }
-  /** Set-ups per run: three, one in a traced run, two at toy size. */
-  def setupRuns: Int = if (args.trace) 1 else if (args.toy) 2 else 3
+
+  /** The set-up: from JVM start until the first timed rep is ready.
+    * `start` starts the session and loads the inputs (through
+    * `inputs`), `warm` runs the warm-up reps and warms the page cache.
+    */
+  def setup(start: => Unit)(warm: => Unit): Unit = {
+    start
+    warm
+    _setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3 - excludedS
+    log(f"setup: ${_setupS}%.3f s")
+  }
 
   /** Rounds of reps at least: `n`, or one at toy size. */
   def minRounds(n: Int): Int = if (args.toy) 1 else n
-
-  def setupS: Double = Stats.median(setups.toSeq)
-  def setupAll: Seq[Double] = setups.toSeq
 
   // ---- timed legs ----
   private val timedLegs = ArrayBuffer.empty[Leg]
@@ -158,29 +162,28 @@ final class Ctx(val args: Args) {
   val overhead = ArrayBuffer.empty[Double]
   private val box = new BoxState
 
-  /** One leg's rep (prep untimed, op timed, check untimed) and its
-    * traced rep.
+  /** One leg's rep (prep untimed, op timed, check untimed) and, when
+    * the leg is `traced`, its traced rep.
     */
-  final class LegSpec(val phase: String, val rep: () => Option[Double], val traced: Leg => Unit)
+  final class LegSpec(val phase: String, val rep: () => Option[Double], val traced: Option[Leg => Unit])
 
-  def spec[T](phase: String)(prep: => Unit)(op: => T)(check: T => Option[String]): LegSpec =
+  def spec[T](phase: String, traced: Boolean = true)(prep: => Unit)(op: => T)(check: T => Option[String]): LegSpec =
     new LegSpec(phase, () => { prep; checked(s"$phase rep")(op)(check) },
-      l => tracedRep(l)(prep)(op)(check))
+      if (traced) Some(l => tracedRep(l)(prep)(op)(check)) else None)
 
   /** Time legs together: their reps take turns, so a burst of machine
     * noise lands on every leg alike, until `minRounds` rounds are done
-    * and `budgetS` seconds have passed. A spec listed twice gets two
-    * reps per round. In a traced run one more rep of each leg follows
-    * with the listeners attached; it is never part of the walls.
+    * and `budgetS` seconds have passed. In a traced run one more rep of
+    * each traced leg follows with the listeners attached; it is never
+    * part of the walls.
     */
-  def legs(budgetS: Double, minRounds: Int, maxRounds: Int = 60)(round: LegSpec*): Seq[Leg] = {
-    val specs = round.distinct
+  def legs(budgetS: Double, minRounds: Int, maxRounds: Int = 60)(specs: LegSpec*): Seq[Leg] = {
     val walls = specs.map(s => s -> ArrayBuffer.empty[Double]).toMap
     val t0 = System.nanoTime()
     val steal0 = box.stealTicks()
     var i = 0
     while (i < maxRounds && (i < minRounds || (System.nanoTime() - t0) / 1e9 < budgetS)) {
-      round.foreach(s => s.rep().foreach(walls(s) += _))
+      specs.foreach(s => s.rep().foreach(walls(s) += _))
       i += 1
     }
     val steal = box.stealShare(steal0, box.stealTicks())
@@ -189,7 +192,7 @@ final class Ctx(val args: Args) {
       timedLegs += l
       log(f"${l.phase} walls ${l.walls.map(w => f"$w%.3f").mkString(",")} steal $steal%.4f")
     }
-    if (args.trace) specs.zip(ls).foreach { case (s, l) => s.traced(l) }
+    if (args.trace) specs.zip(ls).foreach { case (s, l) => s.traced.foreach(_(l)) }
     ls
   }
 

@@ -5,11 +5,13 @@ import graft.pdf.PdfGen
 import graft.pipeline.PageRow
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-final case class WebGenRow(url: String, warc_ts: Timestamp, html: Array[Byte], text: String,
-                           lang: String, expected: String)
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
 
 /** Seeded workload inputs, generated once per (seed, size) under the
   * run's work directory and reused by later runs with the same seed.
@@ -66,28 +68,56 @@ object Inputs {
   final case class Web(pagesDir: String, deltaDir: String, nBase: Long, nDelta: Long,
                        base: Digest, delta: Digest, htmlBytes: Long)
 
+  /** The schema Spark gives a `PageRow` table. */
+  private val pageSchema = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional binary url (STRING);
+      |  optional int64 warc_ts (TIMESTAMP(MICROS,true));
+      |  optional binary html;
+      |  optional binary text (STRING);
+      |  optional binary lang (STRING);
+      |}""".stripMargin)
+
+  /** Rows [lo, hi) as `files` parquet files of equal row ranges under
+    * `dir`, written in parallel without a Spark session (so the JVM
+    * that makes the inputs stays short); returns the golden digest of
+    * (url, expected text) and the html bytes.
+    */
+  private def writePages(seed: Long, lo: Int, hi: Int, files: Int, dir: Path): (Digest, Long) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Files.createDirectories(dir)
+    val parts = (0 until files).map { k =>
+      Future {
+        val rows = (lo + (hi - lo) * k / files until lo + (hi - lo) * (k + 1) / files).map(webRow(seed, _))
+        val w = ExampleParquetWriter.builder(new HPath(dir.resolve(f"part-$k%05d.parquet").toString))
+          .withType(pageSchema).withConf(new Configuration())
+          .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        val g = new SimpleGroupFactory(pageSchema)
+        try rows.foreach { case (p, _) =>
+          w.write(g.newGroup().append("url", p.url).append("warc_ts", p.warc_ts.getTime * 1000L)
+            .append("html", Binary.fromConstantByteArray(p.html)).append("text", p.text)
+            .append("lang", p.lang))
+        } finally w.close()
+        (rows.map(_._1.url), rows.map { case (p, e) => Digest.rowHashOf(Seq(p.url, e)) }.sum,
+          rows.map(_._1.html.length.toLong).sum)
+      }
+    }
+    val done = parts.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+    val urls = done.flatMap(_._1)
+    (Digest(urls.size, urls.distinct.size, done.map(_._2).sum), done.map(_._3).sum)
+  }
+
   /** `n` base pages as 16 parquet files of equal row ranges, and a
     * delta of n/20 new urls; goldens are digests of (url, expected text).
     */
-  def web(spark: SparkSession, work: String, seed: Long, n: Int): Web = {
+  def web(work: String, seed: Long, n: Int): Web = {
     val dir = Paths.get(work, "inputs", s"web-s$seed-n$n")
     val nDelta = n / 20
     if (!done(dir)) {
       clean(dir)
-      import spark.implicits._
-      def write(lo: Int, hi: Int, parts: Int, name: String): (Digest, Long) = {
-        val rows = spark.range(lo, hi, 1, parts).map { i =>
-          val (p, e) = webRow(seed, i.toInt)
-          WebGenRow(p.url, p.warc_ts, p.html, p.text, p.lang, e)
-        }.cache()
-        rows.select("url", "warc_ts", "html", "text", "lang").write.parquet(dir.resolve(name).toString)
-        val (d, ex) = Digest.of(rows.select(col("url"), col("expected").as("text"), length(col("html")).as("bytes")),
-          "url", Seq("url", "text"), Seq(sum("bytes")))
-        rows.unpersist()
-        (d, ex.head.toLong)
-      }
-      val (base, bytes) = write(0, n, 16, "pages")
-      val (delta, _) = write(n, n + nDelta, 4, "delta")
+      val (base, bytes) = writePages(seed, 0, n, 16, dir.resolve("pages"))
+      val (delta, _) = writePages(seed, n, n + nDelta, 4, dir.resolve("delta"))
       markDone(dir, Map("base" -> base.toString, "delta" -> delta.toString, "html_bytes" -> bytes.toString))
     }
     val m = meta(dir)
@@ -105,67 +135,28 @@ object Inputs {
 
   // ---------------- corpus_dedup ----------------
 
-  private val vocab = Array(
-    "key", "agg", "row", "scan", "slow", "fast", "table", "value", "part", "hash",
-    "merge", "batch", "spark", "window", "order", "data", "column", "join", "small",
-    "line", "customer", "query", "filter", "group", "big", "vector", "the", "a",
-    "index", "page", "cache", "disk", "read", "write", "block", "plan", "stage",
-    "task", "node", "core", "byte", "span", "gram", "text", "token", "shard",
-    "split", "sort", "limit", "count")
+  final case class Dedup(dir: String, docs: Long, span: Digest, para: Digest, exact: Digest)
 
-  /** About 120 tokens over a 50-word vocabulary, about 3% exact
-    * duplicates of an earlier doc, and a shared footer.
+  /** `documents.parquet` and the DuckDB oracle's digests of
+    * `q_span_dedup`, `q_para_dedup` and `q_dedup_exact`, made once per
+    * seed by perfbench/dedup_inputs.py before the JVM starts.
     */
-  def dedupText(seed: Long, i: Long): String = {
-    val src = if (i % 33 == 13 && i >= 7) i - 7 else i
-    var x = (src ^ (seed * 0x9E3779B97F4A7C15L)) * 6364136223846793005L + 1442695040888963407L
-    def next(): Long = { x = x * 6364136223846793005L + 1442695040888963407L; x >>> 33 }
-    val n = 80 + (next() % 80).toInt
-    val sb = new StringBuilder
-    var j = 0
-    while (j < n) { sb.append(vocab((next() % vocab.length).toInt)).append(' '); j += 1 }
-    sb.append("subscribe to the newsletter for updates shared footer")
-    sb.toString
-  }
-
-  final case class Dedup(dir: String, docs: Long, span: Digest, para: Digest)
-
-  /** `documents.parquet` plus the DuckDB oracle's digests of
-    * `q_span_dedup` and `q_para_dedup`, computed once per seed.
-    */
-  def dedup(spark: SparkSession, work: String, seed: Long, n: Int,
-            python: String, oracleScript: String): Dedup = {
-    val dir = Paths.get(work, "inputs", s"dedup-s$seed-n$n")
-    if (!done(dir)) {
-      clean(dir)
-      import spark.implicits._
-      spark.range(0, n, 1, 8).map(i => (i, dedupText(seed, i))).toDF("doc_id", "text")
-        .write.parquet(dir.resolve("documents.parquet").toString)
-      val digests = Seq("span" -> "q_span_dedup", "para" -> "q_para_dedup").map { case (k, q) =>
-        val sqlFile = dir.resolve(s"$q.sql")
-        Files.write(sqlFile, graft.SparkEntry.oracleSql(q).getBytes("UTF-8"))
-        val cols = if (k == "span") "doc_id,n_tokens,n_removed,digest" else "doc_id,n_paras,n_kept,digest"
-        k -> Oracle.run(python, oracleScript, dir.resolve("documents.parquet").toString, sqlFile.toString, cols)
-      }.toMap
-      markDone(dir, digests.map { case (k, d) => k -> d.toString })
-    }
-    val m = meta(dir)
-    Dedup(dir.toString, n, Digest.parse(m("span")), Digest.parse(m("para")))
+  def dedup(dir: String): Dedup = {
+    require(done(Paths.get(dir)), s"corpus_dedup inputs missing in $dir")
+    val m = meta(Paths.get(dir))
+    Dedup(dir, m("docs").toLong, Digest.parse(m("span")), Digest.parse(m("para")), Digest.parse(m("exact")))
   }
 }
 
-/** Runs the repo's DuckDB oracle SQL through the installed python
-  * `duckdb` and returns the digest of its result rows.
+/** Writes the repo's DuckDB oracle SQL (`SparkEntry.oracleSql`) of each
+  * named query to `<dir>/<query>.sql`, for perfbench/dedup_inputs.py.
+  *
+  *   perfbench.OracleSql <dir> <query>...
   */
-object Oracle {
-  def run(python: String, script: String, parquetDir: String, sqlFile: String, cols: String): Digest = {
-    val pb = new ProcessBuilder(python, script, "--parquet", parquetDir, "--sql", sqlFile, "--cols", cols)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    val p = pb.start()
-    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-    val rc = p.waitFor()
-    require(rc == 0, s"oracle exited with $rc")
-    val line = out.linesIterator.toSeq.lastOption.getOrElse("")
-    Digest.parse(line.trim)
+object OracleSql {
+  def main(args: Array[String]): Unit = {
+    val dir = Paths.get(args.head)
+    Files.createDirectories(dir)
+    args.tail.foreach(q => Files.write(dir.resolve(s"$q.sql"), graft.SparkEntry.oracleSql(q).getBytes("UTF-8")))
   }
 }

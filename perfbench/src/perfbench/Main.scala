@@ -9,18 +9,25 @@ import java.nio.file.{Files, Paths}
 final case class Result(endToEnd: Seq[(String, Double)], named: Seq[(String, Double)],
                         layer: Seq[(String, Double)])
 
+object Result {
+  /** What an inputs-only run hands back. */
+  val InputsOnly: Result = Result(Nil, Nil, Nil)
+}
+
 /** Runs one workload and prints, on stdout, a `PERFBENCH-INFO` line of
   * named numbers and box state, then a `PERFBENCH-RESULT` line holding
   * the result object (`correct`, `attempted`, `failed`, `metrics`).
+  * With `--inputs-only 1` it only makes and caches the seed's inputs
+  * (web_extract), so that the measured JVM finds them ready.
   *
   *   perfbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *                  --work <dir> --oracle <oracle.py> [--python <exe>]
-  *                  [--scale toy] [--corrupt-expected 1]
+  *                  --work <dir> [--inputs <dir>] [--scale toy]
+  *                  [--corrupt-expected 1] [--inputs-only 1]
   */
 object Main {
   val EndToEnd: Seq[(String, String)] = Seq(
     "setup_s" -> "s", "leg1_per_s" -> "items/s", "leg2_per_s" -> "items/s",
-    "leg_ratio" -> "ratio", "cycle_s" -> "s")
+    "leg_ratio" -> "ratio", "leg3_s" -> "s")
 
   val Phases = Seq("extract", "extract_1core", "resume", "mstr_join", "mstr_broadcast",
     "span_dedup", "para_dedup")
@@ -39,7 +46,8 @@ object Main {
       "pipeline.docs" -> "count", "pipeline.parse_failures" -> "count",
       "extract.keep_ratio" -> "ratio", "tableio.pending_ratio" -> "ratio",
       "mstr.json_bytes" -> "bytes", "dedup.span_removed_ratio" -> "ratio",
-      "dedup.para_removed_ratio" -> "ratio", "trace.overhead_ratio" -> "ratio")
+      "dedup.para_removed_ratio" -> "ratio", "trace.overhead_ratio" -> "ratio",
+      "error_rate" -> "share")
 
   private def num(v: Double): String =
     if (v.isNaN || v.isInfinite) "0" else java.math.BigDecimal.valueOf(v).toPlainString
@@ -58,21 +66,15 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val a = Args.parse(argv)
     Files.createDirectories(Paths.get(a.work))
-    if (a.workload == "all") {
-      // class-loading pass of the build: every workload once (traced, so
-      // the tracing classes load too), no result
-      Seq("web_extract", "mstr_graph", "corpus_dedup").foreach(w => runWorkload(new Ctx(a.copy(workload = w))))
-      sys.exit(0)
-    }
     val ctx = new Ctx(a)
     val r = runWorkload(ctx)
     ctx.stop()
+    if (a.inputsOnly) sys.exit(0)
     val errorRate = ctx.failed.toDouble / math.max(1, ctx.attempted)
     val named = (r.named ++ Seq("error_rate" -> errorRate, "setup_s" -> ctx.setupS))
       .map { case (k, v) => s""""$k":${num(v)}""" }.mkString("{", ",", "}")
-    val setups = ctx.setupAll.map(num).mkString("[", ",", "]")
     println(s"""PERFBENCH-INFO {"workload":"${a.workload}","seed":${a.seed},"named":$named,""" +
-      s""""setups_s":$setups,"box":${ctx.boxLine()}}""")
+      s""""box":${ctx.boxLine()}}""")
     ctx.failures.foreach(f => println(s"PERFBENCH-FAILURE $f"))
 
     val metrics =
@@ -81,7 +83,8 @@ object Main {
         val phase = ctx.phaseLayer.flatMap { case (p, ms) => ms.map { case (m, v) => s"$p.$m" -> v } }
         val overhead = if (ctx.overhead.isEmpty) 0.0 else ctx.overhead.max
         writeTrace(ctx)
-        metricsJson(PerLayer, (phase ++ r.layer :+ ("trace.overhead_ratio" -> overhead)).toMap)
+        metricsJson(PerLayer, (phase ++ r.layer ++ Seq("trace.overhead_ratio" -> overhead,
+          "error_rate" -> errorRate)).toMap)
       }
     val correct = ctx.failed == 0
     println(s"""PERFBENCH-RESULT {"correct":$correct,"attempted":${ctx.attempted},""" +

@@ -23,13 +23,9 @@ object WebExtract {
       "spark.sql.files.minPartitionNum" -> Splits.toString)
     def start(): Unit = {
       ctx.session(ctx.nproc, conf)
-      if (in == null) {
-        val t0 = System.nanoTime()
-        in = Inputs.web(ctx.spark, a.work, a.seed, n)
-        ctx.excludedFromSetupS = (System.nanoTime() - t0) / 1e9
-        ctx.log("inputs ready")
-      }
+      in = ctx.inputs(Inputs.web(a.work, a.seed, n))
     }
+    if (a.inputsOnly) { Inputs.web(a.work, a.seed, n); return Result.InputsOnly }
     // --corrupt-expected (self-test): a wrong golden must fail the check
     def gold = if (a.corrupt) in.base.flipped else in.base
     val tables = s"${a.work}/tables/${ctx.runId}"
@@ -57,32 +53,32 @@ object WebExtract {
     def coldCheck(r: (TableIO, Long)): Option[String] =
       if (r._2 != in.nBase) Some(s"committed ${r._2} rows, want ${in.nBase}") else tableCheck(r._1, gold)
 
-    ctx.setup(ctx.setupRuns)(start()) {
+    // phase (c)'s table: the base committed once in the set-up, and
+    // rolled back to before each resume
+    val resumeRoot = s"$tables/resume"
+    val io = new TableIO(resumeRoot)
+    var baseId = 0L
+    def both = Digest(gold.rows + in.delta.rows, gold.keys + in.delta.keys, gold.sum + in.delta.sum)
+    def resumeOp(): Long = extract(io, in.pagesDir, in.deltaDir)
+    def resumeCheck(r: Long): Option[String] =
+      if (r != in.nDelta) Some(s"resume committed $r rows, want ${in.nDelta}") else tableCheck(io, both)
+
+    ctx.setup(start()) {
       Inputs.deleteTree(coldRoot)
       ctx.checked("warm-up extract")(coldOp())(coldCheck).foreach(w => ctx.log(s"warm-up extract $w"))
+      Inputs.deleteTree(resumeRoot)
+      ctx.checked("resume base")(extract(io, in.pagesDir))(r => if (r == in.nBase) None else Some(s"base $r rows"))
+      baseId = io.snapshots().last.id
+      ctx.checked("warm-up resume")(resumeOp())(resumeCheck)
       ctx.spark.read.parquet(in.pagesDir, in.deltaDir).selectExpr("sum(length(html))").collect()
     }
     val budget = a.seconds
 
-    // phase (c)'s table: the base committed once, untimed
-    val resumeRoot = s"$tables/resume"
-    Inputs.deleteTree(resumeRoot)
-    val io = new TableIO(resumeRoot)
-    ctx.checked("resume base")(extract(io, in.pagesDir))(r => if (r == in.nBase) None else Some(s"base $r rows"))
-    val baseId = io.snapshots().last.id
-    val both = Digest(gold.rows + in.delta.rows, gold.keys + in.delta.keys, gold.sum + in.delta.sum)
-
     // phase (a), cold extract at local[nproc], takes turns with phase
-    // (c), the warm resume over base + delta from the base snapshot; (a)
-    // runs twice a round, its short parallel stages being the most
-    // exposed to bursts of CPU steal
-    val specA = ctx.spec("extract")(Inputs.deleteTree(coldRoot))(coldOp())(coldCheck)
+    // (c), the warm resume over base + delta from the base snapshot
     val Seq(legA, legC) = ctx.legs(budget * 0.55, ctx.minRounds(3))(
-      specA,
-      ctx.spec("resume")(io.rollbackTo(baseId))(extract(io, in.pagesDir, in.deltaDir)) { r =>
-        if (r != in.nDelta) Some(s"resume committed $r rows, want ${in.nDelta}") else tableCheck(io, both)
-      },
-      specA)
+      ctx.spec("extract")(Inputs.deleteTree(coldRoot))(coldOp())(coldCheck),
+      ctx.spec("resume")(io.rollbackTo(baseId))(resumeOp())(resumeCheck))
 
     val layer = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (a.trace) {
@@ -109,8 +105,7 @@ object WebExtract {
     val docsB = in.nBase / legB.median
     Result(
       Seq("leg1_per_s" -> docsA, "leg2_per_s" -> docsB,
-        "leg_ratio" -> docsA / docsB / ctx.nproc,
-        "cycle_s" -> (legA.median + legB.median + legC.median)),
+        "leg_ratio" -> docsA / docsB / ctx.nproc, "leg3_s" -> legC.median),
       Seq("extract_docs_per_s" -> docsA, "extract_1core_docs_per_s" -> docsB,
         "scaling_eff" -> docsA / docsB / ctx.nproc, "resume_s" -> legC.median,
         "input_html_mb" -> in.htmlBytes / 1e6),
