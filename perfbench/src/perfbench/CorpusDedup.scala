@@ -42,7 +42,7 @@ object CorpusDedup {
     }
     // exact dedup is timed, not traced: one aggregation over the same
     // scan, which the span_dedup and para_dedup phases already break down
-    val Seq(legS, legP, legE) = ctx.legs(a.seconds, ctx.minRounds(3))(
+    val Seq(legS, legP, legE) = ctx.legs(a.seconds, ctx.minRounds(4), ctx.warmRounds(2))(
       ctx.spec("span_dedup")(())(spanOp())(oracle(in.span)),
       ctx.spec("para_dedup")(())(paraOp())(oracle(in.para)),
       ctx.spec("exact_dedup", traced = false)(())(exactOp())(oracle(in.exact)))

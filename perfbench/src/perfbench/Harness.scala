@@ -144,17 +144,25 @@ final class Ctx(val args: Args) {
 
   /** The set-up: from JVM start until the first timed rep is ready.
     * `start` starts the session and loads the inputs (through
-    * `inputs`), `warm` runs the warm-up reps and warms the page cache.
+    * `inputs`), `warm` runs the first, checked rep of each op and warms
+    * the page cache. The set-up ends after the warm-up rounds of the
+    * first `legs`.
     */
   def setup(start: => Unit)(warm: => Unit): Unit = {
     start
     warm
+  }
+
+  private def endSetup(): Unit = if (_setupS == 0.0) {
     _setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3 - excludedS
     log(f"setup: ${_setupS}%.3f s")
   }
 
   /** Rounds of reps at least: `n`, or one at toy size. */
   def minRounds(n: Int): Int = if (args.toy) 1 else n
+
+  /** Untimed warm-up rounds before the timed ones: `n`, none at toy size. */
+  def warmRounds(n: Int): Int = if (args.toy) 0 else n
 
   // ---- timed legs ----
   private val timedLegs = ArrayBuffer.empty[Leg]
@@ -173,11 +181,15 @@ final class Ctx(val args: Args) {
 
   /** Time legs together: their reps take turns, so a burst of machine
     * noise lands on every leg alike, until `minRounds` rounds are done
-    * and `budgetS` seconds have passed. In a traced run one more rep of
-    * each traced leg follows with the listeners attached; it is never
-    * part of the walls.
+    * and `budgetS` seconds have passed. `warmRounds` untimed, checked
+    * rounds come first, while the JIT still compiles the ops' hot paths;
+    * on the first call they are part of the set-up. In a traced run one
+    * more rep of each traced leg follows with the listeners attached; it
+    * is never part of the walls.
     */
-  def legs(budgetS: Double, minRounds: Int, maxRounds: Int = 60)(specs: LegSpec*): Seq[Leg] = {
+  def legs(budgetS: Double, minRounds: Int, warmRounds: Int, maxRounds: Int = 60)(specs: LegSpec*): Seq[Leg] = {
+    (0 until warmRounds).foreach(_ => specs.foreach(_.rep()))
+    endSetup()
     val walls = specs.map(s => s -> ArrayBuffer.empty[Double]).toMap
     val t0 = System.nanoTime()
     val steal0 = box.stealTicks()

@@ -80,7 +80,7 @@ object MstrGraph {
     }
     // the validation leg is not traced: its plan is the broadcast
     // plan's, which the mstr_broadcast phase traces
-    val Seq(legJ, legB, legV) = ctx.legs(a.seconds, ctx.minRounds(3))(
+    val Seq(legJ, legB, legV) = ctx.legs(a.seconds, ctx.minRounds(4), ctx.warmRounds(1))(
       ctx.spec("mstr_join")(())(joinOp())(against(expected)),
       ctx.spec("mstr_broadcast")(())(broadcastOp())(against(expected)),
       ctx.spec("mstr_validate", traced = false)(())(validateOp())(validateCheck))

@@ -76,7 +76,7 @@ object WebExtract {
 
     // phase (a), cold extract at local[nproc], takes turns with phase
     // (c), the warm resume over base + delta from the base snapshot
-    val Seq(legA, legC) = ctx.legs(budget * 0.55, ctx.minRounds(3))(
+    val Seq(legA, legC) = ctx.legs(budget * 0.55, ctx.minRounds(4), ctx.warmRounds(2))(
       ctx.spec("extract")(Inputs.deleteTree(coldRoot))(coldOp())(coldCheck),
       ctx.spec("resume")(io.rollbackTo(baseId))(resumeOp())(resumeCheck))
 
@@ -97,7 +97,7 @@ object WebExtract {
 
     // phase (b): the same cold job at local[1], same split layout
     ctx.session(1, conf)
-    val Seq(legB) = ctx.legs(budget * 0.45, ctx.minRounds(3))(
+    val Seq(legB) = ctx.legs(budget * 0.45, ctx.minRounds(3), ctx.warmRounds(0))(
       ctx.spec("extract_1core")(Inputs.deleteTree(coldRoot))(coldOp())(coldCheck))
     ctx.stop()
 
