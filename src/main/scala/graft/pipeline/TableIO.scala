@@ -1,15 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import java.util.Base64
 
 /** Iceberg-shaped table facade over Parquet + a JSON checkpoint
   * manifest, giving snapshot/resume semantics in this sandbox (no
   * Iceberg jars on the classpath — SURVEY.md §7.1.8). The interface is
   * what the production job would call against Iceberg
-  * (`readTable` / `appendSnapshot` / `committedKeys`), so the swap is a
+  * (`readTable` / `appendSnapshot` / `pending`), so the swap is a
   * catalog config change, not a rewrite.
   *
   * Resume contract (north rule "resumable from snapshot + checkpoint
@@ -22,15 +26,6 @@ import java.nio.charset.StandardCharsets
 final class TableIO(val root: String) {
   import TableIO.Snapshot
   private val manifestPath = Paths.get(root, "manifest.json")
-
-  /** Base64 of the READ-BACK schema json of a just-written snapshot —
-    * the exact schema inference would produce for those files, recorded
-    * in the manifest so [[readTable]] can skip the per-relation
-    * inference job (schema evolution across snapshots falls back).
-    */
-  private def schema64Of(written: DataFrame): String =
-    java.util.Base64.getEncoder.encodeToString(
-      written.schema.json.getBytes(StandardCharsets.UTF_8))
 
   /** One manifest line; `schema64` is last so the fixed-order regex
     * parse of the leading fields is unaffected (legacy lines simply
@@ -47,36 +42,26 @@ final class TableIO(val root: String) {
     */
   private def historyDir = Paths.get(root, "manifests")
 
-  private def historyIds(): Seq[Long] = {
-    if (!Files.exists(historyDir)) return Nil
-    val s = Files.list(historyDir)
-    try s.toArray.toSeq.map(_.toString).flatMap(p =>
-      """manifest-(\d+)\.json""".r.findFirstMatchIn(p).map(_.group(1).toLong))
-    finally s.close()
-  }
-
-  /** Snapshot ids already claimed ON DISK — including directories whose
-    * commit never completed (crashed or failed write). Counting them
-    * keeps a same-writer retry moving forward past its own orphaned
-    * reservation instead of colliding with it forever.
-    */
-  private def reservedDirIds(): Seq[Long] = {
-    val rootPath = Paths.get(root)
-    if (!Files.exists(rootPath)) return Nil
-    val s = Files.list(rootPath)
-    try s.toArray.toSeq.map(_.toString).flatMap(p =>
-      """snap-(\d+)$""".r.findFirstMatchIn(p).map(_.group(1).toLong))
-    finally s.close()
-  }
+  /** The ids that `pattern` captures from the entry names under `dir`. */
+  private def idsIn(dir: java.nio.file.Path, pattern: scala.util.matching.Regex): Seq[Long] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.toArray.toSeq.flatMap(p => pattern.findFirstMatchIn(p.toString).map(_.group(1).toLong))
+      finally s.close()
+    }
 
   /** Ids are unique across the WHOLE history (incl. branches abandoned
     * by a rollback and orphaned reservations from failed writes), never
     * reused — a new commit after a rollback or a crash can't collide
-    * with an existing snapshot dir.
+    * with an existing snapshot dir. The snapshot dirs on disk count too,
+    * including those whose commit never completed (crashed or failed
+    * write), so a same-writer retry moves past its own orphaned
+    * reservation instead of colliding with it forever.
     */
   private def nextId(): Long =
-    (snapshots().map(_.id) ++ historyIds() ++ reservedDirIds())
-      .maxOption.getOrElse(0L) + 1
+    (snapshots().map(_.id) ++ idsIn(historyDir, """manifest-(\d+)\.json""".r) ++
+      idsIn(Paths.get(root), """snap-(\d+)$""".r)).maxOption.getOrElse(0L) + 1
 
   /** Reserve snapshot `id` by creating its data directory — an atomic
     * filesystem operation, so of two writers racing for the same id
@@ -173,21 +158,17 @@ final class TableIO(val root: String) {
         val snaps = snapshots()
         if (snaps.isEmpty) None
         else {
-          // commits record the written files' read-back schema in the
-          // manifest (Iceberg-style table metadata, guide §6): when
-          // every visible snapshot agrees on it, the read skips parquet
-          // schema inference — which costs a Spark job per relation
-          // resolution. Any legacy or disagreeing snapshot falls back
-          // to plain inference.
+          // commits record the schema inference would produce for the
+          // written files in the manifest (Iceberg-style table metadata,
+          // guide §6): when every visible snapshot agrees on it, the read
+          // skips parquet schema inference — which costs a Spark job per
+          // relation resolution. Any legacy or disagreeing snapshot falls
+          // back to plain inference.
           val paths = snaps.map(s => s"$root/${s.dir}")
-          val schema64s = snaps.map(_.schema64).distinct
-          val df = schema64s match {
+          val df = snaps.map(_.schema64).distinct match {
             case Seq(s64) if s64.nonEmpty =>
-              val json = new String(java.util.Base64.getDecoder.decode(s64),
-                StandardCharsets.UTF_8)
-              spark.read
-                .schema(org.apache.spark.sql.types.DataType.fromJson(json)
-                  .asInstanceOf[org.apache.spark.sql.types.StructType])
+              val json = new String(Base64.getDecoder.decode(s64), StandardCharsets.UTF_8)
+              spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType])
                 .parquet(paths: _*)
             case _ => spark.read.parquet(paths: _*)
           }
@@ -197,29 +178,68 @@ final class TableIO(val root: String) {
     }
   }
 
+  /** Reserve the next snapshot dir and write `df` into it with ONE
+    * Spark job, nothing read back: the row count rides the write as an
+    * observed metric, exact under task retry and speculation (an
+    * accumulator on the write's result stage, merged once per partition;
+    * attempts that fail or lose the output commit are never merged).
+    * The recorded schema is `df`'s made nullable — what parquet
+    * inference returns for these files, as the same JSON text — so
+    * [[readTable]] skips the per-relation inference job.
+    */
+  private def writeSnapshot(df: DataFrame): Snapshot = {
+    val id = nextId()
+    val dir = reserveDir(id)
+    // Append, NOT Overwrite: Overwrite DELETES the target first, and the
+    // reserved dir IS the reservation marker — deleting it mid-write lets
+    // a concurrent writer's nextId() re-reserve the same id and clobber
+    // this write's _temporary staging (seen as a chmod-on-missing-path
+    // task failure). reserveDir just created the dir empty, so Append
+    // lands exactly this write's files.
+    val obs = Observation(s"tableio-$dir-${java.util.UUID.randomUUID()}")
+    df.observe(obs, count(lit(1))).write.mode(SaveMode.Append).parquet(s"$root/$dir")
+    // a listener-bus event posts the metric: bounded, so a lost event
+    // fails the commit loudly instead of hanging it
+    val rows = try Await.result(obs.future, 5.minutes).getLong(0)
+    catch { case _: TimeoutException => throw new IllegalStateException(
+      s"row count of $root/$dir never arrived; the snapshot is not committed") }
+    val schema = TableIO.asNullable(df.schema).json.getBytes(StandardCharsets.UTF_8)
+    Snapshot(id, dir, rows, Base64.getEncoder.encodeToString(schema))
+  }
+
   /** Append `df` as a new snapshot; manifest write is atomic (tmp +
     * move) so a crash mid-commit leaves the previous snapshot intact.
     */
   def appendSnapshot(df: DataFrame): Snapshot = {
     val base = manifestBase()
     val prev = snapshots()
-    val id = nextId()
-    val dir = reserveDir(id)
-    // Append, NOT Overwrite: Overwrite DELETES the target first, and the
-    // reserved dir IS the reservation marker — destroying it mid-write
-    // opens a window where a concurrent writer's nextId() no longer sees
-    // the claim, re-reserves the same id, and the two writers clobber
-    // each other's _temporary staging (observed as a chmod-on-missing-
-    // path task failure). reserveDir guarantees the dir was just created
-    // empty, so Append lands exactly this write's files.
-    df.write.mode(SaveMode.Append).parquet(s"$root/$dir")
-    val written = df.sparkSession.read.parquet(s"$root/$dir")
-    val rows = written.count()
-    val snap = Snapshot(id, dir, rows, schema64Of(written))
+    val snap = writeSnapshot(df)
     val all = (prev :+ snap).map(manifestLine).mkString("", "\n", "\n")
-    commitManifest(all, id, base)
+    commitManifest(all, snap.id, base)
     snap
   }
+
+  /** True iff [[pending]] over `input` has any row — answered from a
+    * KEYS-ONLY anti-join (both scans prune to the key column), never
+    * re-attaching the payload: the no-op resume's common probe carries
+    * half of [[pending]]'s plan (r6, guide §1.2 — don't build what the
+    * steady path throws away). No `.distinct()` on either side: an
+    * anti-join's emptiness never needs deduped inputs, and resume keys
+    * are unique per side anyway, so each distinct was a pure extra
+    * exchange + aggregation (guide §2.4 "a distinct on data that is
+    * already unique"). Equivalence with `pending(...).isEmpty`: a
+    * null-key input row is always pending there, and the anti join
+    * here KEEPS null keys (a null key equals nothing, so it never
+    * matches a committed row), so both sides agree on emptiness.
+    */
+  def hasPending(input: DataFrame, keyCol: String): Boolean =
+    readTable(input.sparkSession) match {
+      case None => !input.select(col(keyCol)).isEmpty
+      case Some(committed) =>
+        !input.select(col(keyCol))
+          .join(committed.select(col(keyCol)), Seq(keyCol), "left_anti")
+          .isEmpty
+    }
 
   /** Input rows not yet present in the committed table, by key column.
     *
@@ -247,28 +267,6 @@ final class TableIO(val root: String) {
     * [[graft.ops.CorpusOps.corpusEndToEnd]] stage-E shape, via
     * [[graft.ops.ExtractOps.docUrlCol]]).
     */
-  /** True iff [[pending]] over `input` has any row — answered from a
-    * KEYS-ONLY anti-join (both scans prune to the key column), never
-    * re-attaching the payload: the no-op resume's common probe carries
-    * half of [[pending]]'s plan (r6, guide §1.2 — don't build what the
-    * steady path throws away). No `.distinct()` on either side: an
-    * anti-join's emptiness never needs deduped inputs, and resume keys
-    * are unique per side anyway, so each distinct was a pure extra
-    * exchange + aggregation (guide §2.4 "a distinct on data that is
-    * already unique"). Equivalence with `pending(...).isEmpty`: a
-    * null-key input row is always pending there, and the anti join
-    * here KEEPS null keys (a null key equals nothing, so it never
-    * matches a committed row), so both sides agree on emptiness.
-    */
-  def hasPending(input: DataFrame, keyCol: String): Boolean =
-    readTable(input.sparkSession) match {
-      case None => !input.select(col(keyCol)).isEmpty
-      case Some(committed) =>
-        !input.select(col(keyCol))
-          .join(committed.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .isEmpty
-    }
-
   def pending(input: DataFrame, keyCol: String): DataFrame =
     readTable(input.sparkSession) match {
       case None => input
@@ -306,16 +304,9 @@ final class TableIO(val root: String) {
     */
   def replaceWith(df: DataFrame): Snapshot = {
     val base = manifestBase()
-    val id = nextId()
-    val dir = reserveDir(id)
-    // materialize BEFORE truncating the manifest: df may read prior
-    // snapshots. Append, not Overwrite — see appendSnapshot: the
-    // reserved dir is the reservation marker and must never be deleted.
-    df.write.mode(SaveMode.Append).parquet(s"$root/$dir")
-    val written = df.sparkSession.read.parquet(s"$root/$dir")
-    val rows = written.count()
-    val snap = Snapshot(id, dir, rows, schema64Of(written))
-    commitManifest(manifestLine(snap) + "\n", id, base)
+    // materialize BEFORE truncating the manifest: df may read prior snapshots
+    val snap = writeSnapshot(df)
+    commitManifest(manifestLine(snap) + "\n", snap.id, base)
     snap
   }
 
@@ -370,6 +361,16 @@ object TableIO {
   final case class Snapshot(id: Long, dir: String, rows: Long,
                             schema64: String = "")
 
+  /** `t` with every struct field, array element and map value nullable —
+    * parquet schema inference's view of data written with type `t`.
+    */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(asNullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(asNullable(k), asNullable(v), valueContainsNull = true)
+    case other => other
+  }
+
   /** Resumable run: extract + commit only pages whose url is not yet in
     * the output table. Returns the number of newly committed rows.
     * [[TableIO.pending]]'s two-phase shape keeps page bodies out of the
@@ -380,8 +381,6 @@ object TableIO {
     val spark = pages.sparkSession
     import spark.implicits._
     val todo = io.pending(pages.toDF(), "url").as[PageRow]
-    val extracted = ExtractPipeline.run(todo, charset, numPartitions)
-    val snap = io.appendSnapshot(extracted.toDF())
-    snap.rows
+    io.appendSnapshot(ExtractPipeline.run(todo, charset, numPartitions).toDF()).rows
   }
 }

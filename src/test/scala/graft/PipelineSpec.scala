@@ -403,6 +403,79 @@ class PipelineSpec extends AnyFunSuite {
       Map("u1" -> 1, "u3" -> 3))
   }
 
+  /** The manifest's record of `snap` must equal what reading its files
+    * back gives: the row count, and the inferred schema as the same JSON
+    * text (so tables mixing old and new commits keep skipping inference).
+    */
+  private def assertCommitMetadata(io: TableIO, snap: TableIO.Snapshot): Unit = {
+    val recorded = io.snapshots().find(_.id == snap.id).get
+    val back = spark.read.parquet(s"${io.root}/${recorded.dir}")
+    assert(recorded.rows == back.count(), s"rows of ${recorded.dir}")
+    val json = new String(java.util.Base64.getDecoder.decode(recorded.schema64), "UTF-8")
+    assert(org.apache.spark.sql.types.DataType.fromJson(json).json == back.schema.json,
+      s"schema of ${recorded.dir}")
+  }
+
+  test("commit metadata: manifest rows and schema64 equal the written files read back") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    def fresh(tag: String) =
+      new TableIO(java.nio.file.Files.createTempDirectory(s"graft-meta-$tag").toString)
+
+    val docs = fresh("docs")
+    TableIO.resumeExtract(docs, spark.createDataset(WebCorpus.generate(12).map(_.page)))
+    assertCommitMetadata(docs, docs.snapshots().last)
+
+    val nested = fresh("nested")
+    assertCommitMetadata(nested, nested.appendSnapshot(Seq(
+      CommitNested("a", Some("x"), Seq(1, 2), Map("k" -> Seq(1L)), CommitInner(Some(1), Seq("t"))),
+      CommitNested("b", None, Nil, Map.empty, CommitInner(None, Nil))).toDF()))
+
+    val typed = fresh("typed")
+    assertCommitMetadata(typed, typed.appendSnapshot(Seq(
+      CommitTyped("a", new java.sql.Timestamp(0L), Array[Byte](1, 2), BigDecimal("1.5"), 3, 4),
+      CommitTyped("b", null, null, null, 5, 6)).toDF()))
+
+    val merged = fresh("merged")
+    merged.appendSnapshot(Seq(("u1", 1), ("u2", 2)).toDF("key", "v"))
+    assertCommitMetadata(merged, merged.mergeByKey(Seq(("u2", 20), ("u3", 30)).toDF("key", "v"), "key"))
+
+    val empty = fresh("empty")
+    val none = Await.result(Future(empty.appendSnapshot(Seq.empty[(String, Int)].toDF("key", "v"))),
+      120.seconds)
+    assert(none.rows == 0)
+    assertCommitMetadata(empty, none)
+  }
+
+  test("a commit runs exactly one Spark job: the write") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // counts only this thread's jobs, by job group, so nothing another
+    // suite left running can leak into the figure
+    def jobsOf(body: => Unit): Int = {
+      val group = s"commit-jobs-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "commit job count")
+      try { body; org.apache.spark.TestListenerBus.drain(sc) }
+      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      jobs.get
+    }
+    val pages = spark.createDataset(WebCorpus.generate(20).map(_.page))
+    val docs = new TableIO(java.nio.file.Files.createTempDirectory("graft-jobs-docs").toString)
+    assert(jobsOf(TableIO.resumeExtract(docs, pages)) == 1)
+    val kv = new TableIO(java.nio.file.Files.createTempDirectory("graft-jobs-kv").toString)
+    assert(jobsOf(kv.appendSnapshot(Seq(("u1", 1), ("u2", 2)).toDF("key", "v"))) == 1)
+  }
+
   test("entry flagship returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
@@ -426,3 +499,13 @@ class PipelineSpec extends AnyFunSuite {
 object WriterRaceGate {
   val gate = new java.util.concurrent.CountDownLatch(1)
 }
+
+/** Column shapes for the commit-metadata spec: Option, array, map and
+  * nested-struct columns, then timestamp, binary, decimal, short and
+  * byte columns.
+  */
+final case class CommitInner(a: Option[Int], tags: Seq[String])
+final case class CommitNested(key: String, opt: Option[String], arr: Seq[Int],
+                              m: Map[String, Seq[Long]], inner: CommitInner)
+final case class CommitTyped(key: String, ts: java.sql.Timestamp, bin: Array[Byte],
+                             dec: BigDecimal, sh: Short, by: Byte)
