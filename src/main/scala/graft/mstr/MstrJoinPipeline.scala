@@ -14,29 +14,35 @@ import scala.reflect.ClassTag
   * whole content corpus, a bounded-documentation-export assumption).
   *
   * Shape: BOTH big dimensions stay distributed. The content pages are
-  * laid out by basename ONCE (one corpus-wide `reduceByKey` under a
-  * pinned HashPartitioner, which also applies the greatest-url
+  * laid out by basename ONCE (one corpus-wide `reduceByKey` under the
+  * run's one [[SaltedPartitioner]], which also applies the greatest-url
   * duplicate rule uniformly at any duplication cardinality), and every
-  * staged pass is a co-partitioned `zipPartitions` join between that
+  * staged pass is ONE co-partitioned `zipPartitions` join between that
   * layout and the stage's REQUEST table — itself a distributed RDD
-  * derived from the previous stage's output, shuffled at entity scale
-  * into the same partitioner. Matched pages are decoded and parsed
-  * once per stage; requests NEVER transit the driver (the round-3
-  * shape collected + re-broadcast every stage's request list, a
-  * driver-serial term measured at ≈60 s per 50k reports — linear in
-  * entities but serial, the one dimension that didn't scale with
-  * executors). Only the 9 locale index files (small dims by
-  * construction) and the final [[ReportJsonRow]]s ever reach the
-  * driver.
+  * derived from the previous stage's output, shuffled ONCE at entity
+  * scale into the same partitioner. Hot files' salted page replicas
+  * live in the same partitions (planning-time ones in the layout's own
+  * shuffle, measured ones in a partitioner-aware union), so skew
+  * routing adds no leg or task to a pass. Matched pages are
+  * decoded and parsed once per stage; requests NEVER transit the
+  * driver (the round-3 shape collected + re-broadcast every stage's
+  * request list, a driver-serial term measured at ≈60 s per 50k
+  * reports — linear in entities but serial, the one dimension that
+  * didn't scale with executors). Only the 9 locale index files (small
+  * dims by construction) and the final [[ReportJsonRow]]s ever reach
+  * the driver.
   *
-  * The whole run costs 3 + recursion-depth Spark jobs: one bounded
-  * index collect, one O(1) aggregate probe per staged pass (the probe
-  * doubles as the materializing action for the stage cache; the pages
-  * shuffle rides the first of them and is reused by all later stages),
-  * one assembly. Composite-metric recursion (A3) is an iterative stage
-  * loop carrying the visited PATH per branch, exactly the engine's
-  * per-branch `visited.copy()` semantics. Fragments are assembled into
-  * the nested tree per report in one `groupBy(report_id)` pass.
+  * The whole run costs 4 + recursion-depth Spark jobs: one bounded
+  * index collect, one O(1) aggregate probe per staged pass (R, D and
+  * each metric level; the probe doubles as the materializing action
+  * for the stage cache; the pages shuffle rides the first of them and
+  * is reused by all later stages), one assembly. Each job carries a
+  * `mstr join: <pass>` job description, and the caller's description
+  * is restored afterwards. Composite-metric recursion (A3) is an
+  * iterative stage loop carrying the visited PATH per branch, exactly
+  * the engine's per-branch `visited.copy()` semantics. Fragments are
+  * assembled into the nested tree per report in one
+  * `groupBy(report_id)` pass.
   *
   * Missing-file semantics match the engine: report/dataset/metric
   * requests whose file is absent simply drop out of the join (engine
@@ -52,6 +58,18 @@ import scala.reflect.ClassTag
   * order-invariant (partition-invariance is asserted in MstrJoinSpec).
   */
 object MstrJoinPipeline {
+
+  /** Hot-file request routing: `Adaptive` salts the files either
+    * detector finds hot (planning-time link counts, probe-measured
+    * request counts), `StaticOnly` only the planning-time ones, `Off`
+    * none. Output is identical under all three (the A/B baselines).
+    */
+  private[graft] sealed trait Routing
+  private[graft] object Routing {
+    case object Adaptive extends Routing
+    case object StaticOnly extends Routing
+    case object Off extends Routing
+  }
 
   // ---- stage records (all non-recursive → Catalyst-encodable) ----
 
@@ -381,9 +399,10 @@ object MstrJoinPipeline {
     * (stage F's stats accumulate a little KFact across metric-dominated
     * levels). The request frag's `report_id` slot carries the target
     * file, so this rides the probe's existing pass with no payload
-    * deserialization and no extra job. `trackFiles=false` (the measured
-    * detector's disable levers) skips the sketches entirely so an A/B
-    * "before" leg carries none of the detector's cost.
+    * deserialization and no extra job. `trackFiles=false` (a
+    * [[Routing]] without the measured detector) skips the sketches
+    * entirely so an A/B "before" leg carries none of the detector's
+    * cost.
     */
   final class ProbeStats(val cap: Int, val trackFiles: Boolean = true)
       extends Serializable {
@@ -455,6 +474,8 @@ object MstrJoinPipeline {
     * count warrants). Request-side stage shuffles are co-partitioned
     * with the pages layout and take its width (= the input scan's
     * parallelism). The pages scan shuffles exactly once, up front.
+    * `routing` picks the hot-file detectors ([[Routing]]; adaptive by
+    * default).
     *
     * The returned Dataset is PERSISTED (run() materializes eagerly so
     * all internal jobs execute under the scoped conf); a long-lived
@@ -464,12 +485,13 @@ object MstrJoinPipeline {
   def run(spark: SparkSession, pagesDs: Dataset[PageRow],
           lang: String = "pt-BR",
           internalShufflePartitions: Int = 4,
-          select: Option[LinkIndex => Seq[LinkResult]] = None): Dataset[ReportJsonRow] =
+          select: Option[LinkIndex => Seq[LinkResult]] = None,
+          routing: Routing = Routing.Adaptive): Dataset[ReportJsonRow] =
     // the resume key is projected away BEFORE the single materializing
     // persist (projecting after it would cache the full JSON payload
     // twice and scan it one extra time per run)
     runProjected(spark, pagesDs, lang, internalShufflePartitions,
-      idx => defaultWork(idx, select))(
+      idx => defaultWork(idx, select), routing)(
       k => ReportJsonRow(k.report_id, k.name, k.file_path, k.json))(
       scala.reflect.classTag[ReportJsonRow],
       org.apache.spark.sql.Encoders.product[ReportJsonRow])
@@ -579,7 +601,8 @@ object MstrJoinPipeline {
   def runProjected[T: ClassTag](spark: SparkSession, pagesDs: Dataset[PageRow],
                       lang: String,
                       internalShufflePartitions: Int,
-                      workOf: LinkIndex => Seq[ReportReq])(
+                      workOf: LinkIndex => Seq[ReportReq],
+                      routing: Routing = Routing.Adaptive)(
                       project: KeyedReportJsonRow => T)(
                       implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
     val indexFiles = indexFileSet(MstrLocale.forLang(lang))
@@ -587,9 +610,13 @@ object MstrJoinPipeline {
     // the pages Dataset-to-RDD lineage is re-executed, and the staged
     // passes shuffle outside Catalyst, so there is nothing for it to
     // re-plan — scope it off for the whole run (shuffle WIDTH is left
-    // untouched)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // untouched). An unset key stays unset afterwards (getAll holds
+    // only explicit settings; getOption would report the default).
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val prevAqe = spark.conf.getAll.get(aqeKey)
+    val sc = spark.sparkContext
+    val callerDesc = sc.getLocalProperty("spark.job.description")
+    spark.conf.set(aqeKey, "false")
     try {
       // ONE pruned conversion of the pages table feeds everything: the
       // index collect below and the basename layout (url + html only —
@@ -603,6 +630,7 @@ object MstrJoinPipeline {
       // reaches the driver: non-index html drops before the exchange,
       // duplicates resolve map-side by the greatest-url rule (the
       // corpusFromPages rule), ≤10 rows return
+      pass(spark, "indexes")
       val idxRows = urlHtml
         .filter { case (url, _) => indexFiles.contains(fileName(url)) }
         .map { case (url, html) => (fileName(url), (url, html)) }
@@ -612,9 +640,21 @@ object MstrJoinPipeline {
         idxRows.iterator.map { case (f, (_, h)) => f -> TextOps.decodeLatin1(h) }.toMap
 
       runScoped(spark, urlHtml, lang, workOf, indexHtml,
-        internalShufflePartitions)(project)(implicitly, enc)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        internalShufflePartitions, routing)(project)(implicitly, enc)
+    } finally {
+      prevAqe match {
+        case Some(v) => spark.conf.set(aqeKey, v)
+        case None    => spark.conf.unset(aqeKey)
+      }
+      sc.setJobDescription(callerDesc)
+    }
   }
+
+  /** Names the jobs of one pass; [[runProjected]] restores the
+    * caller's description when the run ends.
+    */
+  private def pass(spark: SparkSession, name: String): Unit =
+    spark.sparkContext.setJobDescription(s"mstr join: $name")
 
   private def indexFileSet(loc: MstrLocale): Set[String] =
     Set(loc.documento, loc.relatorio, loc.cuboInteligente,
@@ -626,19 +666,12 @@ object MstrJoinPipeline {
                            lang: String,
                            workOf: LinkIndex => Seq[ReportReq],
                            indexHtml: Map[String, String],
-                           internalShufflePartitions: Int)(
+                           internalShufflePartitions: Int,
+                           routing: Routing)(
                            project: KeyedReportJsonRow => T)(
                            implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
     val loc = MstrLocale.forLang(lang)
     val indexFiles: Set[String] = indexFileSet(loc)
-
-    // driver-side stage timing, enabled by GRAFT_JOIN_PROF=1
-    val profT0 = System.nanoTime()
-    val prof: String => Unit =
-      if (sys.env.get("GRAFT_JOIN_PROF").contains("1"))
-        tag => System.err.println(
-          f"JOINPROF $tag at ${(System.nanoTime() - profT0) / 1e9}%.2f s")
-      else _ => ()
 
     // the driver parses the indexes once for PLANNING (the documento
     // work list + selection); executors get the RAW index html instead:
@@ -653,7 +686,6 @@ object MstrJoinPipeline {
     val handle = new IndexHandle(indexHtml, lang)
     val indexes = handle.indexes
     val bIdx = spark.sparkContext.broadcast(handle)
-    prof("indexes-built")
 
     // The staged passes run on the RDD layer deliberately: every stage
     // is per-partition imperative logic over OPAQUE java-serialized
@@ -663,25 +695,13 @@ object MstrJoinPipeline {
     // per internal job). Dataset stays the boundary type: pages in,
     // ReportJsonRow out.
     //
-    // The basename layout is THE corpus-wide shuffle of the run: pages
-    // keyed by file under one pinned partitioner, duplicates resolved
-    // by greatest url in the same reduce (map-side combine — a corpus
-    // with unique basenames grows no rows). Decode is deferred to match
-    // time, so the cached rows are raw bytes and only pages some stage
-    // actually requests ever pay Latin-1 decode + parse. Every stage
-    // reuses this one layout; nothing page-sized moves again.
+    // ONE partitioner serves the whole run: the salted partitioner
+    // places a plain key exactly where HashPartitioner would and salt s
+    // of file f at (hash(f) + s) mod width, so the pages layout, every
+    // hot replica layout and every request table agree on placement.
     val sl = StorageLevel.MEMORY_AND_DISK
     val width = math.max(urlHtml.getNumPartitions, 1)
-    val part = new org.apache.spark.HashPartitioner(width)
-    // the salted leg's partitioner: places salt s of file f at
-    // (hash(f) + s) mod width — k distinct partitions by construction
-    val saltedPart = new SaltedPartitioner(width)
-    val pagesByFile: RDD[(String, (String, Array[Byte]))] = urlHtml
-      .filter { case (url, _) => !indexFiles.contains(fileName(url)) }
-      .map { case (url, html) => (fileName(url), (url, html)) }
-      .reduceByKey(part, (a: (String, Array[Byte]), b: (String, Array[Byte])) =>
-        if (a._1 >= b._1) a else b)
-      .persist(sl)
+    val part = new SaltedPartitioner(width)
 
     // ---- stage R work list (also the hot-file planning input) ----
     // one request PER INDEX LINK (`workOf` applies the CLI's
@@ -703,12 +723,12 @@ object MstrJoinPipeline {
     // datasets exported into one file: measured 106 s wall / 69 s max
     // task vs 22 s wall on the even layout, 20k reports @ 8 cores —
     // MstrHotSkewBench). Files above a fair-share threshold get their
-    // request lists split across `width` salted keys, with the (already
-    // greatest-url-deduped) page row replicated to each salt — so the
-    // page parse runs once per salt in parallel and the request work
-    // divides by `width` instead of serializing. The salted leg only
-    // exists when hot files exist; the plan (and job count) is
-    // byte-identical to the unsalted shape otherwise.
+    // request lists split across up to `width` salted keys, with the
+    // (already greatest-url-deduped) page row replicated to each salt —
+    // so the page parse runs once per salt in parallel and the request
+    // work divides by the salt count instead of serializing. Replicas
+    // share the pages layout's partitions, so a routed pass keeps the
+    // unrouted pass's shuffle and task count.
     //
     // Hot files surface through TWO detectors, neither costing a job:
     //  - PLANNING time (here): a file's future request count proxied by
@@ -725,12 +745,9 @@ object MstrJoinPipeline {
     //    the key slot, the probe heavy-hitter-counts them per file
     //    (ProbeStats), and the consuming stage salts the measured-hot
     //    files exactly like the planning-time ones.
-    // GRAFT_JOIN_NOSALT=1 disables all routing; GRAFT_JOIN_STATIC_HOT=1
-    // disables only the measured detector (the A/B levers).
-    val noSalt = sys.env.get("GRAFT_JOIN_NOSALT").contains("1")
-    val staticHotOnly = sys.env.get("GRAFT_JOIN_STATIC_HOT").contains("1")
+    val trackHot = routing == Routing.Adaptive
     val hotFiles: Map[String, Int] =
-      if (noSalt) Map.empty
+      if (routing == Routing.Off) Map.empty
       else hotFilesOf(
         Seq(indexes.documento, indexes.relatorio, indexes.cuboInteligente,
           indexes.atalho, indexes.metrica, indexes.fato, indexes.funcao,
@@ -738,126 +755,111 @@ object MstrJoinPipeline {
           .map(_.links.iterator.map(_.file)) :+
           reportReqs.iterator.map(_.file),
         width)
+    lastRouting.set(RoutingTrace(hotFiles.keySet, Set.empty, 0))
+
+    // The basename layout is THE corpus-wide shuffle of the run: pages
+    // keyed by file, duplicates resolved by greatest url in the same
+    // reduce (map-side combine). The planning-time hot files' replicas
+    // ride this shuffle, each salted key reduced over the same
+    // duplicates. Decode is deferred to match time, so only pages some
+    // stage requests ever pay Latin-1 decode + parse. Every stage
+    // reuses this layout; nothing page-sized moves again.
+    val pagesByFile: RDD[(String, (String, Array[Byte]))] = urlHtml
+      .filter { case (url, _) => !indexFiles.contains(fileName(url)) }
+      .flatMap { case (url, html) =>
+        val f = fileName(url)
+        Iterator.single((f, (url, html))) ++
+          (0 until hotFiles.getOrElse(f, 0)).iterator.map(s => (saltKey(f, s), (url, html)))
+      }
+      .reduceByKey(part, (a: (String, Array[Byte]), b: (String, Array[Byte])) =>
+        if (a._1 >= b._1) a else b)
+      .persist(sl)
+
     /** Measured-hot (file → salt count) for a stage consuming
-      * `reqKinds` requests from a probed predecessor; empty under
-      * either disable lever.
+      * `reqKinds` requests from a probed predecessor.
       */
     def measuredHot(stats: ProbeStats, reqKinds: Int*): Map[String, Int] =
-      if (noSalt || staticHotOnly) Map.empty
+      if (!trackHot) Map.empty
       else {
         val hot = stats.hotFiles(reqKinds, width)
-        if (hot.nonEmpty) lastMeasuredHot.updateAndGet(_ ++ hot.keySet)
+        if (hot.nonEmpty)
+          lastRouting.updateAndGet(t => t.copy(measuredHot = t.measuredHot ++ hot.keySet))
         hot
       }
-    // hot pages replicated once per ADAPTIVE salt under the salted
-    // partitioner; tiny — Σ per-file salt counts rows. Layouts cache by
-    // hot-file KEY SET with a per-file high-water salt count: salts
-    // are 0..k-1 ([[saltKey]]), so a layout replicated at count k
-    // contains every key a stage needing that file at ≤ k emits — stages
-    // whose measured estimates jitter (k 4 vs 5 on the same file) share
-    // one persisted layout instead of re-filtering and re-shuffling the
-    // page corpus per stage. A stage needing MORE salts than the cached
-    // high-water builds a widened replacement (the superseded RDD stays
-    // persisted until run-end cleanup — a lazy consumer like stage F
-    // may still hold it).
+    // The pages a stage with hot map `hot` joins. Salts are 0..k-1
+    // ([[saltKey]]); the pages layout holds those below each
+    // planning-time count, and a MEASURED count above it adds a tiny
+    // replica layout with the rest, joined by a partitioner-aware union
+    // (still `width` partitions). Replica layouts cache by hot-file KEY
+    // SET with a per-file high-water count; ANY cached layout covering
+    // every requested count serves as-is (unsalted files' keys are never
+    // looked up), so jittering estimates share one layout. An uncovered
+    // stage builds one, widening its key set's high-water (the
+    // superseded RDD stays persisted until run-end cleanup — a lazy
+    // consumer like stage F may still hold it).
     val saltedLayouts = mutable.Map.empty[
       Set[String], (Map[String, Int], RDD[(String, (String, Array[Byte]))])]
     val supersededLayouts = mutable.ArrayBuffer.empty[RDD[_]]
-    def saltedPages(hot: Map[String, Int]): RDD[(String, (String, Array[Byte]))] = {
-      def covers(counts: Map[String, Int]): Boolean =
-        hot.forall { case (f, k) => counts.getOrElse(f, 0) >= k }
-      val cached = saltedLayouts.get(hot.keySet)
-      cached match {
-        case Some((counts, rdd)) if covers(counts) =>
-          rdd
-        case _ =>
-          // No exact-keyset hit: any persisted SUPERSET layout whose
-          // per-file high-water covers every requested count serves this
-          // stage as-is (salts are 0..k-1, extra files' keys are simply
-          // never looked up by the request map) — measured jitter that
-          // DROPS a file between stages must not re-filter and re-shuffle
-          // the page corpus.
-          saltedLayouts.valuesIterator
-            .find { case (counts, _) => covers(counts) }
-            .map(_._2)
-            .getOrElse {
-          val merged = cached match {
-            case Some((counts, _)) =>
-              hot.map { case (f, k) => f -> math.max(k, counts(f)) }
-            case None => hot
-          }
-          val rdd = pagesByFile
-            .filter { case (fl, _) => merged.contains(fl) }
-            .flatMap { case (fl, v) =>
-              (0 until merged(fl)).iterator.map(s => (saltKey(fl, s), v)) }
-            .partitionBy(saltedPart)
-            .persist(sl)
-          cached.foreach { case (_, old) => supersededLayouts += old }
-          saltedLayouts.update(hot.keySet, (merged, rdd))
-          rdd
-          }
-      }
+    def pagesFor(hot: Map[String, Int]): RDD[(String, (String, Array[Byte]))] = {
+      def covers(counts: Map[String, Int]): Boolean = hot.forall { case (f, k) =>
+        math.max(hotFiles.getOrElse(f, 0), counts.getOrElse(f, 0)) >= k }
+      if (covers(Map.empty)) pagesByFile
+      else pagesByFile.union(saltedLayouts.valuesIterator.collectFirst {
+        case (counts, rdd) if covers(counts) => rdd
+      }.getOrElse {
+        val prior = saltedLayouts.get(hot.keySet)
+        val merged = prior.fold(hot)(p => hot.map { case (f, k) => f -> math.max(k, p._1(f)) })
+        val rdd = pagesByFile
+          .filter { case (fl, _) => merged.contains(fl) }
+          .flatMap { case (fl, v) =>
+            (hotFiles.getOrElse(fl, 0) until merged(fl)).iterator.map(s => (saltKey(fl, s), v)) }
+          .partitionBy(part)
+          .persist(sl)
+        prior.foreach { case (_, old) => supersededLayouts += old }
+        saltedLayouts.update(hot.keySet, (merged, rdd))
+        lastRouting.updateAndGet(t => t.copy(layoutBuilds = t.layoutBuilds + 1))
+        rdd
+      })
     }
 
-    /** One stage = one co-partitioned zipPartitions join: the request
+    /** One stage = ONE co-partitioned zipPartitions join: the request
       * table (entity-scale by design — the reference's work lists)
-      * shuffles into the pages partitioner, each partition builds a
-      * bounded (requests/width) per-file hash map of its requests, and
-      * the pages side STREAMS through — each matched page decoded and
-      * parsed ONCE with all its requests applied row-locally. No
-      * driver transit, no broadcast build, nothing page-sized moves;
-      * fragments and follow-up requests stay distributed.
+      * shuffles once into the run's partitioner, a hot file's requests
+      * under salted keys, the rest under their plain file key. Each
+      * partition builds a bounded (requests/width) per-key hash map of
+      * its requests, and the pages side ([[pagesFor]]) STREAMS through —
+      * each matched page decoded and parsed ONCE with all its requests
+      * applied row-locally. A request meets exactly one page row, the
+      * one under its own key (a file name cannot contain the NUL of a
+      * salted key), so routing leaves output untouched. No driver
+      * transit, no broadcast build, nothing page-sized moves.
       */
     def stage[R: ClassTag](reqs: RDD[(String, R)],
                            extraHot: Map[String, Int] = Map.empty)(
         f: (Soup, MstrIndexes, Seq[R]) => Seq[Frag]): RDD[Frag] = {
-      def leg(pagesRdd: RDD[(String, (String, Array[Byte]))],
-              keyed: RDD[(String, R)]): RDD[Frag] = {
-        // co-partition the requests under the PAGES side's partitioner
-        // (the pinned hash layout for the cold leg, the salted
-        // partitioner for salted layouts) — zipPartitions correctness
-        // rests on both sides agreeing
-        val reqsP = keyed.partitionBy(pagesRdd.partitioner.getOrElse(part))
-        pagesRdd.zipPartitions(reqsP) { (pIt, rIt) =>
-          val byFile = new java.util.HashMap[String, mutable.ArrayBuffer[R]]()
-          rIt.foreach { case (fl, r) =>
-            byFile.computeIfAbsent(fl, _ => mutable.ArrayBuffer.empty[R]) += r
-          }
-          // a request-free partition must not even deserialize its pages
-          if (byFile.isEmpty) Iterator.empty
-          else pIt.flatMap { case (file, (_, html)) =>
-            val rs = byFile.get(file)
-            if (rs == null) Nil
-            else f(Soup.parse(TextOps.decodeLatin1(html)), bIdx.value.indexes, rs.toSeq)
-          }
-        }
-      }
       // this stage's hot map: planning-time static ∪ measured
       // (predecessor-probe), a file hot in both keeping its widest
       // split — both detectors' files route identically
-      val hot =
-        if (extraHot.isEmpty) hotFiles
-        else (hotFiles.keySet ++ extraHot.keySet).iterator.map { f =>
-          f -> math.max(hotFiles.getOrElse(f, 0), extraHot.getOrElse(f, 0))
-        }.toMap
-      if (hot.isEmpty) leg(pagesByFile, reqs)
-      else {
-        // hot requests split across the file's ADAPTIVE salt count
-        // against the replicated hot layout; the salt is a
-        // deterministic hash of the request itself, so both plans and
-        // any partitioning see the same (request → salt) assignment.
-        // Each request still meets its page exactly once — output
-        // identity is untouched, only task granularity changes.
-        val cold = leg(pagesByFile,
-          reqs.filter { case (fl, _) => !hot.contains(fl) })
-        val hotLeg = leg(saltedPages(hot),
-          reqs.flatMap { case (fl, r) =>
-            hot.get(fl) match {
-              case None    => None
-              case Some(k) => Some((saltKey(fl, math.floorMod(r.hashCode, k)), r))
-            }
-          })
-        cold.union(hotLeg)
+      val hot = extraHot.foldLeft(hotFiles) { case (m, (f, k)) =>
+        m.updated(f, math.max(k, m.getOrElse(f, 0))) }
+      // a hot request's salt is a deterministic hash of the request
+      // itself, so any partitioning sees the same (request → salt)
+      // assignment
+      val keyed = if (hot.isEmpty) reqs else reqs.map { case (fl, r) =>
+        hot.get(fl).fold((fl, r))(k => (saltKey(fl, math.floorMod(r.hashCode, k)), r))
+      }
+      pagesFor(hot).zipPartitions(keyed.partitionBy(part)) { (pIt, rIt) =>
+        val byKey = new java.util.HashMap[String, mutable.ArrayBuffer[R]]()
+        rIt.foreach { case (k, r) =>
+          byKey.computeIfAbsent(k, _ => mutable.ArrayBuffer.empty[R]) += r
+        }
+        // a request-free partition must not even deserialize its pages
+        if (byKey.isEmpty) Iterator.empty
+        else pIt.flatMap { case (k, (_, html)) =>
+          val rs = byKey.get(k)
+          if (rs == null) Nil
+          else f(Soup.parse(TextOps.decodeLatin1(html)), bIdx.value.indexes, rs.toSeq)
+        }
       }
     }
 
@@ -868,8 +870,6 @@ object MstrJoinPipeline {
     // under threshold/16 (see HeavyHitters), and each per-kind map
     // under 2×cap entries regardless of distinct-file count
     val hhCap = math.max(64, 8 * width)
-    val trackHot = !(noSalt || staticHotOnly)
-    lastMeasuredHot.set(Set.empty)
     def probe(out: RDD[Frag]): ProbeStats = out
       .aggregate(new ProbeStats(hhCap, trackHot))(
         (s, f) => s.add(f), (a, b) => a.merge(b))
@@ -925,8 +925,8 @@ object MstrJoinPipeline {
     // the probe is the materializing action for rOut's cache (and runs
     // the pages layout shuffle, reused by every later stage); dataset
     // requests stay distributed
+    pass(spark, "stage R")
     val rStats = probe(rOut)
-    prof(s"stage-R done (${rStats.count(Frag.KDs)} ds reqs)")
     val dsReqRdd = reqRdd[DsReq](rOut, Frag.KDs)
 
     // ---- stage D: dataset pages → template objects → attr/metric reqs ----
@@ -972,9 +972,9 @@ object MstrJoinPipeline {
 
     // one probe materializes dOut's cache and sizes the level-1
     // frontier (attribute + first-level metric requests ride together)
+    pass(spark, "stage D")
     val dStats = probe(dOut)
     val nL1 = dStats.count(Frag.KAttr) + dStats.count(Frag.KMetric)
-    prof(s"stage-D done ($nL1 l1 reqs)")
 
     // ---- stage A body: attribute pages → forms (attribute_extractor.py);
     // fused into the first level pass so attribute and metric pages are
@@ -1089,9 +1089,8 @@ object MstrJoinPipeline {
       val out = stage(frontier,
         measuredHot(frontierStats, Frag.KAttr, Frag.KMetric))(fusedStage).persist(sl)
       persisted += out
+      pass(spark, s"level $depth")
       val stats = probe(out)
-      prof(s"level $depth done (${stats.count(Frag.KMetric) +
-        stats.count(Frag.KFact)} follow-ups)")
       mnodeFrags = mnodeFrags.union(out)
       factReqRdd = factReqRdd.union(reqRdd[FactReq](out, Frag.KFact))
       frontier = reqRdd[MetricReq](out, Frag.KMetric)
@@ -1166,20 +1165,9 @@ object MstrJoinPipeline {
       }
     }
     // materialize eagerly; callers get the cached result
-    prof("assembly planned")
-    if (sys.env.get("GRAFT_JOIN_PROF").contains("1")) {
-      // prof-only sub-splits of the assembly job (extra jobs, so gated);
-      // the prof persists ride the same end-of-run cleanup as the
-      // stage caches
-      persisted += factFrags.persist()
-      prof(s"  factFrags: ${factFrags.count()} rows")
-      persisted += allFrags.persist()
-      prof(s"  allFrags: ${allFrags.count()} rows")
-      prof(s"  assembled rdd: ${assembled.count()} rows")
-    }
     val result = spark.createDataset(assembled.map(project))(enc).persist(sl)
+    pass(spark, "assembly")
     result.count()
-    prof("assembly done")
     // the intermediate caches served their purpose during assembly —
     // release them (and the pages layout + executor copies of the index
     // broadcast) so repeated run() calls don't pin blocks for the
@@ -1237,17 +1225,19 @@ object MstrJoinPipeline {
     math.min(width.toLong, math.max(2L, (est + perSalt - 1) / perSalt)).toInt
   }
 
-  /** Partitioner for the salted leg: salt s of file f goes to
+  /** The join plan's one partitioner (pages layout, hot replica
+    * layouts, every request shuffle): salt s of file f goes to
     * partition (hash(f) + s) mod width, so a k-way split occupies k
     * DISTINCT partitions BY CONSTRUCTION. Hashing the composite string
     * instead (the naive choice) lets small-k splits collide into one
     * partition and quietly resurrect the straggler — String.hashCode
     * mod 2^m is structurally degenerate (31 ≡ −1 mod 32: the hash
     * collapses to an alternating char sum, and integer suffixes cannot
-    * even REACH some residues). Plain-string keys (no NUL) fall back
-    * to the HashPartitioner rule, and salts 0..k-1 make a lower-k key
-    * set a subset of any higher-k one, which is what lets a persisted
-    * layout with a high-water salt count serve lower-count stages.
+    * even REACH some residues). Plain-string keys (no NUL) follow the
+    * HashPartitioner rule, so salt 0 lands with its plain key; salts
+    * 0..k-1 make a lower-k key set a subset of any higher-k one, which
+    * is what lets a persisted layout with a high-water salt count serve
+    * lower-count stages. SaltedPartitionerPropSpec pins these properties.
     */
   private[graft] final class SaltedPartitioner(width: Int)
       extends org.apache.spark.Partitioner {
@@ -1298,18 +1288,20 @@ object MstrJoinPipeline {
   private[graft] def fairShareThreshold(total: Long, width: Int): Long =
     math.max(64L, 2L * total / math.max(1, width))
 
-  /** Test instrumentation: the union of MEASURED hot sets the most
-    * recent [[run]] on this JVM routed through the salted leg
-    * (planning-time static hot excluded). Lets specs assert the
-    * measured detector actually engaged on a fan-in corpus — output
-    * bytes alone can't (salting is output-invariant by design).
-    * Diagnostic only — the pipeline never reads it, and under
-    * concurrent run() calls on one driver the last writer wins (specs
-    * run extractions serially; production output is unaffected either
-    * way).
+  /** Test instrumentation for the most recent [[run]] on this JVM: the
+    * files it found hot at planning time, the union of MEASURED hot
+    * sets it routed, and the number of replica layouts it built for
+    * measured counts. Lets specs assert each detector actually engaged
+    * and bound a routed run's stage count — output bytes alone can't
+    * (routing is output-invariant by design). Diagnostic only — the
+    * pipeline never reads it, and under concurrent run() calls on one
+    * driver the last writer wins (specs run extractions serially;
+    * production output is unaffected either way).
     */
-  private[graft] val lastMeasuredHot =
-    new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
+  private[graft] final case class RoutingTrace(staticHot: Set[String],
+                                               measuredHot: Set[String], layoutBuilds: Int)
+  private[graft] val lastRouting =
+    new java.util.concurrent.atomic.AtomicReference(RoutingTrace(Set.empty, Set.empty, 0))
 
   /** Pre-file dataset routing — extractDataset's index-only prefix
     * (dataset_extractor.py:21-143): unresolved → empty dataset with

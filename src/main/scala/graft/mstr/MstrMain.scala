@@ -33,6 +33,7 @@ import org.apache.spark.sql.SparkSession
   *                     corpora (default 64 MB): at most n on-disk bytes
   *                     → collect + broadcast plan; larger → distributed
   *                     join plan. Same bytes either way.
+  *  - `--master <url>`  Spark master (default local[4])
   *
   * Selection precedence mirrors the reference exactly: report-id, then
   * report name, then filter, else all.
@@ -47,7 +48,8 @@ object MstrMain {
                           pagesPath: Option[String] = None,
                           outputJson: Option[String] = None,
                           outputTable: Option[String] = None,
-                          broadcastMaxBytes: Long = DefaultBroadcastMaxBytes)
+                          broadcastMaxBytes: Long = DefaultBroadcastMaxBytes,
+                          master: String = "local[4]")
 
   /** Dispatch threshold (on-disk corpus bytes): a corpus this small is
     * cheaper to collect + broadcast (the MstrPipeline plan, ~0 fixed
@@ -71,6 +73,7 @@ object MstrMain {
       case "--output-table" :: v :: t => loop(t, c.copy(outputTable = Some(v)))
       case "--broadcast-max-bytes" :: v :: t =>
         loop(t, c.copy(broadcastMaxBytes = v.toLong))
+      case "--master" :: v :: t => loop(t, c.copy(master = v))
       case Nil => c
       case bad :: _ => throw new IllegalArgumentException(s"unknown arg: $bad")
     }
@@ -164,7 +167,7 @@ object MstrMain {
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+      .master(cfg.master)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .appName("mstr-extract")

@@ -19,10 +19,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * index-visible; `fanin` points every report at ONE shared cube
   * section so the skew is request-traffic-only and invisible to
   * planning-time link counts; `even` is the control), MSTR_HOT=0 is a
-  * legacy alias for MSTR_SHAPE=even, GRAFT_JOIN_NOSALT=1 disables all
-  * salted request routing and GRAFT_JOIN_STATIC_HOT=1 disables only
-  * the measured (probe-counted) hot detection (the before/after
-  * comparison levers).
+  * legacy alias for MSTR_SHAPE=even, MSTR_ROUTING (adaptive | static
+  * | off, default adaptive) picks the join plan's hot-file routing:
+  * `static` drops only the measured (probe-counted) hot detection,
+  * `off` all salted request routing (the before/after comparison
+  * levers).
   */
 object MstrHotSkewBench {
   def main(args: Array[String]): Unit = {
@@ -35,6 +36,15 @@ object MstrHotSkewBench {
     // under the requested label
     require(Set("hot", "even", "fanin").contains(shape),
       s"MSTR_SHAPE must be hot|even|fanin, got '$shape'")
+    import graft.mstr.MstrJoinPipeline.Routing
+    val routingName = sys.env.getOrElse("MSTR_ROUTING", "adaptive")
+    val routing = routingName match {
+      case "adaptive" => Routing.Adaptive
+      case "static"   => Routing.StaticOnly
+      case "off"      => Routing.Off
+      case other =>
+        throw new IllegalArgumentException(s"MSTR_ROUTING must be adaptive|static|off, got '$other'")
+    }
     val hot = shape == "hot"
     val fanIn = shape == "fanin"
     val spark = SparkSession.builder().master(s"local[$cores]")
@@ -48,8 +58,7 @@ object MstrHotSkewBench {
     println(s"PROF corpus: n=$n reports, ${pages.size} pages, " +
       s"${pages.map(_.html.length.toLong).sum / 1024} KiB total, " +
       s"largest file ${maxFile.url} = ${maxFile.html.length / 1024} KiB, " +
-      s"cores=$cores shape=$shape nosalt=${sys.env.getOrElse("GRAFT_JOIN_NOSALT", "0")} " +
-      s"statichot=${sys.env.getOrElse("GRAFT_JOIN_STATIC_HOT", "0")}")
+      s"cores=$cores shape=$shape routing=$routingName")
 
     val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -62,11 +71,11 @@ object MstrHotSkewBench {
       val t0 = System.nanoTime()
       val res = graft.mstr.MstrJoinPipeline.run(spark,
         spark.createDataset(pages).repartition(cores), "pt-BR",
-        internalShufflePartitions = cores)
+        internalShufflePartitions = cores, routing = routing)
       val c = res.count()
       val wall = (System.nanoTime() - t0) / 1e9
       res.unpersist(blocking = false)
-      Thread.sleep(500) // let the listener bus drain
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val secs = taskMs.asScala.map(_ / 1e3).toSeq.sorted
       (wall, c, secs)
@@ -74,7 +83,7 @@ object MstrHotSkewBench {
     val (wall, rows, secs) = walls.minBy(_._1)
     val mx = if (secs.nonEmpty) secs.last else 0.0
     val md = if (secs.nonEmpty) secs(secs.length / 2) else 0.0
-    println(f"""{"metric":"mstr_hot_skew","shape":"$shape","rows":$rows,"wall_sec":$wall%.2f,"tasks":${secs.length},"task_sec_max":$mx%.2f,"task_sec_median":$md%.3f,"straggler_ratio":${if (md > 0) mx / md else 0.0}%.1f,"cores":$cores,"n":$n}""")
+    println(f"""{"metric":"mstr_hot_skew","shape":"$shape","routing":"$routingName","rows":$rows,"wall_sec":$wall%.2f,"tasks":${secs.length},"task_sec_max":$mx%.2f,"task_sec_median":$md%.3f,"straggler_ratio":${if (md > 0) mx / md else 0.0}%.1f,"cores":$cores,"n":$n}""")
     spark.stop()
   }
 }

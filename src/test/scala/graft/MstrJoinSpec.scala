@@ -69,19 +69,32 @@ class MstrJoinSpec extends AnyFunSuite {
 
   test("hot-basename corpus: salted routing engages and stays byte-identical to broadcast") {
     import spark.implicits._
-    // all 600 cube sections in ONE content file: its request fan-in
-    // exceeds 2x the per-partition fair share, so the join plan must
-    // route it through the salted leg (detection asserted directly
-    // below) and still produce the broadcast plan's exact bytes
-    val pages = graft.fixtures.MstrGen.pages(600, hotCubes = true)
-    val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
-      .collect().map(r => r.report_id -> r.json).toMap
-    val viaJoin = MstrJoinPipeline.run(spark,
-      spark.createDataset(pages).repartition(4), "pt-BR")
-      .collect().map(r => r.report_id -> r.json).toMap
-    assert(viaJoin.keySet == viaBroadcast.keySet)
-    viaBroadcast.foreach { case (rid, json) =>
-      assert(viaJoin(rid) == json, s"report $rid diverged on the hot corpus")
+    // all cube sections in ONE content file: its request fan-in exceeds
+    // 2x the per-partition fair share, so the join plan must route it
+    // through salted keys (detection asserted directly below) and still
+    // produce the broadcast plan's exact bytes. 600 reports at width 4
+    // split the file all the way at planning time; at 150 reports and
+    // width 8 its links plan fewer salts than its measured dataset
+    // requests (every 5th report reads a second cube) ask for, so the
+    // pages layout's salts and a replica layout's higher ones serve
+    // one pass together
+    for ((n, width) <- Seq(600 -> 4, 150 -> 8)) {
+      val pages = graft.fixtures.MstrGen.pages(n, hotCubes = true)
+      val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
+        .collect().map(r => r.report_id -> r.json).toMap
+      val viaJoin = MstrJoinPipeline.run(spark,
+        spark.createDataset(pages).repartition(width), "pt-BR")
+        .collect().map(r => r.report_id -> r.json).toMap
+      val trace = MstrJoinPipeline.lastRouting.get()
+      assert(trace.staticHot.contains("GenCubo_1.html"),
+        s"planning-time hot detection did not engage on the hot corpus ($n, $width)")
+      if (width == 8)
+        assert(trace.measuredHot.contains("GenCubo_1.html") && trace.layoutBuilds >= 1,
+          s"measured salts above the planning-time count built no replica layout: $trace")
+      assert(viaJoin.keySet == viaBroadcast.keySet)
+      viaBroadcast.foreach { case (rid, json) =>
+        assert(viaJoin(rid) == json, s"report $rid diverged on the hot corpus ($n, $width)")
+      }
     }
   }
 
@@ -167,7 +180,7 @@ class MstrJoinSpec extends AnyFunSuite {
     // link count is normal, so planning-time detection cannot see it —
     // only the probe-measured per-file request counts can. 600 reqs on
     // one file at width 4 is far over the 2x fair-share threshold
-    // (300), so the measured salted leg runs, and output bytes must
+    // (300), so measured salted routing runs, and output bytes must
     // still equal the broadcast plan's
     val pages = graft.fixtures.MstrGen.pages(600, fanInCube = true)
     val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
@@ -175,17 +188,104 @@ class MstrJoinSpec extends AnyFunSuite {
     val viaJoin = MstrJoinPipeline.run(spark,
       spark.createDataset(pages).repartition(4), "pt-BR")
       .collect().map(r => r.report_id -> r.json).toMap
-    // byte-identity alone cannot prove the salted leg ran (salting is
-    // output-invariant by design): assert the measured detector
-    // actually fired on this corpus via the run's instrumentation —
-    // unless a bench lever in the environment disabled it on purpose
-    val levered = sys.env.get("GRAFT_JOIN_NOSALT").contains("1") ||
-      sys.env.get("GRAFT_JOIN_STATIC_HOT").contains("1")
-    assert(levered || MstrJoinPipeline.lastMeasuredHot.get().nonEmpty,
+    // byte-identity alone cannot prove the salted routing ran (salting
+    // is output-invariant by design): assert the measured detector
+    // actually fired on this corpus via the run's instrumentation
+    assert(MstrJoinPipeline.lastRouting.get().measuredHot.nonEmpty,
       "measured hot detection did not engage on the fan-in corpus")
     assert(viaJoin.keySet == viaBroadcast.keySet)
     viaBroadcast.foreach { case (rid, json) =>
       assert(viaJoin(rid) == json, s"report $rid diverged on the fan-in corpus")
+    }
+  }
+
+  test("hot-cube corpus: routing adds no stage beyond the replica-layout builds") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import MstrJoinPipeline.Routing
+    val sc = spark.sparkContext
+    val pages = graft.fixtures.MstrGen.pages(400, hotCubes = true)
+    val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
+      .collect().map(r => r.report_id -> r.json).toMap
+    // stages the run executed (skipped stages never submit), counted
+    // by this run's job group after the listener bus drains
+    def stagesOf(routing: Routing): (Int, Map[String, String]) = {
+      val group = s"mstr-stages-${java.util.UUID.randomUUID()}"
+      val stages = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            stages.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "mstr join stage count")
+      val out = try {
+        val ds = MstrJoinPipeline.run(spark, spark.createDataset(pages).repartition(4),
+          "pt-BR", routing = routing)
+        org.apache.spark.TestListenerBus.drain(sc)
+        ds
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      val json = out.collect().map(r => r.report_id -> r.json).toMap
+      out.unpersist(blocking = false)
+      (stages.get, json)
+    }
+    val (offStages, viaOff) = stagesOf(Routing.Off)
+    val (adaptiveStages, viaAdaptive) = stagesOf(Routing.Adaptive)
+    val trace = MstrJoinPipeline.lastRouting.get()
+    val builds = trace.layoutBuilds
+    assert(trace.staticHot.nonEmpty, "sanity: the hot cube file must be routed")
+    // a routed pass shuffles its requests once, like an unrouted one:
+    // the only extra stages are the replica-layout builds for
+    // measured counts (planning-time replicas ride the pages shuffle)
+    assert(adaptiveStages <= offStages + builds,
+      s"adaptive routing ran $adaptiveStages stages, routing off $offStages + $builds layout builds")
+    assert(viaAdaptive == viaBroadcast, "adaptive join output diverged from the broadcast plan")
+    assert(viaOff == viaBroadcast, "unrouted join output diverged from the broadcast plan")
+  }
+
+  test("a run restores the caller's AQE setting and job description, and names its passes") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "spark.sql.adaptive.enabled"
+    val pagesDs = spark.createDataset(MstrCorpus.pages).repartition(4)
+    // getOption reports the default for an unset key, so set-ness is
+    // read from getAll (explicit settings only)
+    def aqe: (Option[String], Boolean) =
+      (spark.conf.getOption(key), spark.conf.getAll.contains(key))
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    val original = spark.conf.getAll.get(key)
+    sc.addSparkListener(listener)
+    try {
+      spark.conf.unset(key)
+      val unset = aqe
+      assert(!unset._2)
+      sc.setJobDescription("caller description")
+      MstrJoinPipeline.run(spark, pagesDs).unpersist(blocking = false)
+      assert(aqe == unset, "an unset AQE key must stay unset, not become an explicit default")
+      assert(sc.getLocalProperty("spark.job.description") == "caller description")
+      sc.setJobDescription(null)
+      Seq("false", "true").foreach { v =>
+        spark.conf.set(key, v)
+        MstrJoinPipeline.run(spark, pagesDs).unpersist(blocking = false)
+        assert(aqe == (Some(v), true), s"explicit AQE setting $v was not restored")
+      }
+      assert(sc.getLocalProperty("spark.job.description") == null)
+      org.apache.spark.TestListenerBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      val named = descs.asScala.toSet
+      Seq("indexes", "stage R", "stage D", "level 1", "assembly").foreach { p =>
+        assert(named.contains(s"mstr join: $p"), s"no job named 'mstr join: $p' in $named")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.setJobDescription(null)
+      original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
   }
 

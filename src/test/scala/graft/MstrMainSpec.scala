@@ -22,6 +22,8 @@ class MstrMainSpec extends AnyFunSuite {
       "--dry-run", "--locale", "pt-BR", "--output-json", "/tmp/x"))
     assert(c == Config(filter = Some("vendas"), reportId = Some(RID), dryRun = true,
       lang = "pt-BR", outputJson = Some("/tmp/x")))
+    assert(MstrMain.parseArgs(Array("--master", "local[2]")).master == "local[2]")
+    assert(MstrMain.parseArgs(Array.empty).master == "local[4]")
     intercept[IllegalArgumentException](MstrMain.parseArgs(Array("--nope")))
   }
 
