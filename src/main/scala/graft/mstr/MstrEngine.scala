@@ -1,21 +1,18 @@
 package graft.mstr
 
-import graft.text.TextOps
 import scala.collection.mutable
 
 /** Row-local entity assembly mirroring the reference's extractor
   * orchestration (report_extractor.py:155-297, dataset_extractor.py,
-  * metric_extractor.py, attribute_extractor.py, extractor_helpers.py).
+  * metric_extractor.py, attribute_extractor.py, extractor_helpers.py):
+  * a recursive driver over the [[MstrSteps]], which hold every entity
+  * decision.
   *
   * Runs inside `mapPartitions` on the executors: `indexes` is the
   * broadcast dimension set, `files` resolves content-file names to
   * parsed trees (broadcast html + per-executor lazy parse cache — the
   * analog of the reference's global parse cache, which Spark makes
   * unnecessary as shared mutable state).
-  *
-  * Deterministic divergence from the reference (documented, SURVEY.md
-  * §7.4.4): datasets with no recoverable id get
-  * `upper(md5(relatorioId + ":" + name))` instead of `uuid4()`.
   */
 final class MstrEngine(indexes: MstrIndexes, files: String => Option[Soup],
                        locale: MstrLocale) extends Serializable {
@@ -40,190 +37,75 @@ final class MstrEngine(indexes: MstrIndexes, files: String => Option[Soup],
   private val metricCache = mutable.Map.empty[String, Metrica]
   private val attributeCache = mutable.Map.empty[String, Atributo]
 
-  private def filePathOf(l: LinkResult): String =
-    if (l.anchor.nonEmpty) s"${l.file}#${l.anchor}" else l.file
-
-  private def deterministicGuid(seed: String): String = TextOps.md5HexUpper(seed)
-
-  // ------------------------------------------------------------------
-  // Report level
-  // ------------------------------------------------------------------
-
   def extractAllReports(): List[Relatorio] =
     indexes.documento.links.flatMap(extractReport).toList
 
   def extractReport(info: LinkResult): Option[Relatorio] = {
-    val reportId = {
-      val (_, anchor) = Soup.splitHref(info.href)
-      anchor
-    }
-    if (reportId.isEmpty) return None
-    val soup = files(info.file).getOrElse(return None)
-    val filePath = s"${info.file}#$reportId"
-
-    val owner = MstrParsers.extractOwnerName(soup, locale, Some(reportId)).map { ownerName =>
-      indexes.pasta.findByName(ownerName) match {
-        case Some(link) =>
-          val ownerId = link.anchor
-          Owner(ownerName, ownerId,
-            if (ownerId.nonEmpty) s"${link.file}#$ownerId" else link.file,
-            Some(link.name), Some("owner"))
-        case None =>
-          Owner(ownerName, "", "", None, Some("owner"))
+    val reportId = MstrSteps.reportIdOf(info.href)
+    if (reportId.isEmpty) None
+    else files(info.file).map { soup =>
+      val r = MstrSteps.report(soup, indexes, locale, info.file, info.name, reportId)
+      val datasets = r.datasets.flatMap { case (dsName, dsId) =>
+        extractDataset(dsName, dsId, reportId)
       }
+      Relatorio(info.name, reportId, r.filePath, datasets, r.owner, r.acl)
     }
-
-    val accessControl = MstrParsers.extractAccessRows(soup, locale, Some(reportId)).map {
-      case (userName, access) =>
-        indexes.pasta.findByName(userName)
-          .orElse(indexes.pasta.findUserByParenthesizedName(userName)) match {
-          case Some(link) =>
-            val uid = link.anchor
-            AccessControlEntry(userName, access, Some(link.name),
-              Some(uid), Some(if (uid.nonEmpty) s"${link.file}#$uid" else link.file))
-          case None =>
-            AccessControlEntry(userName, access, None, None, None)
-        }
-    }
-
-    val datasetsInfo = MstrParsers.extractDatasetsFromReport(soup, locale, info.name, Some(reportId))
-
-    val datasets = datasetsInfo.flatMap { case (dsName, dsId, _) =>
-      extractDataset(dsName, dsId, reportId)
-    }
-
-    Some(Relatorio(info.name, reportId, filePath, datasets, owner, accessControl))
   }
-
-  // ------------------------------------------------------------------
-  // Dataset level (dataset_extractor.py:21-143)
-  // ------------------------------------------------------------------
 
   def extractDataset(dsName: String, dsIdOpt: Option[String],
-                     relatorioId: String): Option[DataSet] = {
-    val dsId0 = dsIdOpt.getOrElse("")
-    MstrIndexes.resolveDatasetLink(indexes,
-      Some(dsId0).filter(_.nonEmpty), Some(dsName)) match {
-      case None =>
-        // empty dataset with deterministic fallback id (uuid4 in the ref)
-        val id = if (dsId0.nonEmpty) dsId0 else deterministicGuid(s"$relatorioId:$dsName")
-        Some(DataSet(dsName, id, "", relatorioId, Some(""), None, Nil, Nil))
-
-      case Some((dsFile, source)) =>
-        var dsId = dsId0
-        if (dsId.isEmpty && dsFile.contains("#")) dsId = dsFile.split("#", 2)(1)
-        if (dsId.isEmpty) dsId = deterministicGuid(s"$relatorioId:$dsName")
-
-        if (source == "Shortcut") {
-          Some(DataSet(dsName, dsId, dsFile, relatorioId, Some("Shortcut"), None, Nil, Nil))
-        } else {
-          val fileNameOnly = dsFile.split("#", 2)(0)
-          files(fileNameOnly) match {
-            case None => None // dataset file missing: reference returns None
-            case Some(soup) =>
-              val isReport = MstrParsers.isReportDataset(soup, locale, dsId)
-              val (appObject, graphic, attrsInfo, metricsInfo) =
-                if (isReport) {
-                  val g = MstrParsers.extractGraphicType(soup, locale, dsId)
-                  val (a, m) = MstrParsers.extractTemplateObjectsReport(soup, locale, dsId)
-                  (Some("Report"), g, a, m)
-                } else {
-                  val ao = if (source == "CuboInteligente") Some("CuboInteligente") else None
-                  val (a, m) = MstrParsers.extractTemplateObjects(soup, locale, dsName, Some(dsId))
-                  (ao, None, a, m)
-                }
-
-              val atributos = attrsInfo.flatMap { ai =>
-                indexes.atributo.findLink(ai.id, Some(ai.nameOnDataset)).flatMap { link =>
-                  extractAttribute(link.name, ai.nameOnDataset, filePathOf(link), dsId)
-                }
-              }
-
-              val metricas = metricsInfo.flatMap { mi =>
-                indexes.metrica.findMetricLink(mi.nameOnDataset, mi.id) match {
-                  case Some(link) =>
-                    val anchor = if (link.anchor.nonEmpty) Some(link.anchor) else mi.id
-                    extractMetric(link.name, filePathOf(link), dsId, anchor,
-                      mutable.Set.empty[String])
-                  case None =>
-                    // embedded/derived metric (report_extractor.py:263-285)
-                    Some(Metrica(mi.nameOnDataset, mi.id.getOrElse(""), mi.href, dsId,
-                      "embedded", Some("DerivedMetric"), None, None, None, Nil))
-                }
-              }
-
-              Some(DataSet(dsName, dsId, dsFile, relatorioId, appObject, graphic,
-                atributos, metricas))
+                     relatorioId: String): Option[DataSet] =
+    MstrSteps.routeDataset(indexes, relatorioId, dsName, dsIdOpt) match {
+      case Left(terminal) => Some(terminal)
+      case Right(t) =>
+        // a missing dataset file drops the dataset (the reference returns None)
+        files(t.file).map { soup =>
+          val d = MstrSteps.datasetPage(soup, indexes, locale, t.name, t.id, t.source)
+          val atributos = d.attributes.flatMap { a =>
+            extractAttribute(a.official, a.nameOnDataset, a.path, t.id)
           }
+          val metricas = d.metrics.flatMap {
+            case Left(embedded) => Some(embedded)
+            case Right(m) => extractMetric(m.name, m.path, t.id, m.idOpt, mutable.Set.empty)
+          }
+          DataSet(t.name, t.id, t.path, relatorioId, d.applicationObject, d.graphic,
+            atributos, metricas)
         }
     }
-  }
-
-  // ------------------------------------------------------------------
-  // Attribute level (attribute_extractor.py:20-115)
-  // ------------------------------------------------------------------
 
   def extractAttribute(officialName: String, nameOnDataset: String,
                        attrFilePath: String, datasetId: String): Option[Atributo] = {
     val cacheKey = s"$datasetId:$officialName:$nameOnDataset:$attrFilePath"
-    attributeCache.get(cacheKey).foreach(a => return Some(a))
-
-    val parts = attrFilePath.split("#", 2)
-    val fileName = parts(0)
-    val anchor = if (parts.length > 1) parts(1) else ""
-    val soup = files(fileName).getOrElse(return None)
-
-    val attrId =
-      if (anchor.nonEmpty) anchor
-      else fileName.replace(".html", "").replace("_1", "")
-    val fullPath = if (anchor.nonEmpty) s"$fileName#$anchor" else fileName
-
-    val formsData = MstrParsers.extractAttributeForms(soup, locale,
-      Some(anchor).filter(_.nonEmpty))
-
-    val formularios = formsData.map { case (formName, lts) =>
-      val resolved = lts.map { lt =>
-        val link = indexes.tabelaLogica.findLink(Some(lt.id), Some(lt.name))
-        lt.copy(filePath = link.map(filePathOf).orElse(lt.filePath))
+    attributeCache.get(cacheKey).orElse {
+      val (fileName, anchor) = MstrSteps.splitPath(attrFilePath)
+      files(fileName).map { soup =>
+        val a = MstrSteps.attribute(soup, indexes, locale, officialName, nameOnDataset,
+          fileName, anchor, datasetId)
+        attributeCache(cacheKey) = a
+        a
       }
-      val formId = TextOps.md5HexUpper(s"${attrId}_$formName")
-      Formulario(formId, formName, resolved)
     }
-
-    val atributo = Atributo(officialName, nameOnDataset, attrId, fullPath,
-      datasetId, Some("Atributo"), formularios)
-    attributeCache(cacheKey) = atributo
-    Some(atributo)
   }
-
-  // ------------------------------------------------------------------
-  // Metric level (metric_extractor.py:23-134, extractor_helpers.py)
-  // ------------------------------------------------------------------
 
   private def rebindDataset(m: Metrica, dsId: String): Metrica =
     m.copy(datasetId = dsId, metricas = m.metricas.map(rebindDataset(_, dsId)))
 
+  /** `visited` is the branch path: each composite child expands under
+    * its own copy (extractor_helpers.py:202-252).
+    */
   def extractMetric(metricName: String, metricFilePath: String, datasetId: String,
                     metricIdOpt: Option[String],
                     visited: mutable.Set[String]): Option[Metrica] = {
-    var metricaId = metricIdOpt.getOrElse {
-      val p = metricFilePath.split("#", 2)
-      if (p.length > 1) p(1) else ""
-    }
-    // circular reference check (extractor_helpers.py:19-38)
-    if (metricaId.nonEmpty && visited.contains(metricaId)) return None
-    // A result is a pure function of (name, path, id) ONLY when computed
-    // from an empty visited context; composite expansions under a
-    // non-empty set may be cycle-truncated by the caller's ancestry, so
-    // those are neither cached nor served from cache (see class doc).
-    val entryVisitedEmpty = visited.isEmpty
-    if (metricaId.nonEmpty) visited += metricaId
-
-    val cacheKey =
-      (if (metricaId.nonEmpty) s"$metricaId:$metricName" else s"$datasetId:$metricName") +
-        s":$metricFilePath"
-    if (entryVisitedEmpty) metricCache.get(cacheKey).foreach { cached =>
-      if (metricaId.nonEmpty) visited -= metricaId
+    val (fileName, anchor) = MstrSteps.splitPath(metricFilePath)
+    val pathId = MstrSteps.pathId(metricIdOpt, anchor)
+    if (pathId.exists(visited.contains)) None
+    else {
+      // A result is a pure function of (name, path, id) ONLY when computed
+      // from an empty visited context; composite expansions under a
+      // non-empty set may be cycle-truncated by the caller's ancestry, so
+      // those are neither cached nor served from cache (see class doc).
+      val entryVisitedEmpty = visited.isEmpty
+      pathId.foreach(visited += _)
+      val cacheKey = s"${pathId.getOrElse(datasetId)}:$metricName:$metricFilePath"
       // rebind dataset_id on hit RECURSIVELY: recomputation threads the
       // current datasetId through every child, so a top-only rebind
       // (the reference's, extractor_helpers.py:56-77) would leave the
@@ -232,71 +114,26 @@ final class MstrEngine(indexes: MstrIndexes, files: String => Option[Soup],
       // the join plan's assembly (which binds every node to the current
       // dataset). Deep rebind keeps the cache strictly
       // recompute-equivalent (class doc; EngineCacheSpec).
-      return Some(rebindDataset(cached, datasetId))
+      val hit =
+        if (entryVisitedEmpty) metricCache.get(cacheKey).map(rebindDataset(_, datasetId))
+        else None
+      val out = hit.orElse(files(fileName).map { soup =>
+        val s = MstrSteps.metric(soup, indexes, locale, metricName, fileName, anchor,
+          datasetId, visited.contains)
+        // a missing fact page keeps the FactRef with empty logicTables
+        val tables = s.fact.flatMap { t =>
+          files(t.file).map(MstrSteps.factTables(_, indexes, locale, t.anchor))
+        }
+        val fact = s.node.fact.map(f => tables.fold(f)(ts => f.copy(logicTables = ts)))
+        val children = s.children.flatMap { c =>
+          extractMetric(c.name, c.path, datasetId, c.idOpt, visited.clone())
+        }
+        val metrica = s.node.copy(fact = fact, metricas = children)
+        if (entryVisitedEmpty) metricCache(cacheKey) = metrica
+        metrica
+      })
+      pathId.foreach(visited -= _)
+      out
     }
-
-    val parts = metricFilePath.split("#", 2)
-    val fileName = parts(0)
-    val anchor = if (parts.length > 1) parts(1) else ""
-    val soup = files(fileName).getOrElse {
-      if (metricaId.nonEmpty) visited -= metricaId
-      return None
-    }
-
-    metricaId =
-      if (anchor.nonEmpty) anchor
-      else fileName.replace(".html", "").replace("_1", "")
-
-    val definition = MstrParsers.extractMetricDefinition(soup, locale, metricName,
-      Some(anchor).filter(_.nonEmpty))
-    val fullPath = if (anchor.nonEmpty) s"$fileName#$anchor" else fileName
-    val tipo = if (definition.tipo.nonEmpty) definition.tipo else "simples"
-
-    val metrica =
-      if (tipo == "composto") {
-        // composite expansion with per-branch visited copies
-        // (extractor_helpers.py:202-252)
-        val added = mutable.Set.empty[String]
-        val children = definition.childMetricIds.flatMap { childId =>
-          if (added.contains(childId) || visited.contains(childId)) None
-          else indexes.metrica.findMetricLink("", Some(childId)).flatMap { link =>
-            val child = extractMetric(link.name, filePathOf(link), datasetId,
-              Some(childId), visited.clone())
-            child.foreach(_ => added += childId)
-            child
-          }
-        }
-        Metrica(metricName, metricaId, fullPath, datasetId, tipo, Some("Metrica"),
-          definition.formula, None, None, children)
-      } else {
-        // simple metric: function + fact (+ fact logic tables)
-        val function = definition.functionId.flatMap { fid =>
-          indexes.funcao.findById(fid).map(l => FunctionRef(l.name, fid, filePathOf(l)))
-        }
-        val fact = definition.factId.flatMap { fid =>
-          indexes.fato.findLink(Some(fid), None).map { l =>
-            val factPath = filePathOf(l)
-            val factId =
-              if (factPath.contains("#")) factPath.split("#", 2)(1) else fid
-            val factAnchor = if (factPath.contains("#")) factPath.split("#", 2)(1) else ""
-            val lts = files(factPath.split("#", 2)(0)) match {
-              case Some(factSoup) =>
-                MstrParsers.extractFactLogicTables(factSoup, locale,
-                  Some(factAnchor).filter(_.nonEmpty)).map { lt =>
-                  val tl = indexes.tabelaLogica.findLink(Some(lt.id), Some(lt.name))
-                  lt.copy(filePath = tl.map(filePathOf))
-                }
-              case None => Nil
-            }
-            FactRef(l.name, factId, factPath, lts)
-          }
-        }
-        Metrica(metricName, metricaId, fullPath, datasetId, tipo, Some("Metrica"),
-          definition.formula, function, fact, Nil)
-      }
-
-    if (entryVisitedEmpty) metricCache(cacheKey) = metrica
-    if (metricaId.nonEmpty) visited -= metricaId
-    Some(metrica)
   }
 }

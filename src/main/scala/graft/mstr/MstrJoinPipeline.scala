@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 import scala.reflect.ClassTag
+import MstrSteps.{basename, splitPath}
 
 /** Join-based MSTR extraction for corpora too big to broadcast — the
   * documented escape hatch of [[MstrPipeline]] (which broadcasts the
@@ -50,12 +51,13 @@ import scala.reflect.ClassTag
   * FactRef with no logic tables), overridden when the fact page is
   * found.
   *
-  * Same parsers, same broadcast indexes, same output: byte-identical
-  * report JSON via both paths (MstrJoinSpec). Request order within a
-  * (file, stage) group is shuffle-order — legal because every stage
-  * applies its requests independently and every fragment carries its
-  * ordinal/position key, so assembly's sorts make the output
-  * order-invariant (partition-invariance is asserted in MstrJoinSpec).
+  * Same entity steps ([[MstrSteps]]), same broadcast indexes, same
+  * output: byte-identical report JSON via both paths (MstrJoinSpec).
+  * Request order within a (file, stage) group is shuffle-order — legal
+  * because every stage applies its requests independently and every
+  * fragment carries its ordinal/position key, so assembly's sorts make
+  * the output order-invariant (partition-invariance is asserted in
+  * MstrJoinSpec).
   */
 object MstrJoinPipeline {
 
@@ -91,7 +93,7 @@ object MstrJoinPipeline {
     * aliasing a different link or a pending link re-extracting.
     */
   def resumeKeyOf(req: ReportReq): String =
-    Soup.splitHref(req.href)._2 + "\u0000" + req.ord
+    MstrSteps.reportIdOf(req.href) + "\u0000" + req.ord
 
   /** The work list `run`/`resumeExtract` derive from the documento
     * index: one request per index link, `select` being the CLI's
@@ -459,15 +461,6 @@ object MstrJoinPipeline {
     }
   }
 
-  private def fileName(url: String): String = url.substring(url.lastIndexOf('/') + 1)
-  private def filePathOf(l: LinkResult): String =
-    if (l.anchor.nonEmpty) s"${l.file}#${l.anchor}" else l.file
-  private def splitPath(p: String): (String, String) = {
-    val parts = p.split("#", 2)
-    (parts(0), if (parts.length > 1) parts(1) else "")
-  }
-  private def guid(seed: String): String = TextOps.md5HexUpper(seed)
-
   /** `internalShufflePartitions` sizes ONLY the assembly shuffle (the
     * fragment groupBy — entity-scale rows, so a narrow width collapses
     * orchestration latency on small corpora; raise it when the entity
@@ -496,28 +489,6 @@ object MstrJoinPipeline {
       scala.reflect.classTag[ReportJsonRow],
       org.apache.spark.sql.Encoders.product[ReportJsonRow])
 
-  /** Resumable join-plan extraction through a [[graft.pipeline.TableIO]]
-    * sink — the same snapshot/anti-join contract as the extraction and
-    * filter pipelines, so an interrupted 100k-report run completes only
-    * the remainder on re-run instead of restarting from zero:
-    *
-    *  - committed work = the table's `resume_key` column (report id +
-    *    link ordinal — [[resumeKeyOf]]); reading it is work-list-bounded,
-    *    the same driver-memory class as the documento work list itself;
-    *  - pending work = the selected work list minus committed keys,
-    *    ordinals from the FULL documento index so keys are stable across
-    *    attempts under ANY selection (an interrupted `--filter` run may
-    *    resume unfiltered and vice versa — [[resumeKeyOf]]); the scheme
-    *    is pinned by a `key-scheme` marker in the table root, so a table
-    *    committed under a different (or unmarked legacy) scheme fails
-    *    loudly instead of aliasing keys;
-    *  - nothing pending commits NO snapshot (no empty-snapshot growth on
-    *    a no-op resume), and the union of snapshots after any
-    *    interrupt/resume sequence equals a cold one-shot run's rows
-    *    (MstrJoinSpec).
-    *
-    * Returns the number of newly committed report rows.
-    */
   /** Resume-key ordinal scheme identifier, pinned per table root. */
   private val KeyScheme = "full-index-ordinals-v2"
 
@@ -545,6 +516,28 @@ object MstrJoinPipeline {
     }
   }
 
+  /** Resumable join-plan extraction through a [[graft.pipeline.TableIO]]
+    * sink — the same snapshot/anti-join contract as the extraction and
+    * filter pipelines, so an interrupted 100k-report run completes only
+    * the remainder on re-run instead of restarting from zero:
+    *
+    *  - committed work = the table's `resume_key` column (report id +
+    *    link ordinal — [[resumeKeyOf]]); reading it is work-list-bounded,
+    *    the same driver-memory class as the documento work list itself;
+    *  - pending work = the selected work list minus committed keys,
+    *    ordinals from the FULL documento index so keys are stable across
+    *    attempts under ANY selection (an interrupted `--filter` run may
+    *    resume unfiltered and vice versa — [[resumeKeyOf]]); the scheme
+    *    is pinned by a `key-scheme` marker in the table root, so a table
+    *    committed under a different (or unmarked legacy) scheme fails
+    *    loudly instead of aliasing keys;
+    *  - nothing pending commits NO snapshot (no empty-snapshot growth on
+    *    a no-op resume), and the union of snapshots after any
+    *    interrupt/resume sequence equals a cold one-shot run's rows
+    *    (MstrJoinSpec).
+    *
+    * Returns the number of newly committed report rows.
+    */
   def resumeExtract(spark: SparkSession, pagesDs: Dataset[PageRow],
                     io: graft.pipeline.TableIO,
                     lang: String = "pt-BR",
@@ -632,8 +625,8 @@ object MstrJoinPipeline {
       // corpusFromPages rule), ≤10 rows return
       pass(spark, "indexes")
       val idxRows = urlHtml
-        .filter { case (url, _) => indexFiles.contains(fileName(url)) }
-        .map { case (url, html) => (fileName(url), (url, html)) }
+        .filter { case (url, _) => indexFiles.contains(basename(url)) }
+        .map { case (url, html) => (basename(url), (url, html)) }
         .reduceByKey((a, b) => if (a._1 >= b._1) a else b)
         .collect()
       val indexHtml: Map[String, String] =
@@ -765,9 +758,9 @@ object MstrJoinPipeline {
     // stage requests ever pay Latin-1 decode + parse. Every stage
     // reuses this layout; nothing page-sized moves again.
     val pagesByFile: RDD[(String, (String, Array[Byte]))] = urlHtml
-      .filter { case (url, _) => !indexFiles.contains(fileName(url)) }
+      .filter { case (url, _) => !indexFiles.contains(basename(url)) }
       .flatMap { case (url, html) =>
-        val f = fileName(url)
+        val f = basename(url)
         Iterator.single((f, (url, html))) ++
           (0 until hotFiles.getOrElse(f, 0)).iterator.map(s => (saltKey(f, s), (url, html)))
       }
@@ -887,37 +880,22 @@ object MstrJoinPipeline {
 
     val rOut = stage(reportReqRdd) { (soup, idx, rs) =>
       rs.flatMap { rq =>
-        val (_, reportId) = Soup.splitHref(rq.href)
+        val reportId = MstrSteps.reportIdOf(rq.href)
         if (reportId.isEmpty) Nil
         else {
-          val owner = MstrParsers.extractOwnerName(soup, loc, Some(reportId)).map { on =>
-            idx.pasta.findByName(on) match {
-              case Some(link) =>
-                val oid = link.anchor
-                Owner(on, oid, if (oid.nonEmpty) s"${link.file}#$oid" else link.file,
-                  Some(link.name), Some("owner"))
-              case None => Owner(on, "", "", None, Some("owner"))
-            }
-          }
-          val acl = MstrParsers.extractAccessRows(soup, loc, Some(reportId)).map {
-            case (userName, access) =>
-              idx.pasta.findByName(userName)
-                .orElse(idx.pasta.findUserByParenthesizedName(userName)) match {
-                case Some(link) =>
-                  val uid = link.anchor
-                  AccessControlEntry(userName, access, Some(link.name), Some(uid),
-                    Some(if (uid.nonEmpty) s"${link.file}#$uid" else link.file))
-                case None => AccessControlEntry(userName, access, None, None, None)
+          val r = MstrSteps.report(soup, idx, loc, rq.file, rq.name, reportId)
+          // fallback GUIDs seed from the PLAIN report id, while request
+          // and fragment rows carry the per-link group key
+          val groupKey = resumeKeyOf(rq)
+          Frag.of(groupKey, SkelFrag(rq.name, r.filePath, r.owner, r.acl)) +:
+            r.datasets.zipWithIndex.map { case ((dsName, dsId), ord) =>
+              MstrSteps.routeDataset(idx, reportId, dsName, dsId) match {
+                case Left(d) => Frag.of(groupKey,
+                  DsFrag(ord, d.name, d.id, d.filePath, d.applicationObject, d.graphic))
+                case Right(t) => Frag.req(Frag.KDs, t.file,
+                  DsReq(groupKey, ord, t.name, t.id, t.path, t.file, t.source))
               }
-          }
-          val groupKey = s"$reportId" + "\u0000" + rq.ord
-          val skel = Frag.of(groupKey, SkelFrag(
-            rq.name, s"${rq.file}#$reportId", owner, acl))
-          val dsInfo = MstrParsers.extractDatasetsFromReport(soup, loc, rq.name,
-            Some(reportId))
-          skel +: dsInfo.zipWithIndex.flatMap { case ((dsName, dsIdOpt, _), ord) =>
-            routeDataset(idx, groupKey, reportId, ord, dsName, dsIdOpt)
-          }
+            }
         }
       }
     }.persist(sl)
@@ -929,44 +907,30 @@ object MstrJoinPipeline {
     val rStats = probe(rOut)
     val dsReqRdd = reqRdd[DsReq](rOut, Frag.KDs)
 
+    def nodeFrag(rid: String, dsOrd: Int, pos: Seq[Int], m: Metrica): Frag =
+      Frag.of(rid, MetricNodeFrag(dsOrd, pos, m.name, m.id, m.filePath, m.tipo,
+        m.applicationObject, m.formula, m.function, m.fact))
+    def metricReq(rid: String, dsOrd: Int, pos: Seq[Int], dsId: String,
+                  t: MstrSteps.MetricTarget, path: Seq[String]): Frag = {
+      val (f, a) = splitPath(t.path)
+      Frag.req(Frag.KMetric, f, MetricReq(rid, dsOrd, pos, dsId, t.name, f, a, t.idOpt, path))
+    }
+
     // ---- stage D: dataset pages → template objects → attr/metric reqs ----
     val dOut = stage(dsReqRdd, measuredHot(rStats, Frag.KDs)) { (soup, idx, rs) =>
       rs.flatMap { rq =>
-        val isReport = MstrParsers.isReportDataset(soup, loc, rq.ds_id)
-        val (appObject, graphic, attrsInfo, metricsInfo) =
-          if (isReport) {
-            val g = MstrParsers.extractGraphicType(soup, loc, rq.ds_id)
-            val (a, m) = MstrParsers.extractTemplateObjectsReport(soup, loc, rq.ds_id)
-            (Some("Report"), g, a, m)
-          } else {
-            val ao = if (rq.source == "CuboInteligente") Some("CuboInteligente") else None
-            val (a, m) = MstrParsers.extractTemplateObjects(soup, loc, rq.ds_name,
-              Some(rq.ds_id))
-            (ao, None, a, m)
-          }
-        val dsFrag = Frag.of(rq.report_id, DsFrag(
-          rq.ds_ord, rq.ds_name, rq.ds_id, rq.ds_file, appObject, graphic))
-        val attrs = attrsInfo.zipWithIndex.flatMap { case (ai, i) =>
-          idx.atributo.findLink(ai.id, Some(ai.nameOnDataset)).map { link =>
-            Frag.req(Frag.KAttr, link.file, AttrReq(rq.report_id, rq.ds_ord, i, link.name,
-              ai.nameOnDataset, link.file, link.anchor, rq.ds_id))
-          }
+        val d = MstrSteps.datasetPage(soup, idx, loc, rq.ds_name, rq.ds_id, rq.source)
+        val attrs = d.attributes.zipWithIndex.map { case (at, i) =>
+          val (f, a) = splitPath(at.path)
+          Frag.req(Frag.KAttr, f, AttrReq(rq.report_id, rq.ds_ord, i, at.official,
+            at.nameOnDataset, f, a, rq.ds_id))
         }
-        val mets = metricsInfo.zipWithIndex.map { case (mi, i) =>
-          idx.metrica.findMetricLink(mi.nameOnDataset, mi.id) match {
-            case Some(link) =>
-              val anchorOpt = if (link.anchor.nonEmpty) Some(link.anchor) else mi.id
-              val (f, a) = splitPath(filePathOf(link))
-              Frag.req(Frag.KMetric, f, MetricReq(rq.report_id, rq.ds_ord, Seq(i),
-                rq.ds_id, link.name, f, a, anchorOpt, Nil))
-            case None =>
-              // embedded/derived metric (report_extractor.py:263-285)
-              Frag.of(rq.report_id, MetricNodeFrag(
-                rq.ds_ord, Seq(i), mi.nameOnDataset, mi.id.getOrElse(""), mi.href,
-                "embedded", Some("DerivedMetric"), None, None, None))
-          }
+        val mets = d.metrics.zipWithIndex.map {
+          case (Left(embedded), i) => nodeFrag(rq.report_id, rq.ds_ord, Seq(i), embedded)
+          case (Right(t), i) => metricReq(rq.report_id, rq.ds_ord, Seq(i), rq.ds_id, t, Nil)
         }
-        dsFrag +: (attrs ++ mets)
+        Frag.of(rq.report_id, DsFrag(rq.ds_ord, rq.ds_name, rq.ds_id, rq.ds_file,
+          d.applicationObject, d.graphic)) +: (attrs ++ mets)
       }
     }.persist(sl)
 
@@ -976,93 +940,33 @@ object MstrJoinPipeline {
     val dStats = probe(dOut)
     val nL1 = dStats.count(Frag.KAttr) + dStats.count(Frag.KMetric)
 
-    // ---- stage A body: attribute pages → forms (attribute_extractor.py);
-    // fused into the first level pass so attribute and metric pages are
-    // served by the same scan ----
-    def attrStage(soup: Soup, idx: MstrIndexes, rq: AttrReq): Frag = {
-      val attrId =
-        if (rq.anchor.nonEmpty) rq.anchor
-        else rq.file.replace(".html", "").replace("_1", "")
-      val fullPath = if (rq.anchor.nonEmpty) s"${rq.file}#${rq.anchor}" else rq.file
-      val forms = MstrParsers.extractAttributeForms(soup, loc,
-        Some(rq.anchor).filter(_.nonEmpty)).map { case (fn, lts) =>
-        val resolved = lts.map { lt =>
-          val link = idx.tabelaLogica.findLink(Some(lt.id), Some(lt.name))
-          lt.copy(filePath = link.map(filePathOf).orElse(lt.filePath))
-        }
-        Formulario(guid(s"${attrId}_$fn"), fn, resolved)
-      }
-      Frag.of(rq.report_id, AttrFrag(rq.ds_ord, rq.ord,
-        Atributo(rq.official, rq.name_on_ds, attrId, fullPath, rq.ds_id,
-          Some("Atributo"), forms)))
-    }
-
-    // ---- stage M (iterated): metric definitions + recursion frontier ----
-    def metricStage(soup: Soup, idx: MstrIndexes, rs: Seq[MetricReq]): Seq[Frag] =
-      rs.flatMap { rq =>
-        // cycle check on the branch path (extractor_helpers.py:19-38)
-        val cycleId = rq.id_opt.getOrElse(rq.anchor)
-        if (cycleId.nonEmpty && rq.path.contains(cycleId)) Nil
-        else {
-          val outId =
-            if (rq.anchor.nonEmpty) rq.anchor
-            else rq.file.replace(".html", "").replace("_1", "")
-          val fullPath = if (rq.anchor.nonEmpty) s"${rq.file}#${rq.anchor}" else rq.file
-          val defn = MstrParsers.extractMetricDefinition(soup, loc, rq.name,
-            Some(rq.anchor).filter(_.nonEmpty))
-          val tipo = if (defn.tipo.nonEmpty) defn.tipo else "simples"
-          if (tipo == "composto") {
-            val newPath = if (cycleId.nonEmpty) rq.path :+ cycleId else rq.path
-            // first-wins child dedup; deterministic corpus ⇒ equal to the
-            // engine's success-gated `added` set (a retried duplicate
-            // re-fails identically)
-            val added = mutable.Set.empty[String]
-            val kids = defn.childMetricIds.zipWithIndex.flatMap { case (cid, k) =>
-              if (added.contains(cid) || newPath.contains(cid)) None
-              else idx.metrica.findMetricLink("", Some(cid)).map { link =>
-                added += cid
-                val (f, a) = splitPath(filePathOf(link))
-                Frag.req(Frag.KMetric, f, MetricReq(rq.report_id, rq.ds_ord, rq.pos :+ k,
-                  rq.ds_id, link.name, f, a, Some(cid), newPath))
-              }
-            }
-            Frag.of(rq.report_id, MetricNodeFrag(rq.ds_ord,
-              rq.pos, rq.name, outId, fullPath, tipo, Some("Metrica"), defn.formula,
-              None, None)) +: kids
-          } else {
-            val function = defn.functionId.flatMap { fid =>
-              idx.funcao.findById(fid).map(l => FunctionRef(l.name, fid, filePathOf(l)))
-            }
-            val (fact, factReq) = defn.factId.flatMap { fid =>
-              idx.fato.findLink(Some(fid), None).map { l =>
-                val factPath = filePathOf(l)
-                val factId =
-                  if (factPath.contains("#")) factPath.split("#", 2)(1) else fid
-                val factAnchor =
-                  if (factPath.contains("#")) factPath.split("#", 2)(1) else ""
-                // default: missing fact page keeps the FactRef, tables empty
-                (Option(FactRef(l.name, factId, factPath, Nil)),
-                  Option(FactReq(rq.report_id, rq.ds_ord, rq.pos,
-                    factPath.split("#", 2)(0), factAnchor)))
-              }
-            }.getOrElse((None, None))
-            Frag.of(rq.report_id, MetricNodeFrag(rq.ds_ord,
-              rq.pos, rq.name, outId, fullPath, tipo, Some("Metrica"), defn.formula,
-              function, fact)) :: factReq.map(fr => Frag.req(Frag.KFact, fr.file, fr)).toList
-          }
-        }
-      }
-
     // ---- fused level loop: level 1 serves attribute AND first-level
     // metric requests from one scan; deeper levels carry the recursion
     // frontier. One job per level (the probe); frontier and fact
     // requests stay distributed RDD views over the persisted level
-    // caches — the driver only ever sees their COUNTS.
-    def fusedStage(soup: Soup, idx: MstrIndexes,
+    // caches — the driver only ever sees their COUNTS. A metric request
+    // carries its branch path, the engine's per-branch `visited` copy.
+    def levelStage(soup: Soup, idx: MstrIndexes,
                    rs: Seq[Either[AttrReq, MetricReq]]): Seq[Frag] =
       rs.flatMap {
-        case Left(a)  => Seq(attrStage(soup, idx, a))
-        case Right(m) => metricStage(soup, idx, Seq(m))
+        case Left(rq) =>
+          Seq(Frag.of(rq.report_id, AttrFrag(rq.ds_ord, rq.ord, MstrSteps.attribute(soup,
+            idx, loc, rq.official, rq.name_on_ds, rq.file, rq.anchor, rq.ds_id))))
+        case Right(rq) =>
+          val pathId = MstrSteps.pathId(rq.id_opt, rq.anchor)
+          if (pathId.exists(rq.path.contains)) Nil
+          else {
+            val path = rq.path ++ pathId
+            val s = MstrSteps.metric(soup, idx, loc, rq.name, rq.file, rq.anchor, rq.ds_id,
+              path.contains)
+            nodeFrag(rq.report_id, rq.ds_ord, rq.pos, s.node) +:
+              (s.children.zipWithIndex.map { case (t, k) =>
+                metricReq(rq.report_id, rq.ds_ord, rq.pos :+ k, rq.ds_id, t, path)
+              } ++ s.fact.map { t =>
+                Frag.req(Frag.KFact, t.file, FactReq(rq.report_id, rq.ds_ord, rq.pos, t.file,
+                  t.anchor))
+              })
+          }
       }
 
     var frontier: RDD[(String, Either[AttrReq, MetricReq])] =
@@ -1087,7 +991,7 @@ object MstrJoinPipeline {
     while (nFrontier > 0 && depth < 64) {
       depth += 1
       val out = stage(frontier,
-        measuredHot(frontierStats, Frag.KAttr, Frag.KMetric))(fusedStage).persist(sl)
+        measuredHot(frontierStats, Frag.KAttr, Frag.KMetric))(levelStage).persist(sl)
       persisted += out
       pass(spark, s"level $depth")
       val stats = probe(out)
@@ -1111,12 +1015,8 @@ object MstrJoinPipeline {
     val factFrags = stage(factReqRdd,
         measuredHot(factStats, Frag.KFact)) { (soup, idx, rs) =>
       rs.map { rq =>
-        val lts = MstrParsers.extractFactLogicTables(soup, loc,
-          Some(rq.anchor).filter(_.nonEmpty)).map { lt =>
-          val tl = idx.tabelaLogica.findLink(Some(lt.id), Some(lt.name))
-          lt.copy(filePath = tl.map(filePathOf))
-        }
-        Frag.of(rq.report_id, FactFrag(rq.ds_ord, rq.pos, lts))
+        Frag.of(rq.report_id,
+          FactFrag(rq.ds_ord, rq.pos, MstrSteps.factTables(soup, idx, loc, rq.anchor)))
       }
     }
 
@@ -1302,34 +1202,4 @@ object MstrJoinPipeline {
                                                measuredHot: Set[String], layoutBuilds: Int)
   private[graft] val lastRouting =
     new java.util.concurrent.atomic.AtomicReference(RoutingTrace(Set.empty, Set.empty, 0))
-
-  /** Pre-file dataset routing — extractDataset's index-only prefix
-    * (dataset_extractor.py:21-143): unresolved → empty dataset with
-    * deterministic fallback id; Shortcut → terminal dataset; else a
-    * request against the dataset's content file.
-    */
-  private def routeDataset(idx: MstrIndexes, groupKey: String, reportId: String,
-                           ord: Int, dsName: String,
-                           dsIdOpt: Option[String]): Seq[Frag] = {
-    val dsId0 = dsIdOpt.getOrElse("")
-    // fallback GUIDs seed from the PLAIN report id (engine parity), while
-    // request/fragment rows carry the per-link group key
-    MstrIndexes.resolveDatasetLink(idx, Some(dsId0).filter(_.nonEmpty), Some(dsName)) match {
-      case None =>
-        val id = if (dsId0.nonEmpty) dsId0 else guid(s"$reportId:$dsName")
-        Seq(Frag.of(groupKey, DsFrag(ord, dsName, id, "", Some(""), None)))
-      case Some((dsFile, source)) =>
-        var dsId = dsId0
-        if (dsId.isEmpty && dsFile.contains("#")) dsId = dsFile.split("#", 2)(1)
-        if (dsId.isEmpty) dsId = guid(s"$reportId:$dsName")
-        if (source == "Shortcut")
-          Seq(Frag.of(groupKey, DsFrag(ord, dsName, dsId, dsFile,
-            Some("Shortcut"), None)))
-        else {
-          val file = dsFile.split("#", 2)(0)
-          Seq(Frag.req(Frag.KDs, file,
-            DsReq(groupKey, ord, dsName, dsId, dsFile, file, source)))
-        }
-    }
-  }
 }

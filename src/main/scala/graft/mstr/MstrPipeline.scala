@@ -28,9 +28,10 @@ final case class ReportJsonRow(report_id: String, name: String,
   * Scale note: index + content dims here are the small side by
   * construction (the reference's corpus is a bounded documentation
   * export); the 10^12-row side is the generic pages table handled by
-  * ExtractPipeline. If a corpus's content files outgrew broadcast, the
-  * row-local parsers above feed the join-based plan instead (each
-  * artifact extracted per-page, joined on id) — the parsers are shared.
+  * ExtractPipeline. A corpus whose content files outgrow broadcast runs
+  * the join-based plan ([[MstrJoinPipeline]]) instead. Both plans drive
+  * the same entity steps ([[MstrSteps]]), so they share every
+  * extraction decision and differ only in how pages meet requests.
   */
 object MstrPipeline {
 
@@ -42,10 +43,7 @@ object MstrPipeline {
     * corpora with repeated file names.
     */
   def corpusFromPages(pages: Seq[PageRow]): Map[String, String] =
-    pages.sortBy(_.url).map { p =>
-      val name = p.url.substring(p.url.lastIndexOf('/') + 1)
-      name -> TextOps.decodeLatin1(p.html)
-    }.toMap
+    pages.sortBy(_.url).map(p => MstrSteps.basename(p.url) -> TextOps.decodeLatin1(p.html)).toMap
 
   def buildIndexes(corpus: Map[String, String], loc: MstrLocale): MstrIndexes = {
     def idx(file: String): LinkIndex =
@@ -59,9 +57,6 @@ object MstrPipeline {
       pasta = idx(loc.pasta))
   }
 
-  /** Distributed extraction: report work-list → Dataset[ReportJsonRow].
-    * Dims + content broadcast; reports spread by hash of id.
-    */
   /** Shared distribution scaffold for every per-report pass: broadcast
     * corpus + indexes once, spread the (possibly narrowed) work list,
     * and run `f` against a per-partition engine (per-partition parse
@@ -91,6 +86,9 @@ object MstrPipeline {
     }
   }
 
+  /** Distributed extraction: report work-list → Dataset[ReportJsonRow].
+    * Dims + content broadcast; reports spread by hash of id.
+    */
   def run(spark: SparkSession, pages: Seq[PageRow], lang: String = "pt-BR",
           numPartitions: Int = 0,
           envId: String = GraphFlatten.DefaultEnvId,

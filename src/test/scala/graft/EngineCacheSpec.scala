@@ -114,4 +114,25 @@ class EngineCacheSpec extends AnyFunSuite {
 
     dualPlanEqual(corpus)
   }
+
+  test("composite children: a repeated child id expands once, a child with no page drops") {
+    // Margem lists Custo a second time, and Custo's page is gone: the
+    // repeat must not expand again (first-wins per id) and the missing
+    // child must drop in both plans, whatever gates the first-wins set
+    val custoLink = """<img src="images/Metric.bmp">""" +
+      s"""<a href="MetricaCUSTO_1.html#${ph(MstrCorpus.CUSTOID)}">Custo</a>"""
+    val base = MstrCorpus.margemHtml
+    assert(base.contains(custoLink), "fixture surgery anchor moved")
+    val margem = base.replace(custoLink, s"$custoLink / $custoLink")
+    val corpus = (MstrCorpus.corpus - "MetricaCUSTO_1.html").updated("MetricaMARGEM_1.html", margem)
+
+    val reports = engineFor(corpus).extractAllReports()
+    val onCubo = reports.flatMap(_.datasets).find(_.id == MstrCorpus.CUBOID).get
+    val top = onCubo.metricas.find(_.id == MstrCorpus.MARGEMID).get
+    assert(top.tipo == "composto")
+    assert(top.metricas.map(_.id) == List(MstrCorpus.RECTOTID),
+      "the repeated Receita Total expands once and the page-less Custo drops")
+    dualPlanEqual(corpus)
+  }
 }
+

@@ -6,7 +6,7 @@ import graft.mstr.{MstrJoinPipeline, MstrPipeline}
 
 /** The join-based plan (unbounded-corpus path: distributed pages,
   * staged request joins) must produce byte-identical report JSON to the
-  * broadcast-corpus plan — same parsers, different physical strategy.
+  * broadcast-corpus plan — same entity steps, different physical strategy.
   */
 class MstrJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -412,5 +412,57 @@ class MstrJoinSpec extends AnyFunSuite {
     }
     val out = MstrJoinPipeline.run(spark, spark.createDataset(indexOnly), "pt-BR")
     assert(out.collect().isEmpty)
+  }
+
+  test("missing content pages: both plans drop the same entity; a missing fact page keeps its FactRef") {
+    import spark.implicits._
+    import graft.mstr.{JsonExport, Metrica, MstrEngine, MstrLocale, Relatorio, Soup}
+    import MstrCorpus._
+    def extract(corpus: Map[String, String]): List[Relatorio] = {
+      val loc = MstrLocale.ptBR
+      new MstrEngine(MstrPipeline.buildIndexes(corpus, loc), corpus.get(_).map(Soup.parse), loc)
+        .extractAllReports()
+    }
+    def dsIds(rs: Seq[Relatorio]): Seq[String] = rs.flatMap(_.datasets).map(_.id)
+    def metrics(rs: Seq[Relatorio]): Seq[Metrica] = {
+      def all(m: Metrica): Seq[Metrica] = m +: m.metricas.flatMap(all)
+      rs.flatMap(_.datasets).flatMap(_.metricas).flatMap(all)
+    }
+    val full = extract(corpus)
+    // each dropped page's entity is present in the full corpus
+    assert(dsIds(full).contains(RELAUXID))
+    assert(full.flatMap(_.datasets).exists(_.atributos.nonEmpty))
+    assert(metrics(full).exists(_.id == RECTOTID))
+    assert(metrics(full).flatMap(_.fact).exists(_.logicTables.nonEmpty))
+    val cases: Seq[(String, Seq[Relatorio] => Unit)] = Seq(
+      "RelAux_1.html" -> { rs =>
+        assert(dsIds(rs) == dsIds(full).filterNot(_ == RELAUXID), "dataset page missing")
+      },
+      "Atributo_1.html" -> { rs =>
+        assert(dsIds(rs) == dsIds(full), "attribute page missing: datasets stay")
+        assert(rs.flatMap(_.datasets).forall(_.atributos.isEmpty), "attribute page missing")
+      },
+      "MetricaRT_1.html" -> { rs =>
+        assert(metrics(rs).map(_.id).toSet == metrics(full).map(_.id).toSet - RECTOTID,
+          "metric page missing")
+      },
+      "Fato_1.html" -> { rs =>
+        val facts = metrics(rs).flatMap(_.fact)
+        assert(facts.size == metrics(full).flatMap(_.fact).size, "fact page missing: FactRefs stay")
+        assert(facts.nonEmpty && facts.forall(f => f.id == RECFACTID && f.logicTables.isEmpty),
+          "fact page missing: logicTables must be empty")
+      })
+    cases.foreach { case (page, shape) =>
+      val c = corpus - page
+      val rs = extract(c)
+      shape(rs)
+      val pages = pagesOf(c)
+      val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
+        .collect().map(r => r.report_id -> r.json).toMap
+      assert(viaBroadcast == rs.map(r => r.id -> JsonExport.exportOne(r)).toMap)
+      val viaJoin = MstrJoinPipeline.run(spark, spark.createDataset(pages).repartition(3), "pt-BR")
+        .collect().map(r => r.report_id -> r.json).toMap
+      assert(viaJoin == viaBroadcast, s"plans diverged with $page missing")
+    }
   }
 }
