@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.JobLog
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -19,7 +20,8 @@ import org.apache.spark.sql.functions._
   * ops do real removal work, not no-op hashing.
   *
   * Prints ONE JSON line: rows, wall seconds and docs/sec per op,
-  * best-of-N reps (VM-steal protocol).
+  * best-of-N reps (VM-steal protocol), after `PROFSTAGE` lines for
+  * each op's best rep.
   */
 object DedupScaleBench {
   private val vocab = Array(
@@ -84,46 +86,19 @@ object DedupScaleBench {
       .selectExpr("sum(length(text))").collect()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // GRAFT_SCALE_PROF=1: per-stage task stats for the LAST rep of each
-    // op (count, sum, max, median task seconds + GC share) — separates
-    // "skewed stage" from "uniformly bandwidth-bound stage" when a leg's
-    // N→4N efficiency sits under the shuffle-floor control's.
-    val prof = sys.env.get("GRAFT_SCALE_PROF").contains("1")
-    val stageStats = new java.util.concurrent.ConcurrentHashMap[
-      Int, scala.collection.mutable.ArrayBuffer[(Double, Double)]]()
-    @volatile var record = false
-    if (prof) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (record && t.taskMetrics != null) {
-            val buf = stageStats.computeIfAbsent(t.stageId,
-              _ => scala.collection.mutable.ArrayBuffer.empty)
-            buf.synchronized {
-              buf += ((t.taskMetrics.executorRunTime / 1e3,
-                t.taskMetrics.jvmGCTime / 1e3))
-            }
-          }
-      })
-    def dumpProf(op: String): Unit = if (prof) {
-      stageStats.forEach { (sid, buf) =>
-        val d = buf.map(_._1).sorted
-        val gc = buf.map(_._2).sum
+    // every rep runs under a JobLog; the best rep's per-stage task
+    // stats (count, sum, max, median task seconds + GC) separate a
+    // "skewed stage" from a "uniformly bandwidth-bound stage" when a
+    // leg's N→4N efficiency sits under the shuffle-floor control's
+    def time(op: String)(job: => Unit): Double = {
+      val best = (1 to reps).map(_ => JobLog.record(spark, op)(job)._2).minBy(_.wallS)
+      best.tasks.groupBy(_.stageId).toSeq.sortBy(_._1).foreach { case (sid, ts) =>
+        val d = ts.map(_.runMs / 1e3).sorted
         println(f"PROFSTAGE $op stage=$sid tasks=${d.size} " +
           f"sum=${d.sum}%.1f max=${d.last}%.2f med=${d(d.size / 2)}%.2f " +
-          f"gc_sum=$gc%.1f")
+          f"gc_sum=${ts.map(_.gcMs).sum / 1e3}%.1f")
       }
-      stageStats.clear()
-    }
-    def time(job: () => Unit): Double = {
-      val walls = (1 to reps).map { i =>
-        record = prof && i == reps
-        val t0 = System.nanoTime()
-        job()
-        (System.nanoTime() - t0) / 1e9
-      }
-      record = false
-      walls.min
+      best.wallS
     }
     // materialize via an aggregate that survives column pruning: the
     // digest length forces the per-doc REBUILD + md5 (the op's whole
@@ -136,10 +111,8 @@ object DedupScaleBench {
     drain(graft.ops.DedupOps.spanDedup(spark, dir), "n_removed")
     drain(graft.ops.DedupOps.paraDedup(spark, dir), "n_kept")
 
-    val spanWall = time(() => drain(graft.ops.DedupOps.spanDedup(spark, dir), "n_removed"))
-    dumpProf("span")
-    val paraWall = time(() => drain(graft.ops.DedupOps.paraDedup(spark, dir), "n_kept"))
-    dumpProf("para")
+    val spanWall = time("span")(drain(graft.ops.DedupOps.spanDedup(spark, dir), "n_removed"))
+    val paraWall = time("para")(drain(graft.ops.DedupOps.paraDedup(spark, dir), "n_kept"))
     val spanRate = nDocs / spanWall
     val paraRate = nDocs / paraWall
     println(f"""{"bench":"dedup_scale","cpus":$cpus,"docs":$nDocs,"span_wall_s":$spanWall%.2f,"span_docs_per_s":$spanRate%.0f,"para_wall_s":$paraWall%.2f,"para_docs_per_s":$paraRate%.0f,"reps":$reps}""")

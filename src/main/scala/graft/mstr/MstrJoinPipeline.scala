@@ -63,13 +63,12 @@ object MstrJoinPipeline {
 
   /** Hot-file request routing: `Adaptive` salts the files either
     * detector finds hot (planning-time link counts, probe-measured
-    * request counts), `StaticOnly` only the planning-time ones, `Off`
-    * none. Output is identical under all three (the A/B baselines).
+    * request counts), `Off` none (the A/B baseline). Output is
+    * identical under both.
     */
   private[graft] sealed trait Routing
   private[graft] object Routing {
     case object Adaptive extends Routing
-    case object StaticOnly extends Routing
     case object Off extends Routing
   }
 
@@ -401,10 +400,9 @@ object MstrJoinPipeline {
     * (stage F's stats accumulate a little KFact across metric-dominated
     * levels). The request frag's `report_id` slot carries the target
     * file, so this rides the probe's existing pass with no payload
-    * deserialization and no extra job. `trackFiles=false` (a
-    * [[Routing]] without the measured detector) skips the sketches
-    * entirely so an A/B "before" leg carries none of the detector's
-    * cost.
+    * deserialization and no extra job. `trackFiles=false` (routing
+    * `Off`) skips the sketches entirely so an A/B "before" leg carries
+    * none of the detector's cost.
     */
   final class ProbeStats(val cap: Int, val trackFiles: Boolean = true)
       extends Serializable {

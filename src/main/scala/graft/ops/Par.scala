@@ -51,9 +51,6 @@ object Par {
     */
   def spread(df: DataFrame, dir: String, name: String = "documents",
              key: String = "doc_id"): DataFrame = {
-    // measurement kill-switch (graft.BenchExtra A/B harness only —
-    // never set outside benchmarking)
-    if (sys.props.contains("graft.par.off")) return df
     val spark = df.sparkSession
     val n = spark.sparkContext.defaultParallelism
     if (scanSplits(spark, s"$dir/$name.parquet") >= n) df

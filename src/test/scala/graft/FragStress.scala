@@ -1,7 +1,8 @@
 package graft
 
-/** Multi-threaded stress reproduction harness for the Frag kryo wire
-  * format (Test/runMain graft.FragStress): hammers Frag.of/Frag.read
+/** Multi-threaded stress harness for the Frag wire format, the
+  * hand-rolled `DataOutput` payload codec in `MstrJoinPipeline.Frag`
+  * (Test/runMain graft.FragStress): hammers Frag.of/Frag.read
   * from many threads with the real payload classes, interleaving
   * writes and reads per thread, and fails loudly on any round-trip
   * mismatch or deserialization error. Measurement-only tooling.
@@ -14,8 +15,8 @@ object FragStress {
     val errs = new java.util.concurrent.atomic.AtomicInteger(0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     // cross-thread exchange: blobs written by one thread are read by
-    // whichever thread polls them next (the shuffle shape) — each
-    // reader's serializer has its own prior read/write history
+    // whichever thread polls them next (the shuffle shape), so any
+    // state a codec shared across threads would surface as a mismatch
     val xchg = new java.util.concurrent.ConcurrentLinkedQueue[(AnyRef, AnyRef)]()
     val t0 = System.nanoTime()
     (1 to threads).foreach { t =>

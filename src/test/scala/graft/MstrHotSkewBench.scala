@@ -1,7 +1,7 @@
 package graft
 
+import graft.obs.JobLog
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Hot-basename skew probe for the join-based MSTR plan
   * (Test/runMain graft.MstrHotSkewBench): generates a corpus whose
@@ -18,20 +18,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * hot — `hot` packs all cube SECTIONS in one file so the skew is
   * index-visible; `fanin` points every report at ONE shared cube
   * section so the skew is request-traffic-only and invisible to
-  * planning-time link counts; `even` is the control), MSTR_HOT=0 is a
-  * legacy alias for MSTR_SHAPE=even, MSTR_ROUTING (adaptive | static
-  * | off, default adaptive) picks the join plan's hot-file routing:
-  * `static` drops only the measured (probe-counted) hot detection,
-  * `off` all salted request routing (the before/after comparison
-  * levers).
+  * planning-time link counts; `even` is the control), MSTR_ROUTING
+  * (adaptive | off, default adaptive) picks the join plan's hot-file
+  * routing: `off` drops all salted request routing (the before/after
+  * comparison lever).
   */
 object MstrHotSkewBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("MSTR_GEN_N", "20000").toInt
     val cores = sys.env.getOrElse("MSTR_CORES", "8").toInt
     val reps = sys.env.getOrElse("MSTR_REPS", "2").toInt
-    val shape = sys.env.getOrElse("MSTR_SHAPE",
-      if (sys.env.get("MSTR_HOT").contains("0")) "even" else "hot")
+    val shape = sys.env.getOrElse("MSTR_SHAPE", "hot")
     // a typo'd shape must fail, not silently benchmark the even layout
     // under the requested label
     require(Set("hot", "even", "fanin").contains(shape),
@@ -40,10 +37,9 @@ object MstrHotSkewBench {
     val routingName = sys.env.getOrElse("MSTR_ROUTING", "adaptive")
     val routing = routingName match {
       case "adaptive" => Routing.Adaptive
-      case "static"   => Routing.StaticOnly
       case "off"      => Routing.Off
       case other =>
-        throw new IllegalArgumentException(s"MSTR_ROUTING must be adaptive|static|off, got '$other'")
+        throw new IllegalArgumentException(s"MSTR_ROUTING must be adaptive|off, got '$other'")
     }
     val hot = shape == "hot"
     val fanIn = shape == "fanin"
@@ -60,30 +56,20 @@ object MstrHotSkewBench {
       s"largest file ${maxFile.url} = ${maxFile.html.length / 1024} KiB, " +
       s"cores=$cores shape=$shape routing=$routingName")
 
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) taskMs.add(e.taskMetrics.executorRunTime)
-    })
-
-    val walls = (1 to reps).map { _ =>
-      taskMs.clear()
-      val t0 = System.nanoTime()
-      val res = graft.mstr.MstrJoinPipeline.run(spark,
-        spark.createDataset(pages).repartition(cores), "pt-BR",
-        internalShufflePartitions = cores, routing = routing)
-      val c = res.count()
-      val wall = (System.nanoTime() - t0) / 1e9
+    val (rows, log) = (1 to reps).map { _ =>
+      val ((res, c), log) = JobLog.record(spark, "mstr_hot_skew") {
+        val res = graft.mstr.MstrJoinPipeline.run(spark,
+          spark.createDataset(pages).repartition(cores), "pt-BR",
+          internalShufflePartitions = cores, routing = routing)
+        (res, res.count())
+      }
       res.unpersist(blocking = false)
-      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-      import scala.jdk.CollectionConverters._
-      val secs = taskMs.asScala.map(_ / 1e3).toSeq.sorted
-      (wall, c, secs)
-    }
-    val (wall, rows, secs) = walls.minBy(_._1)
-    val mx = if (secs.nonEmpty) secs.last else 0.0
-    val md = if (secs.nonEmpty) secs(secs.length / 2) else 0.0
-    println(f"""{"metric":"mstr_hot_skew","shape":"$shape","routing":"$routingName","rows":$rows,"wall_sec":$wall%.2f,"tasks":${secs.length},"task_sec_max":$mx%.2f,"task_sec_median":$md%.3f,"straggler_ratio":${if (md > 0) mx / md else 0.0}%.1f,"cores":$cores,"n":$n}""")
+      (c, log)
+    }.minBy(_._2.wallS)
+    val secs = log.runS
+    val mx = secs.lastOption.getOrElse(0.0)
+    val md = JobLog.median(secs)
+    println(f"""{"metric":"mstr_hot_skew","shape":"$shape","routing":"$routingName","rows":$rows,"wall_sec":${log.wallS}%.2f,"tasks":${secs.length},"task_sec_max":$mx%.2f,"task_sec_median":$md%.3f,"straggler_ratio":${if (md > 0) mx / md else 0.0}%.1f,"cores":$cores,"n":$n}""")
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fixtures.MstrCorpus
 import graft.mstr.{MstrJoinPipeline, MstrPipeline}
+import graft.obs.JobLog
 
 /** The join-based plan (unbounded-corpus path: distributed pages,
   * staged request joins) must produce byte-identical report JSON to the
@@ -201,33 +202,19 @@ class MstrJoinSpec extends AnyFunSuite {
 
   test("hot-cube corpus: routing adds no stage beyond the replica-layout builds") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
     import MstrJoinPipeline.Routing
-    val sc = spark.sparkContext
     val pages = graft.fixtures.MstrGen.pages(400, hotCubes = true)
     val viaBroadcast = MstrPipeline.run(spark, pages, "pt-BR")._1
       .collect().map(r => r.report_id -> r.json).toMap
-    // stages the run executed (skipped stages never submit), counted
-    // by this run's job group after the listener bus drains
+    // stages the run executed (skipped stages never submit)
     def stagesOf(routing: Routing): (Int, Map[String, String]) = {
-      val group = s"mstr-stages-${java.util.UUID.randomUUID()}"
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            stages.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "mstr join stage count")
-      val out = try {
-        val ds = MstrJoinPipeline.run(spark, spark.createDataset(pages).repartition(4),
+      val (out, log) = JobLog.record(spark, "mstr join stage count") {
+        MstrJoinPipeline.run(spark, spark.createDataset(pages).repartition(4),
           "pt-BR", routing = routing)
-        org.apache.spark.TestListenerBus.drain(sc)
-        ds
-      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      }
       val json = out.collect().map(r => r.report_id -> r.json).toMap
       out.unpersist(blocking = false)
-      (stages.get, json)
+      (log.stages.size, json)
     }
     val (offStages, viaOff) = stagesOf(Routing.Off)
     val (adaptiveStages, viaAdaptive) = stagesOf(Routing.Adaptive)
@@ -245,7 +232,6 @@ class MstrJoinSpec extends AnyFunSuite {
 
   test("a run restores the caller's AQE setting and job description, and names its passes") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val key = "spark.sql.adaptive.enabled"
     val pagesDs = spark.createDataset(MstrCorpus.pages).repartition(4)
@@ -253,20 +239,15 @@ class MstrJoinSpec extends AnyFunSuite {
     // read from getAll (explicit settings only)
     def aqe: (Option[String], Boolean) =
       (spark.conf.getOption(key), spark.conf.getAll.contains(key))
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(descs.add)
-    }
     val original = spark.conf.getAll.get(key)
-    sc.addSparkListener(listener)
     try {
       spark.conf.unset(key)
       val unset = aqe
       assert(!unset._2)
       sc.setJobDescription("caller description")
-      MstrJoinPipeline.run(spark, pagesDs).unpersist(blocking = false)
+      val log = JobLog.record(spark, "mstr join passes") {
+        MstrJoinPipeline.run(spark, pagesDs).unpersist(blocking = false)
+      }._2
       assert(aqe == unset, "an unset AQE key must stay unset, not become an explicit default")
       assert(sc.getLocalProperty("spark.job.description") == "caller description")
       sc.setJobDescription(null)
@@ -276,14 +257,11 @@ class MstrJoinSpec extends AnyFunSuite {
         assert(aqe == (Some(v), true), s"explicit AQE setting $v was not restored")
       }
       assert(sc.getLocalProperty("spark.job.description") == null)
-      org.apache.spark.TestListenerBus.drain(sc)
-      import scala.jdk.CollectionConverters._
-      val named = descs.asScala.toSet
+      val named = log.jobs.flatMap(_.description).toSet
       Seq("indexes", "stage R", "stage D", "level 1", "assembly").foreach { p =>
         assert(named.contains(s"mstr join: $p"), s"no job named 'mstr join: $p' in $named")
       }
     } finally {
-      sc.removeSparkListener(listener)
       sc.setJobDescription(null)
       original.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }

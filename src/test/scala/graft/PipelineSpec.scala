@@ -451,24 +451,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a commit runs exactly one Spark job: the write") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    // counts only this thread's jobs, by job group, so nothing another
-    // suite left running can leak into the figure
-    def jobsOf(body: => Unit): Int = {
-      val group = s"commit-jobs-${java.util.UUID.randomUUID()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "commit job count")
-      try { body; org.apache.spark.TestListenerBus.drain(sc) }
-      finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-      jobs.get
-    }
+    // the log holds only the jobs this body ran (its own job tag), so
+    // nothing another suite left running can leak into the figure
+    def jobsOf(body: => Unit): Int = graft.obs.JobLog.record(spark, "commit")(body)._2.jobs.size
     val pages = spark.createDataset(WebCorpus.generate(20).map(_.page))
     val docs = new TableIO(java.nio.file.Files.createTempDirectory("graft-jobs-docs").toString)
     assert(jobsOf(TableIO.resumeExtract(docs, pages)) == 1)

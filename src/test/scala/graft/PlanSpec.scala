@@ -216,4 +216,27 @@ class PlanSpec extends AnyFunSuite {
     val shared2 = key(graft.ops.SimilarityOps.bruteForceTopKShared(spark, dir))
     assert(fresh.nonEmpty && fresh == shared1 && shared1 == shared2)
   }
+
+  test("Par.spread: one doc_id exchange below the session's parallelism, none at it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-par").toString
+    spark.range(4000).selectExpr("id AS doc_id", "sha2(CAST(id AS STRING), 256) AS text")
+      .coalesce(1).write.parquet(s"$tmp/documents.parquet")
+    val len = new java.io.File(s"$tmp/documents.parquet").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    val n = spark.sparkContext.defaultParallelism
+    assert(n > 1, "sanity: the probe needs a parallel session")
+    val key = "spark.sql.files.maxPartitionBytes"
+    def spreadPlan(maxSplit: Long): String = {
+      val prev = spark.conf.getAll.get(key)
+      spark.conf.set(key, maxSplit.toString)
+      try graft.ops.Par.spread(spark.read.parquet(s"$tmp/documents.parquet"), tmp)
+        .queryExecution.executedPlan.toString
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    // ceil(len / maxSplit) scan splits: n - 1 of them, then n
+    val below = spreadPlan((len + n - 2) / (n - 1))
+    assert("Exchange".r.findAllIn(below).size == 1 &&
+      s"Exchange hashpartitioning\\(doc_id#\\d+L, $n\\)".r.findFirstIn(below).isDefined, below)
+    assert(!spreadPlan(len / n).contains("Exchange"))
+  }
 }
