@@ -601,14 +601,8 @@ object MstrJoinPipeline {
     // the pages Dataset-to-RDD lineage is re-executed, and the staged
     // passes shuffle outside Catalyst, so there is nothing for it to
     // re-plan — scope it off for the whole run (shuffle WIDTH is left
-    // untouched). An unset key stays unset afterwards (getAll holds
-    // only explicit settings; getOption would report the default).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.getAll.get(aqeKey)
-    val sc = spark.sparkContext
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    spark.conf.set(aqeKey, "false")
-    try {
+    // untouched); the caller's setting and job description come back
+    graft.obs.Scoped(spark, None, "spark.sql.adaptive.enabled" -> "false") {
       // ONE pruned conversion of the pages table feeds everything: the
       // index collect below and the basename layout (url + html only —
       // the column pruning survives into the RDD because the projection
@@ -632,12 +626,6 @@ object MstrJoinPipeline {
 
       runScoped(spark, urlHtml, lang, workOf, indexHtml,
         internalShufflePartitions, routing)(project)(implicitly, enc)
-    } finally {
-      prevAqe match {
-        case Some(v) => spark.conf.set(aqeKey, v)
-        case None    => spark.conf.unset(aqeKey)
-      }
-      sc.setJobDescription(callerDesc)
     }
   }
 

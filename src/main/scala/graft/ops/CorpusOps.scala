@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.obs.Scoped
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -540,14 +541,9 @@ object CorpusOps {
     import spark.implicits._
 
     // label each phase's jobs (guide §1.5) — the resume path is many
-    // small driver actions and an unlabeled UI/timeline is unreadable
-    val outerDesc = spark.sparkContext.getLocalProperty("spark.job.description")
-    def labeled[T](desc: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(desc)
-      try f finally spark.sparkContext.setJobDescription("e2e: setup")
-    }
-    spark.sparkContext.setJobDescription("e2e: setup")
-    try {
+    // small driver actions and an unlabeled UI/timeline is unreadable;
+    // jobs outside a named phase run as "e2e: setup"
+    Scoped(spark, Some("e2e: setup")) {
 
     // ---- stage E: extraction, per-url incremental ----
     val extractIo = new graft.pipeline.TableIO(s"$tableRoot/extracted")
@@ -560,7 +556,7 @@ object CorpusOps {
     // (a no-op resume must not grow the manifest by an empty snapshot).
     val livePages = docs(spark, dir).select(col("doc_id"),
       ExtractOps.docUrlCol(col("doc_id")).as("url"))
-    if (labeled("e2e: extract pending probe")(
+    if (Scoped(spark, Some("e2e: extract pending probe"))(
         extractIo.hasPending(livePages, "url"))) {
       val pendingIds = extractIo.pending(livePages, "url")
         .select(col("doc_id"))
@@ -568,7 +564,7 @@ object CorpusOps {
       try {
         val todoDir = docs(spark, dir).join(pendingIds, Seq("doc_id"))
         val todoPages = ExtractOps.documentsAsPagesOf(todoDir)
-        labeled("e2e: extract append")(extractIo.appendSnapshot(
+        Scoped(spark, Some("e2e: extract append"))(extractIo.appendSnapshot(
           graft.pipeline.ExtractPipeline.run(todoPages, "utf-8").toDF()))
       } finally pendingIds.unpersist(blocking = false)
     }
@@ -607,12 +603,12 @@ object CorpusOps {
       // keys-only no-op probe, as in stage E: the doc_id anti-join
       // prunes the text column out of both scans and skips pending()'s
       // payload re-join entirely on the steady path
-      if (labeled("e2e: decisions pending probe")(
+      if (Scoped(spark, Some("e2e: decisions pending probe"))(
           decisionsIo.hasPending(training, "doc_id"))) {
         val todoDocs = decisionsIo.pending(training, "doc_id")
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          labeled("e2e: decisions append")(
+          Scoped(spark, Some("e2e: decisions append"))(
             decisionsIo.appendSnapshot(filterPipelineOver(spark, dir, todoDocs)))
         } finally todoDocs.unpersist(blocking = false)
       }
@@ -641,7 +637,7 @@ object CorpusOps {
         packSequencesOf(extracted.join(kept, Seq("doc_id")))
       }
     } finally extracted.unpersist(blocking = false)
-    } finally spark.sparkContext.setJobDescription(outerDesc)
+    }
   }
 
   /** Connected-component labels over the extracted corpus' LSH band
@@ -731,46 +727,41 @@ object CorpusOps {
     ccIo.readTable(spark).get
   }
 
-  /** Metadata-only staleness key for a stage whose output is a
-    * deterministic function of (extracted content, a committed table's
-    * content): the extracted manifest key mixed with the md5 of the
-    * table's live manifest. Snapshot dirs are immutable and the
-    * manifest names exactly the visible set, so equal manifest ⟺ equal
-    * table content; no Spark job runs.
+  /** md5 of the live manifest bytes of the committed table at `root`
+    * (of no bytes while it has none), the one digest behind every
+    * metadata-only staleness key here. Snapshot dirs are immutable and
+    * the manifest names exactly the visible set, so equal manifest ⟺
+    * equal table content; no Spark job runs.
     */
-  private def upstreamKey(extractedFp: Long, io: graft.pipeline.TableIO): Long = {
-    val manifest = java.nio.file.Paths.get(io.root, "manifest.json")
-    val bytes =
-      if (java.nio.file.Files.exists(manifest))
-        java.nio.file.Files.readAllBytes(manifest)
-      else Array.empty[Byte]
-    val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-    val h = java.nio.ByteBuffer.wrap(d).getLong
-    extractedFp * 1000003L ^ h
+  private def manifestMd5(root: String): Array[Byte] = {
+    val m = java.nio.file.Paths.get(root, "manifest.json")
+    java.security.MessageDigest.getInstance("MD5").digest(
+      if (java.nio.file.Files.exists(m)) java.nio.file.Files.readAllBytes(m)
+      else Array.emptyByteArray)
   }
 
-  /** Metadata-only content key for a committed table: md5 of the live
-    * manifest as a Long (internal staleness key only, never
-    * oracle-compared). Snapshot dirs are immutable and the manifest
-    * names exactly the visible set, so equal key ⟹ equal table
-    * content; no Spark job runs (r6 — replaces the content-fingerprint
-    * aggregation the steady-state resume paid every run, guide §1.2).
-    * Absent or all-empty table → 0, preserving the old fingerprint's
-    * "empty input ⟺ key 0" convention that [[stageTable]]'s
-    * empty-committed-table case relies on (a nonzero digest is nudged
-    * off the sentinel).
+  /** Content key for a committed table: its manifest digest as a Long
+    * (internal staleness key, never oracle-compared; r6 — replaces the
+    * content-fingerprint aggregation the steady-state resume paid every
+    * run). Absent or all-empty table → 0, the "empty input ⟺ key 0"
+    * convention [[stageTable]]'s empty-committed-table case relies on
+    * (a nonzero digest is nudged off the sentinel).
     */
   private def manifestKey(io: graft.pipeline.TableIO): Long = {
     val snaps = io.snapshots()
     if (snaps.isEmpty || snaps.forall(_.rows == 0L)) 0L
     else {
-      val bytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(io.root, "manifest.json"))
-      val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
-      val h = java.nio.ByteBuffer.wrap(d).getLong
+      val h = java.nio.ByteBuffer.wrap(manifestMd5(io.root)).getLong
       if (h == 0L) 1L else h
     }
   }
+
+  /** Staleness key for a stage whose output is a deterministic function
+    * of (extracted content, a committed table's content): the extracted
+    * manifest key mixed with the table's manifest digest.
+    */
+  private def upstreamKey(extractedFp: Long, io: graft.pipeline.TableIO): Long =
+    extractedFp * 1000003L ^ java.nio.ByteBuffer.wrap(manifestMd5(io.root)).getLong
 
   /** [[corpusEndToEnd]] with the table root derived from the corpus
     * file-status tag (the derived-layout rule): the same corpus resumes
@@ -818,13 +809,10 @@ object CorpusOps {
                         (compute: => DataFrame): DataFrame = {
     val io = new graft.pipeline.TableIO(root)
     val sidecarPath = java.nio.file.Paths.get(root, ".stage-key.json")
-    def liveManifestMd5(): String = {
-      val m = java.nio.file.Paths.get(root, "manifest.json")
-      if (!java.nio.file.Files.exists(m)) ""
-      else java.security.MessageDigest.getInstance("MD5")
-        .digest(java.nio.file.Files.readAllBytes(m))
-        .map("%02x".format(_)).mkString
-    }
+    // "" while the table has no manifest
+    def liveManifestMd5(): String =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "manifest.json"))) ""
+      else manifestMd5(root).map("%02x".format(_)).mkString
     def sidecarFresh(): Boolean =
       java.nio.file.Files.exists(sidecarPath) && {
         val s = new String(java.nio.file.Files.readAllBytes(sidecarPath),
@@ -845,14 +833,10 @@ object CorpusOps {
       }
     }
     val stage = root.substring(root.lastIndexOf('/') + 1)
-    def labeled[T](desc: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(desc)
-      try f finally spark.sparkContext.setJobDescription(null)
-    }
     val fresh = io.snapshots().nonEmpty &&
-      (sidecarFresh() || labeled(s"e2e: $stage freshness fallback")(columnFresh()))
+      (sidecarFresh() || Scoped(spark, Some(s"e2e: $stage freshness fallback"))(columnFresh()))
     if (!fresh)
-      labeled(s"e2e: $stage compute")(
+      Scoped(spark, Some(s"e2e: $stage compute"))(
         io.replaceWith(compute.withColumn("src_fp", lit(inputFp))))
     // (re)install the sidecar for the NOW-live manifest — after the
     // commit, so a crash anywhere above leaves only the fallback path

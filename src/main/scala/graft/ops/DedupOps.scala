@@ -72,46 +72,14 @@ object DedupOps {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
-  /** One materialization of the LSH candidate pairs per (application,
-    * corpus): `q_minhash_lsh`, `q_ngram_jaccard` and `q_dedup_cc` all
-    * consume the SAME pair set, and the candidate pass (signatures +
-    * band self-join) was each query's shared floor — so within a run it
-    * executes once and is served from a MEMORY_AND_DISK cache. Keyed by
-    * the documents table's file-status identity (bytes + newest mtime,
-    * the derived-layout rule), so a regenerated corpus at the same path
-    * recomputes instead of serving stale pairs; the superseded cache
-    * entry is unpersisted. Purely physical: the pair SET is identical
-    * to an uncached [[minhashLshPairs]] call.
+  /** [[minhashLshPairs]], materialized once per documents table
+    * ([[SessionMemo.persisted]]): `q_minhash_lsh`, `q_ngram_jaccard` and
+    * `q_dedup_cc` all consume the SAME pair set, and the candidate pass
+    * (signatures + band self-join) was each query's shared floor.
+    * Purely physical: the pair SET is identical to an uncached call.
     */
-  def minhashLshPairsShared(spark: SparkSession, dir: String): DataFrame = {
-    // applicationId is unique per SparkContext (identityHashCode is not:
-    // a new context can collide with a GC'd one and serve a DataFrame
-    // bound to a stopped context); entries of dead contexts are dropped
-    // on the way in so a long-lived service never pins stale plans
-    sharedPairsCache.entrySet().removeIf(
-      e => e.getValue._2.sparkSession.sparkContext.isStopped)
-    val dirKey = s"${spark.sparkContext.applicationId}:$dir"
-    val tag = RelationalOps.layoutTag(spark, dir, "documents")
-    sharedPairsCache.compute(dirKey, (_, prev) => {
-      if (prev != null && prev._1 == tag) prev
-      else {
-        // contract: unpersisting the superseded entry assumes no query
-        // is still mid-execution against it WHILE the corpus files at
-        // the same path are being rewritten — a concurrent reader in
-        // that window would recompute lost blocks from the NEW files
-        // and could mix pair sets across corpus generations. Rewriting
-        // a corpus in place under live queries is out of contract
-        // (rewrites go to a new path / TableIO snapshot); the uncached
-        // path has the same torn-read exposure at the file level.
-        if (prev != null) prev._2.unpersist(blocking = false)
-        (tag, minhashLshPairs(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    })._2
-  }
-
-  private val sharedPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+  def minhashLshPairsShared(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.persisted(spark, "lshPairs", dir, "documents")(minhashLshPairs(spark, dir))
 
   /** LSH candidate pairs: docs sharing any band key, distinct, a < b.
     * The self-join is on the band key — shuffle is by band bucket,
@@ -248,15 +216,9 @@ object DedupOps {
         Some(pairs.select(col("a").cast("long"), col("b").cast("long"))
           .as[(Long, Long)].rdd)
       else None
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevCodegen = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try connectedComponentsImpl(pairs, prs, labelRounds)
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevCodegen)
-    }
+    graft.obs.Scoped(spark, None,
+        "spark.sql.adaptive.enabled" -> "false", "spark.sql.codegen.wholeStage" -> "false")(
+      connectedComponentsImpl(pairs, prs, labelRounds))
   }
 
   /** @param pairs self-loop-filtered pair table (both paths)

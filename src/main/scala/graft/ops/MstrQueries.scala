@@ -3,6 +3,7 @@ package graft.ops
 import graft.fixtures.MstrCorpus
 import graft.mstr.MstrPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, md5}
 
 /** SparkEntry surface for the MSTR entity pipeline, run on the
   * deterministic fixture corpus. Every query here is oracle-backed by a
@@ -14,36 +15,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * VALUES-embeddable while still detecting any byte drift.
   */
 object MstrQueries {
-  /** ONE pipeline materialization per SparkContext: `reports`, `nodes`
-    * and `edges` are three projections of the SAME [[MstrPipeline.run]]
-    * output, but each call previously built its OWN cached dataset —
-    * three full extract passes over the fixture corpus, and every
-    * superseded cache entry leaked (run() caches internally and nothing
-    * ever unpersisted the earlier copies). Session-scoped memo, same
-    * contract as [[graft.ops.DedupOps.minhashLshPairsShared]]; the
-    * fixture corpus is static, so no file-identity key is needed.
-    * `violations` and `joinPath` stay uncached: the former is a
-    * different pipeline, the latter's byte-equality-with-broadcast-plan
-    * proof must keep executing its own plan.
+  /** ONE pipeline materialization per SparkContext ([[SessionMemo]];
+    * the fixture corpus is static, so its identity is a constant):
+    * `reports`, `nodes` and `edges` are three projections of the SAME
+    * [[MstrPipeline.run]] output. `violations` and `joinPath` stay
+    * uncached: the former is a different pipeline, the latter's
+    * byte-equality-with-broadcast-plan proof must keep executing its
+    * own plan.
     */
-  private val runCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.Dataset[graft.mstr.ReportJsonRow],
-             org.apache.spark.sql.Dataset[graft.mstr.NodeRow],
-             org.apache.spark.sql.Dataset[graft.mstr.EdgeRow])]()
-
-  private def run(spark: SparkSession) = {
-    runCache.entrySet().removeIf(
-      e => e.getValue._1.sparkSession.sparkContext.isStopped)
-    runCache.computeIfAbsent(spark.sparkContext.applicationId,
-      _ => MstrPipeline.run(spark, MstrCorpus.pages, "pt-BR", numPartitions = 2))
-  }
+  private def run(spark: SparkSession) =
+    SessionMemo(spark, "mstrFixtureRun", "static")(
+      MstrPipeline.run(spark, MstrCorpus.pages, "pt-BR", numPartitions = 2))
 
   private def digested(df: DataFrame): DataFrame =
-    df.select(org.apache.spark.sql.functions.col("report_id"),
-      org.apache.spark.sql.functions.col("name"),
-      org.apache.spark.sql.functions.col("file_path"),
-      org.apache.spark.sql.functions.md5(
-        org.apache.spark.sql.functions.col("json")).as("json_md5"))
+    df.select(col("report_id"), col("name"), col("file_path"), md5(col("json")).as("json_md5"))
 
   def reports(spark: SparkSession): DataFrame = digested(run(spark)._1.toDF())
   def nodes(spark: SparkSession): DataFrame = run(spark)._2.toDF()

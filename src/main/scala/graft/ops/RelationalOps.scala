@@ -235,6 +235,15 @@ object RelationalOps {
         count(lit(1)).as("n_items"))
   }
 
+  /** Cache tag for a derived physical layout: source path PLUS the
+    * source's file-status identity (total bytes + newest mtime), so a
+    * regenerated corpus at the same path invalidates the derived copy
+    * across JVMs instead of silently serving stale data.
+    */
+  private[ops] def layoutTag(spark: SparkSession, dir: String, name: String): String =
+    // underscores only: the tag doubles as part of SQL table identifiers
+    f"${dir.hashCode}%08x_${Tables.status(spark, s"$dir/$name.parquet").identity}"
+
   /** Partition-pruned scan (the physical-layer counterpart of
     * [[bucketedJoinAgg]]): events are written ONCE partitioned by
     * event_type; a filter on the partition column then prunes whole
@@ -244,22 +253,6 @@ object RelationalOps {
     * 100 TB this is the difference between reading one partition and
     * reading the table.
     */
-  /** Cache tag for a derived physical layout: source path PLUS the
-    * source's file-status identity (total bytes + newest mtime), so a
-    * regenerated corpus at the same path invalidates the derived copy
-    * across JVMs instead of silently serving stale data.
-    */
-  private[ops] def layoutTag(spark: SparkSession, dir: String, name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val it = fs.listFiles(p, true)
-    var mtime = 0L
-    while (it.hasNext) mtime = math.max(mtime, it.next().getModificationTime)
-    // underscores only: the tag doubles as part of SQL table identifiers
-    f"${dir.hashCode}%08x_${bytes}%x_$mtime%x"
-  }
-
   def partitionPrunedAgg(spark: SparkSession, dir: String): DataFrame = {
     val tag = layoutTag(spark, dir, "events")
     val path = new java.io.File(

@@ -21,25 +21,14 @@ object SimilarityOps {
   private def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.read(spark, dir, "embeddings")
 
-  /** Row count of the embeddings table, computed once per (application,
-    * corpus file-status identity). The count only parameterizes PLAN
-    * SHAPE — [[planesPerBand]] and the centroid stride — yet six
-    * declared queries each paid their own full count job over the same
-    * immutable table (guide §1.2: don't compute things twice). Keyed by
-    * the layout tag (bytes + newest mtime), so a regenerated corpus at
-    * the same path recomputes — the same derived-metadata contract as
-    * [[graft.ops.DedupOps.minhashLshPairsShared]]; entries of stopped
-    * contexts are pruned on the way in.
+  /** Row count of the embeddings table, once per table identity
+    * ([[SessionMemo]]): it only parameterizes PLAN SHAPE —
+    * [[planesPerBand]] and the centroid stride — yet six declared
+    * queries each paid their own count job over the same table.
     */
-  private def embCount(spark: SparkSession, dir: String): Long = {
-    countCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    val key = (spark.sparkContext.applicationId,
-      s"$dir:${RelationalOps.layoutTag(spark, dir, "embeddings")}")
-    countCache.computeIfAbsent(key, _ => emb(spark, dir).count())
-  }
-
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+  private def embCount(spark: SparkSession, dir: String): Long =
+    SessionMemo(spark, s"embCount:$dir", RelationalOps.layoutTag(spark, dir, "embeddings"))(
+      emb(spark, dir).count())
 
   /** Left-to-right double-precision dot product of two float arrays —
     * the fold order is fixed so results are bit-reproducible (and match
@@ -78,39 +67,18 @@ object SimilarityOps {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
   }
 
-  /** One materialization of the exact brute-force top-k per
-    * (application, corpus, k, nQueries): BOTH recall gauges
-    * (`q_ann_recall`, `q_srp_recall`) evaluate their approximate leg
-    * against the SAME exact reference — uncached, each gauge re-derived
-    * the O(nQueries × corpus) cross-join + window independently (guide
-    * §1.2: don't compute the same thing twice; at production scale the
-    * exact reference for recall gauging is computed once and every
-    * index variant is scored against it). Identical contract to
-    * [[bandedSrpPairsShared]] / [[graft.ops.DedupOps.minhashLshPairsShared]]:
-    * keyed by the embeddings table's file-status identity so a
-    * regenerated corpus recomputes instead of serving stale rows,
-    * superseded entries unpersisted, dead-context entries dropped on
-    * the way in. Purely physical — the row set is identical to an
-    * uncached [[bruteForceTopK]] call (PlanSpec pins it).
+  /** [[bruteForceTopK]], materialized once per (embeddings table, k,
+    * nQueries) ([[SessionMemo.persisted]]): BOTH recall gauges
+    * (`q_ann_recall`, `q_srp_recall`) score their approximate leg
+    * against the SAME exact reference, which uncached re-derived the
+    * O(nQueries × corpus) cross-join + window per gauge. Purely
+    * physical — the row set is identical to an uncached call (PlanSpec
+    * pins it).
     */
   def bruteForceTopKShared(spark: SparkSession, dir: String, k: Int = 5,
-                           nQueries: Int = 10): DataFrame = {
-    sharedExactCache.entrySet().removeIf(
-      e => e.getValue._2.sparkSession.sparkContext.isStopped)
-    val key = s"${spark.sparkContext.applicationId}:$dir:$k:$nQueries"
-    val tag = RelationalOps.layoutTag(spark, dir, "embeddings")
-    sharedExactCache.compute(key, (_, prev) => {
-      if (prev != null && prev._1 == tag) prev
-      else {
-        if (prev != null) prev._2.unpersist(blocking = false)
-        (tag, bruteForceTopK(spark, dir, k, nQueries)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    })._2
-  }
-
-  private val sharedExactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+                           nQueries: Int = 10): DataFrame =
+    SessionMemo.persisted(spark, s"exactTopK:$k:$nQueries", dir, "embeddings")(
+      bruteForceTopK(spark, dir, k, nQueries))
 
   /** Planes per SRP band as a function of corpus size: the smallest p
     * with 2^p >= n / targetOccupancy (floor 4). Bucket count then grows
@@ -218,37 +186,14 @@ object SimilarityOps {
       .distinct()
   }
 
-  /** One materialization of the DEFAULT-parameter banded SRP candidate
-    * pairs per (application, corpus): `q_embed_neardup` and
-    * `q_srp_recall` consume the SAME pair set, and srpRecall references
-    * it TWICE (the query-side orientation union) — uncached, the banded
-    * self-join subtree is derived up to three times per run. Identical
-    * contract to [[graft.ops.DedupOps.minhashLshPairsShared]]: keyed by
-    * the embeddings table's file-status identity so a regenerated
-    * corpus recomputes instead of serving stale pairs, superseded
-    * entries unpersisted, dead-context entries dropped on the way in.
-    * Purely physical — the pair SET is identical to an uncached
-    * [[bandedSrpPairs]] call.
+  /** DEFAULT-parameter [[bandedSrpPairs]], materialized once per
+    * embeddings table ([[SessionMemo.persisted]]): `q_embed_neardup`
+    * and `q_srp_recall` consume the SAME pair set, and srpRecall
+    * references it TWICE (the query-side orientation union). Purely
+    * physical — the pair SET is identical to an uncached call.
     */
-  def bandedSrpPairsShared(spark: SparkSession, dir: String): DataFrame = {
-    sharedSrpCache.entrySet().removeIf(
-      e => e.getValue._2.sparkSession.sparkContext.isStopped)
-    val dirKey = s"${spark.sparkContext.applicationId}:$dir"
-    val tag = RelationalOps.layoutTag(spark, dir, "embeddings")
-    sharedSrpCache.compute(dirKey, (_, prev) => {
-      if (prev != null && prev._1 == tag) prev
-      else {
-        // same concurrency contract as minhashLshPairsShared: rewriting
-        // a corpus in place under live queries is out of contract
-        if (prev != null) prev._2.unpersist(blocking = false)
-        (tag, bandedSrpPairs(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      }
-    })._2
-  }
-
-  private val sharedSrpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+  def bandedSrpPairsShared(spark: SparkSession, dir: String): DataFrame =
+    SessionMemo.persisted(spark, "srpPairs", dir, "embeddings")(bandedSrpPairs(spark, dir))
 
   /** IVF-style ANN with a FIXED centroid count: `nCentroids` vectors
     * sampled deterministically by id stride (stride = n / nCentroids, so

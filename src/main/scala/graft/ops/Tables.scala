@@ -1,62 +1,64 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
-/** Flat source-table reader with a session-scoped SCHEMA memo.
+/** The one file-status probe every table identity in `graft.ops`
+  * derives from, and a flat-table reader with a SCHEMA memo.
   *
   * Resolving a parquet relation runs schema inference as a Spark job
-  * (footer read), and in a many-query session every query pays it
-  * again for the same immutable table — ~30 ms of job plus its
-  * planning gap per invocation, which at 69 queries × best-of-N reps
-  * is seconds of pure metadata rework (guide §1.2: don't compute
-  * things twice). The memo caches the INFERRED SCHEMA — plan metadata
-  * only, never data or results — keyed by (application, path,
-  * file-status identity), the same derived-metadata contract as
-  * [[RelationalOps.layoutTag]] consumers: a regenerated corpus at the
-  * same path changes bytes/mtime and re-infers, and entries of stopped
-  * applications are pruned on the way in. This is exactly the job a
-  * catalog/metastore (or Iceberg table metadata) does at production
-  * scale — the schema travels with the table, not with every query.
-  *
-  * Only FLAT single-dir tables go through here; derived partitioned
-  * layouts keep plain reads (partition-column discovery must run).
+  * (footer read), ~30 ms plus its planning gap, which every query
+  * would pay again for the same immutable table. The reader keeps the
+  * INFERRED SCHEMA — plan metadata only, never data — in
+  * [[SessionMemo]] under the table's identity, so a regenerated table
+  * at the same path re-infers: the job a catalog (or Iceberg table
+  * metadata) does at production scale.
   */
 object Tables {
 
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), StructType]()
-
-  /** File-status identity of `path`: total bytes + newest mtime —
-    * driver-side fs metadata, no Spark job.
+  /** What one walk of a parquet path reports: total bytes of every
+    * file under it (the length a content summary reports), the newest
+    * mtime, and the scan split estimate [[Par.spread]] reads (data
+    * files only, each file's bytes / maxPartitionBytes rounded up).
     */
-  private def statusTag(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val it = fs.listFiles(p, true)
-    var mtime = 0L
-    while (it.hasNext) mtime = math.max(mtime, it.next().getModificationTime)
-    f"${bytes}%x_$mtime%x"
+  final case class Status(bytes: Long, mtime: Long, splits: Long) {
+    /** The table's identity: a rewrite at the same path changes it. */
+    def identity: String = f"${bytes}%x_$mtime%x"
   }
 
-  /** `spark.read.parquet(dir/name.parquet)` with the inference job paid
-    * once per (application, table identity) instead of per query.
+  /** [[Status]] of the parquet file/dir at `path` — driver-side fs
+    * metadata from one recursive listing, no Spark job.
+    */
+  def status(spark: SparkSession, path: String): Status = {
+    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(p, true)
+    var bytes, mtime, splits = 0L
+    while (it.hasNext) {
+      val f = it.next()
+      bytes += f.getLen
+      mtime = math.max(mtime, f.getModificationTime)
+      val n = f.getPath.getName
+      if (!n.startsWith("_") && !n.startsWith("."))
+        splits += (f.getLen + maxSplit - 1) / maxSplit
+    }
+    Status(bytes, mtime, splits)
+  }
+
+  /** `spark.read.parquet(dir/name.parquet)`, inferring the schema once
+    * per table identity.
     */
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     readPath(spark, s"$dir/$name.parquet")
 
-  /** Same memo for an arbitrary parquet dir — the derived-layout reads
-    * (partitioned tmp copies published by rename). Partition-column
-    * DISCOVERY still runs (listing, driver-side); only the footer
-    * schema-inference job is skipped, and the cached schema includes
-    * the partition columns inference appended.
+  /** [[read]] for any parquet dir, e.g. a partitioned derived layout:
+    * partition DISCOVERY still runs (driver-side listing); only the
+    * footer inference job is skipped.
     */
   def readPath(spark: SparkSession, path: String): DataFrame = {
-    schemaCache.keySet.removeIf(_._1 != spark.sparkContext.applicationId)
-    val key = (spark.sparkContext.applicationId, path, statusTag(spark, path))
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = SessionMemo(spark, s"schema:$path", status(spark, path).identity)(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 }

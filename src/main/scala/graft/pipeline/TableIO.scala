@@ -147,8 +147,8 @@ final class TableIO(val root: String) {
     */
   @volatile private var relCache: Option[(Option[String], SparkSession, DataFrame)] = None
 
-  /** All committed data across snapshots (empty DataFrame with the
-    * given schema if nothing committed yet).
+  /** All committed data across snapshots, or `None` if nothing is
+    * committed yet.
     */
   def readTable(spark: SparkSession): Option[DataFrame] = {
     val live = manifestBase()

@@ -90,6 +90,26 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got == Map(1.2 -> 1.2, 1.7 -> 1.2, 3.1 -> 3.1, 3.9 -> 3.1))
   }
 
+  test("a run restores the caller's AQE and whole-stage codegen settings") {
+    import spark.implicits._
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.codegen.wholeStage")
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    // getOption reports the default for an unset key, so set-ness is
+    // read from getAll (explicit settings only)
+    def settings: Seq[Option[String]] = keys.map(spark.conf.getAll.get)
+    val original = settings
+    try {
+      keys.foreach(spark.conf.unset)
+      graft.ops.DedupOps.connectedComponents(pairs).collect()
+      assert(settings == Seq(None, None), "an unset key must stay unset, not become an explicit default")
+      Seq("false", "true").foreach { v =>
+        keys.foreach(spark.conf.set(_, v))
+        graft.ops.DedupOps.connectedComponents(pairs).collect()
+        assert(settings == Seq(Some(v), Some(v)), s"explicit setting $v was not restored")
+      }
+    } finally keys.zip(original).foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("shared LSH pair cache serves one materialization and invalidates on rewrite") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-sharedpairs").toString

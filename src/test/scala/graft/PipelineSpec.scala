@@ -249,6 +249,40 @@ class PipelineSpec extends AnyFunSuite {
       "incremental component labels must equal the one-shot labels")
   }
 
+  test("corpus e2e pipeline: every job is described e2e:, the caller's description comes back") {
+    import spark.implicits._
+    val words = Seq("river", "stone", "market", "winter", "garden", "signal", "copper",
+      "harbor", "lantern", "meadow", "orbit", "canvas")
+    // 60 documents of 40 words, every seventh an exact copy of its predecessor
+    val texts = (0 until 60).map(i => (0 until 40).map(j => words((i * 5 + j * j) % words.size)))
+      .map(_.mkString(" ") + ".")
+    val docs = texts.indices.map(i => if (i % 7 == 6) texts(i - 1) else texts(i))
+    val dir = java.nio.file.Files.createTempDirectory("graft-e2e-desc-docs").toString
+    docs.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val root = java.nio.file.Files.createTempDirectory("graft-e2e-desc").toString
+    val sc = spark.sparkContext
+    try {
+      sc.setJobDescription("caller description")
+      Seq("cold", "no-op").foreach { run =>
+        val (packed, log) = graft.obs.JobLog.record(spark, s"e2e $run") {
+          graft.ops.CorpusOps.corpusEndToEnd(spark, dir, root)
+        }
+        assert(log.jobs.nonEmpty, s"$run run ran no job")
+        val stray = log.jobs.map(_.description).filterNot(_.exists(_.startsWith("e2e: ")))
+        assert(stray.isEmpty, s"$run run: jobs not described e2e: $stray")
+        assert(sc.getLocalProperty("spark.job.description") == "caller description")
+        assert(packed.count() > 0)
+        if (run == "cold") {
+          val phases = log.jobs.flatMap(_.description).toSet
+          Seq("extract append", "survivors compute", "decisions append", "packed compute")
+            .foreach(p => assert(phases.contains(s"e2e: $p"), s"no job described 'e2e: $p' in $phases"))
+        }
+      }
+    } finally sc.setJobDescription(null)
+  }
+
   test("mergeByKey: MERGE INTO-shaped upsert is idempotent and keeps rollback snapshots") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-merge").toString
