@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GramKeyFunctions.{gram_keys, md5_key}
 
 /** Deduplication operators for web-scale corpora:
   *
@@ -473,18 +474,20 @@ object DedupOps {
           sequence(lit(0), floor((size(col("toks")) - 1) / ParaTokens).cast("int")),
           i => array_join(slice(col("toks"), i * ParaTokens + 1, lit(ParaTokens)), " ")),
         array(lit(ParaFooter))).as("paras"))
-    // occurrences as (hash, ord) — nothing else crosses the shuffle
+    // occurrences as (hash, ord) — nothing else crosses the shuffle;
+    // the md5 travels as two longs, not a 32-char hex string
     val occ = paras.select(col("doc_id"),
         posexplode(col("paras")).as(Seq("idx0", "para")))
-      .select(md5(col("para")).as("h"),
+      .select(md5_key(col("para")).as("h"),
         (col("doc_id") * ParaOrdBase + checkedPos(col("idx0") + 1)).as("ord"))
+      .select(col("h.hi").as("h_hi"), col("h.lo").as("h_lo"), col("ord"))
     // ords are globally unique, so "this occurrence is its group's
     // first" ⟺ "its ord is in the keep_ord set" — the kept set needs
-    // only a long-keyed join, no hash strings in the second shuffle.
+    // only a long-keyed join, no hash in the second shuffle.
     // Decode with integer `div`: `/` is double division in Spark SQL
     // and loses exactness past 2^53, i.e. doc_id ≳ 9e9 — inside the
     // 10^12-doc contract.
-    val firsts = occ.groupBy(col("h")).agg(min(col("ord")).as("keep_ord"))
+    val firsts = occ.groupBy(col("h_hi"), col("h_lo")).agg(min(col("ord")).as("keep_ord"))
       .select(col("keep_ord"))
     val kept = firsts
       .select(expr(s"keep_ord div $ParaOrdBase").as("doc_id"),
@@ -522,46 +525,49 @@ object DedupOps {
     * mask — the distributed approximation of the suffix-array pass,
     * with one hash-keyed shuffle instead of a global sort.
     *
-    * Shuffle inventory (10^12-doc shape): gram occurrences cross as
-    * bare (md5, ord) pairs; the first-wins set and the anti-join
-    * deciding "not the first" exchange ONLY longs (ords are globally
-    * unique, so ord ∉ keep-set ⟺ this occurrence is a removal);
-    * removal start positions return per doc as an int array. The final
-    * stitch joins that array back to the scan on doc_id — exchange-free
-    * on the text side under broadcast (test scale, plan-asserted) or a
-    * doc_id-bucketed corpus layout (production scale).
+    * Shuffle inventory (10^12-doc shape): ONE occurrence pass —
+    * [[graft.functions.GramKeys]] hashes every gram straight from the
+    * text's bytes — feeds ONE first-wins hash aggregate whose rows are
+    * three longs (the md5 as hi/lo, and ord). Its winners decode to
+    * (doc_id, pos) and return per doc as an int array of first
+    * positions (one doc_id-keyed shuffle); a document's removal starts
+    * are its gram positions minus those. The final stitch joins that
+    * array back to the scan on doc_id — exchange-free on the text side
+    * under broadcast (test scale, plan-asserted) or a doc_id-bucketed
+    * corpus layout (production scale).
     */
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
     val k = SpanK
-    val d = docs(spark, dir).select(col("doc_id"),
-      split(col("text"), " ").as("toks"))
-    // gram occurrences: (h, ord); docs shorter than k emit none
-    // (sequence(1, n-k+1) would count DOWN for n < k — guard it)
+    val d = docs(spark, dir)
+    // gram occurrences: (h_hi, h_lo, ord); docs shorter than k emit none
     val occ = d.select(col("doc_id"),
-        explode(when(size(col("toks")) >= k,
-          sequence(lit(1), size(col("toks")) - (k - 1)))
-          .otherwise(array().cast("array<int>"))).as("pos"),
-        col("toks"))
-      .select(md5(array_join(slice(col("toks"), col("pos"), lit(k)), " ")).as("h"),
-        (col("doc_id") * ParaOrdBase + checkedPos(col("pos"))).as("ord"))
-    val keeps = occ.groupBy(col("h")).agg(min(col("ord")).as("keep_ord"))
-      .select(col("keep_ord"))
-    // occurrences that are NOT their gram's first — longs only
+        posexplode(gram_keys(col("text"), k)).as(Seq("pos0", "h")))
+      .select(col("h.hi").as("h_hi"), col("h.lo").as("h_lo"),
+        (col("doc_id") * ParaOrdBase + checkedPos(col("pos0") + 1)).as("ord"))
     // integer `div`, not `/`: double division loses exactness past 2^53
-    val removals = occ.select(col("ord"))
-      .join(keeps, col("ord") === col("keep_ord"), "left_anti")
-      .select(expr(s"ord div $ParaOrdBase").as("doc_id"),
-        (col("ord") % ParaOrdBase).cast("int").as("start"))
+    val firsts = occ.groupBy(col("h_hi"), col("h_lo")).agg(min(col("ord")).as("first_ord"))
+      .select(expr(s"first_ord div $ParaOrdBase").as("doc_id"),
+        (col("first_ord") % ParaOrdBase).cast("int").as("pos"))
       .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("start"))).as("starts"))
-    // stitch: cut every token covered by a removed gram, row-locally
-    d.join(removals, Seq("doc_id"), "left")
+      .agg(collect_list(col("pos")).as("first_pos"))
+    // removal starts = gram positions that are not a first occurrence
+    // (sequence(1, n-k+1) would count DOWN for n < k — guard it).
+    // The `when` below reads `starts` twice, so CollapseProject keeps it in
+    // its own projection: array_except runs once per DOCUMENT, not once
+    // per token inside the filter lambda below. It is also the fast
+    // path for the documents with nothing to remove.
+    val n = size(col("toks"))
+    d.select(col("doc_id"), split(col("text"), " ").as("toks"))
+      .join(firsts, Seq("doc_id"), "left")
       .select(col("doc_id"), col("toks"),
-        coalesce(col("starts"), array().cast("array<int>")).as("starts"))
+        when(n >= k, array_except(sequence(lit(1), n - (k - 1)),
+            coalesce(col("first_pos"), array().cast("array<int>"))))
+          .otherwise(array().cast("array<int>")).as("starts"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
-        filter(col("toks"), (_, i) =>
-          !exists(col("starts"), s => s <= i + 1 && i + 1 < s + k)).as("kept"))
+        when(size(col("starts")) === 0, col("toks"))
+          .otherwise(filter(col("toks"), (_, i) =>
+            !exists(col("starts"), s => s <= i + 1 && i + 1 < s + k))).as("kept"))
       .select(col("doc_id"), col("n_tokens"),
         (col("n_tokens") - size(col("kept"))).cast("long").as("n_removed"),
         md5(array_join(col("kept"), " ")).as("digest"))

@@ -26,23 +26,28 @@ object Tables {
   }
 
   /** [[Status]] of the parquet file/dir at `path` — driver-side fs
-    * metadata from one recursive listing, no Spark job.
+    * metadata from one recursive `listStatus` walk, no Spark job.
+    * (`listFiles` would build a `LocatedFileStatus` per file, which on
+    * the local filesystem loads each file's permissions through a
+    * forked shell: ~27 ms per call on an 8-file table.)
     */
   def status(spark: SparkSession, path: String): Status = {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
     var bytes, mtime, splits = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      bytes += f.getLen
-      mtime = math.max(mtime, f.getModificationTime)
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith("."))
-        splits += (f.getLen + maxSplit - 1) / maxSplit
+    def walk(dir: org.apache.hadoop.fs.Path): Unit = fs.listStatus(dir).foreach { f =>
+      if (f.isDirectory) walk(f.getPath)
+      else {
+        bytes += f.getLen
+        mtime = math.max(mtime, f.getModificationTime)
+        val n = f.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith("."))
+          splits += (f.getLen + maxSplit - 1) / maxSplit
+      }
     }
+    walk(p)
     Status(bytes, mtime, splits)
   }
 

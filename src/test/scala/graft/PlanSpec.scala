@@ -239,4 +239,54 @@ class PlanSpec extends AnyFunSuite {
       s"Exchange hashpartitioning\\(doc_id#\\d+L, $n\\)".r.findFirstIn(below).isDefined, below)
     assert(!spreadPlan(len / n).contains("Exchange"))
   }
+
+  /** The first-wins exchanges of a rewrite dedup: the shuffles keyed on
+    * the gram/paragraph digest (h_hi, h_lo). Planned with AQE off:
+    * exchanges are inserted after `sparkPlan`, and the AQE wrapper of
+    * `executedPlan` is childless until run.
+    */
+  private def firstWinsExchanges(op: => org.apache.spark.sql.DataFrame) =
+    graft.obs.Scoped(spark, None, "spark.sql.adaptive.enabled" -> "false")(
+      op.queryExecution.executedPlan).collect {
+      case ex: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+        if (ex.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.exists(_.references.exists(_.name == "h_hi"))
+          case _ => false
+        }) => ex
+    }
+
+  test("span and para dedup: no string column crosses the first-wins exchange") {
+    Seq("span" -> (() => graft.ops.DedupOps.spanDedup(spark, dir)),
+        "para" -> (() => graft.ops.DedupOps.paraDedup(spark, dir))).foreach { case (op, q) =>
+      val exs = firstWinsExchanges(q())
+      assert(exs.size == 1, s"$op: expected one (h_hi, h_lo) exchange, got ${exs.size}")
+      exs.foreach { ex =>
+        val strs = ex.child.output.filter(_.dataType == org.apache.spark.sql.types.StringType)
+        assert(strs.isEmpty, s"$op: string columns cross the first-wins exchange: $strs")
+      }
+    }
+  }
+
+  test("spanDedup: one occurrence pass, and the removal set is built once per document") {
+    val q = graft.ops.DedupOps.spanDedup(spark, dir)
+    // exactly one Generate (the gram occurrences) over the documents scan
+    val gens = q.queryExecution.sparkPlan.collect {
+      case g: org.apache.spark.sql.execution.GenerateExec => g
+    }
+    assert(gens.size == 1, s"expected one occurrence pass:\n${q.queryExecution.sparkPlan}")
+    assert(gens.head.exists(_.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]))
+    // a per-document array build inlined into the stitch's filter lambda
+    // would run once per TOKEN (CollapseProject inlines single-use
+    // projections into the lambda)
+    import org.apache.spark.sql.catalyst.expressions._
+    q.queryExecution.optimizedPlan.foreach(_.expressions.foreach(_.foreach {
+      case lf: LambdaFunction =>
+        val built = lf.function.collect {
+          case e @ (_: ArrayExcept | _: Sequence | _: StringSplit | _: Coalesce) => e
+        }
+        assert(built.isEmpty, s"per-document array build inside a lambda: $built")
+      case _ =>
+    }))
+  }
 }
