@@ -561,8 +561,7 @@ object MstrJoinPipeline {
               .map { case (r, i) => (resumeKeyOf(r), i) }.toSeq)
             .toDF("resume_key", "ord")
           val pending = keysDf
-            .join(t.select(col("resume_key")).distinct(),
-              Seq("resume_key"), "left_anti")
+            .join(t.select(col("resume_key")), Seq("resume_key"), "left_anti")
             .select(col("ord")).collect().map(_.getInt(0)).toSet
           work.iterator.zipWithIndex
             .collect { case (r, i) if pending(i) => r }.toSeq

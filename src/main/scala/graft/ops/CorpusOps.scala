@@ -678,8 +678,7 @@ object CorpusOps {
     // labels never solved, which a rerun cannot detect (the "new docs"
     // probe would come up empty against the grown band table).
     val pureGrowth = committed.exists(c =>
-      c.select(col("doc_id")).distinct()
-        .join(extractedIds, Seq("doc_id"), "left_anti").isEmpty)
+      c.select(col("doc_id")).join(extractedIds, Seq("doc_id"), "left_anti").isEmpty)
     val priorEdges = ccIo.readTable(spark)
       .map(_.select(col("doc_id").as("a"), col("component").as("b")))
     if (!pureGrowth || priorEdges.isEmpty) {
@@ -700,6 +699,7 @@ object CorpusOps {
         bandsIo.replaceWith(bands)
       } finally bands.unpersist(blocking = false)
     } else {
+      // bands hold 4 rows per doc: the partial distinct cuts the shuffled key rows 4x
       val newDocs = extracted.join(
         committed.get.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
       if (!newDocs.isEmpty) {

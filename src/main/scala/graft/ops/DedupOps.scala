@@ -259,8 +259,9 @@ object DedupOps {
     val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part).persist(sl)
 
-    def asMap(it: Iterator[(Long, Long)]): java.util.HashMap[Long, Long] = {
-      val m = new java.util.HashMap[Long, Long]()
+    // boxed values, so a missing key reads as null rather than 0
+    def asMap(it: Iterator[(Long, Long)]): java.util.HashMap[java.lang.Long, java.lang.Long] = {
+      val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       it.foreach(kv => m.put(kv._1, kv._2))
       m
     }
@@ -290,7 +291,11 @@ object DedupOps {
       // round's single shuffle.
       val neighborMin = edges.zipPartitions(labels) { (eIt, lIt) =>
         val lm = asMap(lIt)
-        eIt.map { case (s, t) => (t, lm.get(s).longValue()) }
+        eIt.map { case (s, t) =>
+          val l = lm.get(s)
+          if (l == null) throw new IllegalStateException(s"edge source $s has no label")
+          (t, l.longValue())
+        }
       }.reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
       val prev = labels
       labels = prev.zipPartitions(neighborMin, preservesPartitioning = true) {

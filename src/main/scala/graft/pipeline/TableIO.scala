@@ -219,43 +219,39 @@ final class TableIO(val root: String) {
     snap
   }
 
-  /** True iff [[pending]] over `input` has any row — answered from a
-    * KEYS-ONLY anti-join (both scans prune to the key column), never
-    * re-attaching the payload: the no-op resume's common probe carries
-    * half of [[pending]]'s plan (r6, guide §1.2 — don't build what the
-    * steady path throws away). No `.distinct()` on either side: an
-    * anti-join's emptiness never needs deduped inputs, and resume keys
-    * are unique per side anyway, so each distinct was a pure extra
-    * exchange + aggregation (guide §2.4 "a distinct on data that is
-    * already unique"). Equivalence with `pending(...).isEmpty`: a
-    * null-key input row is always pending there, and the anti join
-    * here KEEPS null keys (a null key equals nothing, so it never
-    * matches a committed row), so both sides agree on emptiness.
+  /** True iff [[pending]] over `input` has any row, answered from
+    * [[pending]]'s keys-only anti-join alone: the no-op resume's common
+    * probe never re-attaches the payload. Emptiness of an anti-join
+    * never needs deduplicated keys, so neither side is aggregated.
     */
   def hasPending(input: DataFrame, keyCol: String): Boolean =
     readTable(input.sparkSession) match {
       case None => !input.select(col(keyCol)).isEmpty
-      case Some(committed) =>
-        !input.select(col(keyCol))
-          .join(committed.select(col(keyCol)), Seq(keyCol), "left_anti")
-          .isEmpty
+      case Some(committed) => !pendingKeys(input, committed, keyCol).isEmpty
     }
 
+  /** Input keys with no committed row (null keys included: a null
+    * equals no committed key). Duplicates stay; no caller needs them
+    * removed.
+    */
+  private def pendingKeys(input: DataFrame, committed: DataFrame, keyCol: String): DataFrame =
+    input.select(col(keyCol))
+      .join(committed.select(col(keyCol)), Seq(keyCol), "left_anti")
+
   /** Input rows not yet present in the committed table, by key column.
+    * Null-key rows can never be committed, so they are always pending.
     *
-    * Two-phase shape so no payload column ever crosses an exchange: the
-    * anti-join runs over keys alone (both scans prune to the key
-    * column), and the input's full rows re-join by a semi join against
-    * the surviving pending keys — broadcastable on an incremental
-    * resume, so wide columns (page html, document text) stay in their
+    * Two phases, so no payload column ever crosses an exchange: a
+    * keys-only anti-join finds the pending keys (both scans prune to
+    * the key column), and the input's full rows come back through a
+    * semi join on null-safe equality against them. The semi join's
+    * build side is sized by the input's keys, not by the committed
+    * table, so wide columns (page html, document text) stay in their
     * scan. A single anti-join of the FULL input against the committed
-    * keys degrades to a sort-merge join once the committed side
-    * outgrows the broadcast threshold on a mature table, shuffling
-    * every payload byte to discover most rows are already done
-    * (PlanSpec pins the pruned shape). Null-key rows can never be
-    * committed and are always pending (a bare semi join would silently
-    * drop them where the old anti-join kept them) — they ride the same
-    * payload pass as a left-join non-match rather than a second scan.
+    * keys would shuffle every payload byte once a mature committed
+    * table outgrows the broadcast threshold (PlanSpec pins the pruned
+    * shape). Neither join emits an input row twice, so duplicate keys
+    * on either side need no `distinct()`.
     *
     * `input` is referenced twice (the keys branch and the payload
     * branch), which is free when Catalyst can column-prune it to the
@@ -271,13 +267,8 @@ final class TableIO(val root: String) {
     readTable(input.sparkSession) match {
       case None => input
       case Some(committed) =>
-        val pendingKeys = input.select(col(keyCol)).where(col(keyCol).isNotNull)
-          .distinct()
-          .join(committed.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-          .withColumn("__graft_pending", lit(true))
-        input.join(pendingKeys, Seq(keyCol), "left")
-          .where(col("__graft_pending").isNotNull || col(keyCol).isNull)
-          .select(input.columns.map(col): _*)
+        val keys = pendingKeys(input, committed, keyCol).select(col(keyCol).as("__graft_key"))
+        input.join(keys, col(keyCol) <=> col("__graft_key"), "left_semi")
     }
 
   /** `MERGE INTO`-shaped upsert (Iceberg's idempotent-sink analog, the
@@ -291,8 +282,7 @@ final class TableIO(val root: String) {
     val merged = readTable(updates.sparkSession) match {
       case None => updates
       case Some(committed) =>
-        val survivors = committed.join(
-          updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+        val survivors = committed.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         survivors.unionByName(updates)
     }
     replaceWith(merged)

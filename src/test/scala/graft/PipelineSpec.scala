@@ -495,6 +495,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(jobsOf(kv.appendSnapshot(Seq(("u1", 1), ("u2", 2)).toDF("key", "v"))) == 1)
   }
 
+  test("a warm resumeExtract runs at most three jobs: two key broadcasts and the write") {
+    import spark.implicits._
+    val pdir = java.nio.file.Files.createTempDirectory("graft-jobs-pages").toString
+    spark.createDataset(WebCorpus.generate(200).map(_.page)).write.parquet(s"$pdir/pages")
+    val pages = spark.read.parquet(s"$pdir/pages").as[PageRow]
+    val io = new TableIO(java.nio.file.Files.createTempDirectory("graft-jobs-resume").toString)
+    assert(TableIO.resumeExtract(io, pages.filter(_.url.hashCode % 20 != 0)) > 0)
+    val (n, log) = graft.obs.JobLog.record(spark, "resume")(TableIO.resumeExtract(io, pages))
+    assert(n > 0, "sanity: the delta must be non-empty")
+    assert(log.jobs.size <= 3, s"warm resume ran ${log.jobs.size} jobs: ${log.json}")
+  }
+
   test("entry flagship returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -176,6 +176,9 @@ class PlanSpec extends AnyFunSuite {
     val exchangeIdx = lines.indices.filter(i => lines(i).contains("Exchange"))
     assert(exchangeIdx.nonEmpty, "expected the pending-url exchanges to exist")
     assert(lines.exists(_.contains("html")), "sanity: the html scan must exist")
+    // neither join emits an input row twice: no key aggregation belongs here
+    assert(!lines.exists(_.contains("HashAggregate")),
+      s"key aggregation in the resume pending plan:\n${lines.mkString("\n")}")
     exchangeIdx.foreach { i =>
       val d = indent(lines(i))
       var j = i + 1

@@ -500,7 +500,7 @@ class StreamingAndOpsSpec extends AnyFunSuite {
 
     // scale guard: paragraph/text columns never cross an exchange —
     // occurrences shuffle as (md5, ord), the kept set as int arrays
-    assertNoTextShuffle(q)
+    assertNoTextShuffle(DedupOps.paraDedup(spark, dir))
   }
 
   private def md5hex(str: String): String = {
@@ -513,13 +513,20 @@ class StreamingAndOpsSpec extends AnyFunSuite {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
 
-  private def assertNoTextShuffle(q: org.apache.spark.sql.DataFrame): Unit = {
+  /** Plans `op` afresh with AQE off: exchanges are inserted after
+    * `sparkPlan`, and the AQE wrapper of `executedPlan` is childless
+    * until run.
+    */
+  private def assertNoTextShuffle(op: => org.apache.spark.sql.DataFrame): Unit = {
     val forbidden = Set("text", "toks", "para", "paras", "kept")
-    q.queryExecution.sparkPlan.foreach {
-      case ex: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-        val bad = ex.child.output.map(_.name).filter(forbidden)
-        assert(bad.isEmpty, s"text-bearing columns cross a shuffle: $bad")
-      case _ =>
+    val shuffles = graft.obs.Scoped(spark, None, "spark.sql.adaptive.enabled" -> "false")(
+      op.queryExecution.executedPlan).collect {
+      case ex: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => ex
+    }
+    assert(shuffles.nonEmpty, "expected the first-wins shuffle")
+    shuffles.foreach { ex =>
+      val bad = ex.child.output.map(_.name).filter(forbidden)
+      assert(bad.isEmpty, s"text-bearing columns cross a shuffle: $bad")
     }
   }
 
@@ -556,7 +563,7 @@ class StreamingAndOpsSpec extends AnyFunSuite {
     // and most docs are untouched (removal is surgical, not wholesale)
     assert(expected.values.count(_._2 == 0) > expected.size / 2)
 
-    assertNoTextShuffle(q)
+    assertNoTextShuffle(DedupOps.spanDedup(spark, dir))
   }
 
   test("unigramXent matches a decimal-exact reference; order-independent by construction") {
