@@ -677,8 +677,10 @@ object CorpusOps {
     // converges — the reverse order would leave bands claiming docs the
     // labels never solved, which a rerun cannot detect (the "new docs"
     // probe would come up empty against the grown band table).
+    // bands hold 4 rows per doc: the partial distinct cuts the shuffled key rows 4x
     val pureGrowth = committed.exists(c =>
-      c.select(col("doc_id")).join(extractedIds, Seq("doc_id"), "left_anti").isEmpty)
+      c.select(col("doc_id")).distinct()
+        .join(extractedIds, Seq("doc_id"), "left_anti").isEmpty)
     val priorEdges = ccIo.readTable(spark)
       .map(_.select(col("doc_id").as("a"), col("component").as("b")))
     if (!pureGrowth || priorEdges.isEmpty) {

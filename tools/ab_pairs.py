@@ -1,20 +1,19 @@
 """Alternating parent/change pairs of the repo benchmark.
 
     python3 tools/ab_pairs.py --parent <rev> --workload <name> --seeds 8401-8410
-                              [--seconds 5]
 
 Exports <rev> with `git archive` into a directory under the system temp
 dir (kept and reused across invocations, so its benchmark build is
 cached; no git worktree is added) and runs `perfbench/run.py` once per
 seed in that export and once in this checkout, alternating which side
-runs first, with tracing off. Each run's metrics are printed as it
-ends. Then, for every metric in BENCHMARK.json's `end_to_end` list it
-prints each side's median, the change/parent ratio of the medians and of
-every pair, the number of pairs the change won (ties count for neither),
-and the parent's quartiles and IQR. A gain holds when there are at least
-ten pairs, the change won at least nine tenths of them, and its median
-differs from the parent's by more than the parent's IQR. Runs that fail or report `correct: false`
-are listed and left out of the figures.
+runs first, for BENCHMARK.json's `run_seconds` with tracing off. Each
+run's metrics are printed as it ends. Then, for every metric in
+BENCHMARK.json's `end_to_end` list it prints each side's median, the
+change/parent ratio of the medians and of every pair, the number of
+pairs the change won (ties count for neither), and the parent's
+quartiles and IQR. Runs that fail or report `correct: false` are listed
+and counted per side, and their pairs are left out of the figures; the
+script draws no verdict.
 """
 import argparse
 import io
@@ -41,10 +40,10 @@ def export(rev):
     return sha, dest
 
 
-def bench(checkout, a, seed):
+def bench(checkout, a, seconds, seed):
     """One benchmark run: its metrics, or None with the reason it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(seed),
-           "--seconds", str(a.seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                        text=True)
     lines = p.stdout.strip().splitlines()
@@ -74,11 +73,11 @@ def main():
     ap.add_argument("--parent", required=True, help="git revision to compare against")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="inclusive range, e.g. 8401-8410")
-    ap.add_argument("--seconds", type=float, default=5)
     a = ap.parse_args()
 
     with open(os.path.join(REPO, "BENCHMARK.json")) as f:
-        e2e = json.load(f)["end_to_end"]
+        spec = json.load(f)
+    e2e, seconds = spec["end_to_end"], spec["run_seconds"]
     sha, parent_dir = export(a.parent)
     print("parent %s in %s; change = %s" % (sha[:12], parent_dir, REPO), flush=True)
 
@@ -89,15 +88,16 @@ def main():
             order.reverse()
         got = {}
         for side, checkout in order:
-            got[side], why = bench(checkout, a, seed)
+            got[side], why = bench(checkout, a, seconds, seed)
             if why:
                 failures.append((seed, side, why))
             print("seed %d %-6s %s" % (seed, side, why or json.dumps(got[side])), flush=True)
         if got["parent"] and got["change"]:
             pairs.append((seed, got["parent"], got["change"]))
 
-    print("\n%d pairs on %s (seeds %s), %d failed runs" % (
-        len(pairs), a.workload, a.seeds, len(failures)))
+    print("\n%d pairs on %s (seeds %s); failed runs: parent %d, change %d" % (
+        len(pairs), a.workload, a.seeds, sum(1 for f in failures if f[1] == "parent"),
+        sum(1 for f in failures if f[1] == "change")))
     for seed, side, why in failures:
         print("  failed: seed %d %s: %s" % (seed, side, why))
     for m in e2e:
@@ -110,11 +110,10 @@ def main():
         q1, q3 = quartiles(sorted(par))
         wins = sum(1 for p, c in ps if (c < p if lower else c > p))
         ratios = [c / p if p else float("nan") for p, c in ps]
-        gain = len(ps) >= 10 and wins >= 0.9 * len(ps) and abs(cm - pm) > q3 - q1
         print("%-11s parent %.4g  change %.4g  (%+.1f%%, %s is better)  won %d/%d  "
-              "parent IQR %.4g (%.4g..%.4g)%s" % (
+              "parent IQR %.4g (%.4g..%.4g)" % (
                   name, pm, cm, 100 * (cm / pm - 1) if pm else float("nan"), m["better"],
-                  wins, len(ps), q3 - q1, q1, q3, "  GAIN" if gain else ""))
+                  wins, len(ps), q3 - q1, q1, q3))
         print("            per-pair change/parent: %s" % " ".join("%.3f" % r for r in ratios))
     return 1 if failures else 0
 
