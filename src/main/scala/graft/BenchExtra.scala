@@ -15,36 +15,6 @@ import org.apache.spark.sql.SparkSession
   * from the untouched [[graft.Bench]].
   */
 object BenchExtra {
-  import org.apache.spark.sql.{DataFrame, functions => F}
-
-  /** Experimental plan variants, A/B-able against the declared queries
-    * without touching `SparkEntry.queries` (never benched by the
-    * driver, never oracle-compared).
-    */
-  private val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q_decontaminate without either spread (its open A/B leg)
-    "x_decontam_nospread" -> ((s, d) => {
-      val k = 5
-      def wordGrams(ws: org.apache.spark.sql.Column, text: org.apache.spark.sql.Column) = {
-        val gram = (i: org.apache.spark.sql.Column) =>
-          F.concat_ws(" ", (0 until k).map(j => F.element_at(ws, i + j + 1)): _*)
-        F.when(F.size(ws) >= k,
-          F.transform(F.sequence(F.lit(0), F.size(ws) - k), gram))
-          .otherwise(F.array(text))
-      }
-      def grams(df: DataFrame) = df
-        .select(F.col("doc_id"), F.split(F.col("text"), " ").as("ws"), F.col("text"))
-        .select(F.col("doc_id"), F.explode(wordGrams(F.col("ws"), F.col("text"))).as("gram"))
-      val docs = s.read.parquet(s"$d/documents.parquet")
-      val bench = grams(docs.filter(F.col("doc_id") % 11 === 0))
-        .select(F.col("gram")).distinct()
-      grams(docs.filter(F.col("doc_id") % 11 =!= 0))
-        .join(F.broadcast(bench), Seq("gram"))
-        .groupBy(F.col("doc_id"))
-        .agg(F.countDistinct(F.col("gram")).as("n_shared"))
-    })
-  )
-
   def main(args: Array[String]): Unit = {
     val names =
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
@@ -59,7 +29,7 @@ object BenchExtra {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
-      val fn = variants.getOrElse(name, SparkEntry.queries(name))
+      val fn = SparkEntry.queries(name)
       val logs = (1 to reps).map { i =>
         val (rows, log) = JobLog.record(spark, name)(fn(spark, sfDir).count())
         println(f"XBENCH $name rep$i ${log.wallS}%.3f s rows=$rows")

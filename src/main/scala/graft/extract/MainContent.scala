@@ -108,23 +108,7 @@ object MainContent {
   }
 
   /** Full pipeline: decoded html string → extracted main text. */
-  def extractText(html: String): String = {
-    val tree = TagTree.parse(html)
-    val blocks = segment(tree)
-    val keep = classify(blocks)
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    var first = true
-    while (i < blocks.length) {
-      if (keep(i)) {
-        if (!first) sb.append('\n')
-        sb.append(blocks(i).text)
-        first = false
-      }
-      i += 1
-    }
-    sb.toString
-  }
+  def extractText(html: String): String = extractWithStats(html)._1
 
   /** Extraction metrics for the lineage/metrics sink. */
   final case class ExtractStats(blocks: Int, contentBlocks: Int,

@@ -487,32 +487,10 @@ object MstrJoinPipeline {
       scala.reflect.classTag[ReportJsonRow],
       org.apache.spark.sql.Encoders.product[ReportJsonRow])
 
-  /** Resume-key ordinal scheme identifier, pinned per table root. */
+  /** Resume-key ordinal scheme identifier, the tag of every snapshot
+    * [[resumeExtract]] commits.
+    */
   private val KeyScheme = "full-index-ordinals-v2"
-
-  private def pinKeyScheme(io: graft.pipeline.TableIO): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val marker = Paths.get(io.root, "key-scheme")
-    if (Files.exists(marker)) {
-      val prior = new String(Files.readAllBytes(marker), "UTF-8").trim
-      require(prior == KeyScheme,
-        s"resume table ${io.root} was committed under key scheme '$prior' but " +
-          s"this build writes '$KeyScheme' — resuming would alias committed " +
-          "keys; export the old table and start a fresh root")
-    } else {
-      // an unmarked table that already holds rows predates the marker
-      // (selection-relative ordinals) — refuse rather than duplicate or
-      // skip links whose ordinals shifted
-      require(io.snapshots().isEmpty,
-        s"resume table ${io.root} has committed rows but no key-scheme marker " +
-          "(written by an older build with selection-relative ordinals) — " +
-          "resuming would alias committed keys; start a fresh root")
-      Files.createDirectories(Paths.get(io.root))
-      val tmp = Paths.get(io.root, ".key-scheme.tmp")
-      Files.write(tmp, KeyScheme.getBytes("UTF-8"))
-      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
 
   /** Resumable join-plan extraction through a [[graft.pipeline.TableIO]]
     * sink — the same snapshot/anti-join contract as the extraction and
@@ -525,14 +503,14 @@ object MstrJoinPipeline {
     *  - pending work = the selected work list minus committed keys,
     *    ordinals from the FULL documento index so keys are stable across
     *    attempts under ANY selection (an interrupted `--filter` run may
-    *    resume unfiltered and vice versa — [[resumeKeyOf]]); the scheme
-    *    is pinned by a `key-scheme` marker in the table root, so a table
-    *    committed under a different (or unmarked legacy) scheme fails
+    *    resume unfiltered and vice versa — [[resumeKeyOf]]); every
+    *    snapshot is tagged with the scheme in the table manifest, so a
+    *    table holding a snapshot committed under a different scheme, or
+    *    under none (an older build's selection-relative ordinals), fails
     *    loudly instead of aliasing keys;
-    *  - nothing pending commits NO snapshot (no empty-snapshot growth on
-    *    a no-op resume), and the union of snapshots after any
-    *    interrupt/resume sequence equals a cold one-shot run's rows
-    *    (MstrJoinSpec).
+    *  - nothing pending commits NO snapshot (an empty append commits
+    *    nothing), and the union of snapshots after any interrupt/resume
+    *    sequence equals a cold one-shot run's rows (MstrJoinSpec).
     *
     * Returns the number of newly committed report rows.
     */
@@ -541,7 +519,11 @@ object MstrJoinPipeline {
                     lang: String = "pt-BR",
                     internalShufflePartitions: Int = 4,
                     select: Option[LinkIndex => Seq[LinkResult]] = None): Long = {
-    pinKeyScheme(io)
+    val foreign = io.snapshots().filter(_.tag != KeyScheme)
+    require(foreign.isEmpty,
+      s"resume table ${io.root} holds ${foreign.head.dir} committed under key scheme " +
+        s"'${foreign.head.tag}' but this build writes '$KeyScheme' — resuming would " +
+        "alias committed keys; export the old table and start a fresh root")
     // committed keys are NEVER collected to the driver (verdict r5 next
     // #5): the work list's keys ship to executors — the already-
     // justified driver-order footprint, ~0.4 GiB/million reports — and
@@ -568,10 +550,8 @@ object MstrJoinPipeline {
       }
     val keyed = runKeyed(spark, pagesDs, lang, internalShufflePartitions,
       idx => pendingOnly(defaultWork(idx, select)))
-    val n = keyed.count() // served from runKeyed's cache
-    if (n > 0) io.appendSnapshot(keyed.toDF())
-    keyed.unpersist(blocking = false)
-    n
+    try io.appendSnapshot(keyed.toDF(), KeyScheme).rows
+    finally keyed.unpersist(blocking = false)
   }
 
   /** [[runProjected]] keeping the resume key ([[resumeExtract]]'s shape). */

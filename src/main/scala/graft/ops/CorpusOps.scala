@@ -483,19 +483,13 @@ object CorpusOps {
     * them) is appended as a snapshot, and a re-run anti-joins the
     * committed doc_ids BEFORE any signal computes, so only new
     * documents pay the pipeline. Returns the rows committed by THIS
-    * run; the filtered corpus is `readTable(...).filter(col("keep"))`.
+    * run (a run with nothing pending commits no snapshot); the
+    * filtered corpus is `readTable(...).filter(col("keep"))`.
     */
   def filterPipelineIncremental(spark: SparkSession, dir: String,
                                 tableRoot: String): Long = {
     val io = new graft.pipeline.TableIO(tableRoot)
-    val decisions = filterPipelineScoped(spark, dir, d => io.pending(d, "doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // a no-op resume must not grow the manifest by an empty snapshot
-      // per run (the emptiness probe rides the cache the append reuses)
-      if (decisions.isEmpty) 0L
-      else io.appendSnapshot(decisions).rows
-    } finally decisions.unpersist(blocking = false)
+    io.appendSnapshot(filterPipelineScoped(spark, dir, d => io.pending(d, "doc_id"))).rows
   }
 
   /** The brief's LLM-training-data pipeline as ONE resumable artifact:
@@ -550,10 +544,10 @@ object CorpusOps {
     // the pending anti-join runs over a urls-only projection (doc_id →
     // ExtractOps.docUrlCol, the documentsAsPages url rule) so committed docs
     // never pay page synthesis and no page body rides the anti-join —
-    // only the pending ids' pages are ever built. The no-op probe is
-    // hasPending (keys-only — half the pending() plan); the full
-    // pending set is derived only when something is actually pending
-    // (a no-op resume must not grow the manifest by an empty snapshot).
+    // only the pending ids' pages are ever built. The keys-only
+    // hasPending probe gates that payload work: with nothing pending, no
+    // pending set is persisted and no page is synthesized or parsed
+    // (the empty append itself would commit nothing either way).
     val livePages = docs(spark, dir).select(col("doc_id"),
       ExtractOps.docUrlCol(col("doc_id")).as("url"))
     if (Scoped(spark, Some("e2e: extract pending probe"))(
@@ -581,11 +575,11 @@ object CorpusOps {
       // steady-state resume used to pay every run is gone. Strictly
       // finer than a content fingerprint (a rewrite with identical
       // content recomputes downstream — the safe direction).
-      val extractedFp = manifestKey(extractIo)
+      val extractedKey = manifestKey(extractIo)
 
       // ---- stage D: dedup survivors, stage-level freshness with
       // INCREMENTAL recompute on corpus growth (verdict r5 next #1) ----
-      val survivors = stageTable(spark, s"$tableRoot/survivors", extractedFp) {
+      val survivors = stageTable(spark, s"$tableRoot/survivors", extractedKey) {
         val exactKept = extracted
           .groupBy(md5(col("text")).as("digest"))
           .agg(min(col("doc_id")).as("doc_id"))
@@ -600,9 +594,10 @@ object CorpusOps {
       val decisionsIo = new graft.pipeline.TableIO(s"$tableRoot/decisions")
       val training = extracted.join(survivors, Seq("doc_id"))
         .filter(col("doc_id") % 11 =!= 0)
-      // keys-only no-op probe, as in stage E: the doc_id anti-join
-      // prunes the text column out of both scans and skips pending()'s
-      // payload re-join entirely on the steady path
+      // keys-only probe, as in stage E: it gates the filter signals —
+      // with nothing pending, the doc_id anti-join (text pruned out of
+      // both scans) is the only work, and pending()'s payload re-join
+      // and every signal are skipped
       if (Scoped(spark, Some("e2e: decisions pending probe"))(
           decisionsIo.hasPending(training, "doc_id"))) {
         val todoDocs = decisionsIo.pending(training, "doc_id")
@@ -621,8 +616,8 @@ object CorpusOps {
         .join(survivors, Seq("doc_id"))
 
       // ---- stage P: pack, stage-level ----
-      // keyed by the UPSTREAM-STATE digest (extracted manifest key ⊕
-      // md5 of the decisions manifest), not by a kept-set fingerprint:
+      // keyed by the UPSTREAM STATE (the extracted and the decisions
+      // manifest keys), not by a kept-set fingerprint:
       // kept is a deterministic function of the extracted content
       // (survivors recompute deterministically from it) and the
       // decisions table content (immutable snapshots, exactly named by
@@ -633,7 +628,7 @@ object CorpusOps {
       // changes no decision recomputes packed — the safe direction;
       // a count-keyed reuse of a stale table remains impossible).
       stageTable(spark, s"$tableRoot/packed",
-        upstreamKey(extractedFp, decisionsIo)) {
+        s"$extractedKey.${manifestKey(decisionsIo)}") {
         packSequencesOf(extracted.join(kept, Seq("doc_id")))
       }
     } finally extracted.unpersist(blocking = false)
@@ -729,41 +724,18 @@ object CorpusOps {
     ccIo.readTable(spark).get
   }
 
-  /** md5 of the live manifest bytes of the committed table at `root`
-    * (of no bytes while it has none), the one digest behind every
-    * metadata-only staleness key here. Snapshot dirs are immutable and
-    * the manifest names exactly the visible set, so equal manifest ⟺
-    * equal table content; no Spark job runs.
+  /** Content key for a committed table: the hex md5 of its live
+    * manifest bytes (of no bytes while it has none), the one digest
+    * behind every metadata-only staleness key here. Snapshot dirs are
+    * immutable and the manifest names exactly the visible set, so equal
+    * manifest ⟺ equal table content; no Spark job runs.
     */
-  private def manifestMd5(root: String): Array[Byte] = {
-    val m = java.nio.file.Paths.get(root, "manifest.json")
+  private def manifestKey(io: graft.pipeline.TableIO): String = {
+    val m = java.nio.file.Paths.get(io.root, "manifest.json")
     java.security.MessageDigest.getInstance("MD5").digest(
       if (java.nio.file.Files.exists(m)) java.nio.file.Files.readAllBytes(m)
-      else Array.emptyByteArray)
+      else Array.emptyByteArray).map("%02x".format(_)).mkString
   }
-
-  /** Content key for a committed table: its manifest digest as a Long
-    * (internal staleness key, never oracle-compared; r6 — replaces the
-    * content-fingerprint aggregation the steady-state resume paid every
-    * run). Absent or all-empty table → 0, the "empty input ⟺ key 0"
-    * convention [[stageTable]]'s empty-committed-table case relies on
-    * (a nonzero digest is nudged off the sentinel).
-    */
-  private def manifestKey(io: graft.pipeline.TableIO): Long = {
-    val snaps = io.snapshots()
-    if (snaps.isEmpty || snaps.forall(_.rows == 0L)) 0L
-    else {
-      val h = java.nio.ByteBuffer.wrap(manifestMd5(io.root)).getLong
-      if (h == 0L) 1L else h
-    }
-  }
-
-  /** Staleness key for a stage whose output is a deterministic function
-    * of (extracted content, a committed table's content): the extracted
-    * manifest key mixed with the table's manifest digest.
-    */
-  private def upstreamKey(extractedFp: Long, io: graft.pipeline.TableIO): Long =
-    extractedFp * 1000003L ^ java.nio.ByteBuffer.wrap(manifestMd5(io.root)).getLong
 
   /** [[corpusEndToEnd]] with the table root derived from the corpus
     * file-status tag (the derived-layout rule): the same corpus resumes
@@ -788,69 +760,22 @@ object CorpusOps {
   }
 
   /** Stage-level resume for corpus-global stages: the committed table is
-    * reused verbatim iff the input key recorded at commit time matches
-    * the live input; any mismatch — missing table, partial upstream
-    * state, grown or shifted input set — recomputes and replaces. A
-    * crash mid-write never corrupts: the manifest install is atomic, so
-    * the rerun sees the previous (or no) commit and recomputes.
-    *
-    * Freshness is answered from METADATA on the common path (r6, guide
-    * §1.2): a sidecar `.stage-key.json` binds `inputFp` to the exact
-    * manifest bytes it was committed under, so a no-op resume reads two
-    * small files instead of running a `max(src_fp)` aggregation job
-    * over the committed table. The sidecar can never claim false
-    * freshness — it is trusted only when its recorded manifest digest
-    * equals the LIVE manifest bytes (immutable snapshots + exact-set
-    * manifest ⟹ same bytes, same table), and any mismatch (older
-    * sidecar, crash between manifest install and sidecar write, legacy
-    * table) falls back to the original in-table `src_fp` column check,
-    * which still decides correctly. The column stays in every commit,
-    * so the fallback path and older tables keep working.
+    * reused verbatim iff its live snapshots carry `inputKey` as their
+    * manifest tag; any mismatch — missing table, partial upstream
+    * state, grown or shifted input set — recomputes and replaces under
+    * the new key. The key is committed in the same atomic manifest
+    * install as the data, so freshness is answered from metadata alone
+    * (no Spark job) and a crash mid-write leaves the previous (or no)
+    * commit, which the rerun sees as stale and recomputes.
     */
-  private def stageTable(spark: SparkSession, root: String, inputFp: Long)
+  private def stageTable(spark: SparkSession, root: String, inputKey: String)
                         (compute: => DataFrame): DataFrame = {
     val io = new graft.pipeline.TableIO(root)
-    val sidecarPath = java.nio.file.Paths.get(root, ".stage-key.json")
-    // "" while the table has no manifest
-    def liveManifestMd5(): String =
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "manifest.json"))) ""
-      else manifestMd5(root).map("%02x".format(_)).mkString
-    def sidecarFresh(): Boolean =
-      java.nio.file.Files.exists(sidecarPath) && {
-        val s = new String(java.nio.file.Files.readAllBytes(sidecarPath),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val fp = """"input_fp":(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        val md = """"manifest_md5":"([0-9a-f]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-        fp.contains(inputFp) && md.contains(liveManifestMd5())
-      }
-    def columnFresh(): Boolean = io.readTable(spark).exists { df =>
-      // a table written under an older key scheme (no src_fp column)
-      // is simply stale — recompute, never crash
-      df.columns.contains("src_fp") && {
-        val m = df.select(max(col("src_fp"))).head
-        // an empty committed table carries no src_fp value; both stages
-        // produce empty output iff their input was empty, so it is fresh
-        // exactly when the live input is empty too (key 0)
-        if (m.isNullAt(0)) inputFp == 0L else m.getLong(0) == inputFp
-      }
+    val snaps = io.snapshots()
+    if (snaps.isEmpty || snaps.exists(_.tag != inputKey)) {
+      val stage = root.substring(root.lastIndexOf('/') + 1)
+      Scoped(spark, Some(s"e2e: $stage compute"))(io.replaceWith(compute, inputKey))
     }
-    val stage = root.substring(root.lastIndexOf('/') + 1)
-    val fresh = io.snapshots().nonEmpty &&
-      (sidecarFresh() || Scoped(spark, Some(s"e2e: $stage freshness fallback"))(columnFresh()))
-    if (!fresh)
-      Scoped(spark, Some(s"e2e: $stage compute"))(
-        io.replaceWith(compute.withColumn("src_fp", lit(inputFp))))
-    // (re)install the sidecar for the NOW-live manifest — after the
-    // commit, so a crash anywhere above leaves only the fallback path
-    // (correct, just one job slower). Atomic move: a reader never sees
-    // a torn sidecar.
-    val tmp = java.nio.file.Paths.get(root, ".stage-key.tmp")
-    java.nio.file.Files.write(tmp,
-      s"""{"input_fp":$inputFp,"manifest_md5":"${liveManifestMd5()}"}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, sidecarPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    io.readTable(spark).get.drop("src_fp")
+    io.readTable(spark).get
   }
 }

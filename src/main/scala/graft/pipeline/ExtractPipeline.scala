@@ -26,21 +26,28 @@ object ExtractPipeline {
     case _         => TextOps.decodeUtf8Replace(bytes)
   }
 
+  /** One page's main text with its (blocks, content blocks) counts —
+    * the one per-document text function behind both [[extractOne]] and
+    * the `extract_main_text` expression. PDFs (north rule "PDF/layout
+    * parse") are sniffed on their magic bytes and read by the
+    * layout-aware text ops interpreter, one block per line; everything
+    * else is decoded by `charset` and segmented as HTML.
+    */
+  def textOf(bytes: Array[Byte], charset: String): (String, Int, Int) =
+    if (graft.pdf.PdfTextExtractor.isPdf(bytes)) {
+      val text = graft.pdf.PdfTextExtractor.extractText(bytes)
+      val nLines = if (text.isEmpty) 0 else text.count(_ == '\n') + 1
+      (text, nLines, nLines)
+    } else {
+      val (text, st) = MainContent.extractWithStats(decode(bytes, charset))
+      (text, st.blocks, st.contentBlocks)
+    }
+
   def extractOne(p: PageRow, charset: String): ExtractedDoc = {
     try {
-      if (graft.pdf.PdfTextExtractor.isPdf(p.html)) {
-        // PDF leg (north rule "PDF/layout parse"): content-type sniff on
-        // the magic bytes, layout-aware text ops interpreter
-        val text = graft.pdf.PdfTextExtractor.extractText(p.html)
-        val nLines = if (text.isEmpty) 0 else text.count(_ == '\n') + 1
-        ExtractedDoc(p.url, p.warc_ts, text, p.lang, nLines, nLines,
-          p.html.length.toLong, text.length.toLong, parse_ok = true)
-      } else {
-      val html = decode(p.html, charset)
-      val (text, st) = MainContent.extractWithStats(html)
-      ExtractedDoc(p.url, p.warc_ts, text, p.lang, st.blocks, st.contentBlocks,
+      val (text, blocks, contentBlocks) = textOf(p.html, charset)
+      ExtractedDoc(p.url, p.warc_ts, text, p.lang, blocks, contentBlocks,
         p.html.length.toLong, text.length.toLong, parse_ok = true)
-      }
     } catch {
       case _: Exception =>
         ExtractedDoc(p.url, p.warc_ts, "", p.lang, 0, 0,

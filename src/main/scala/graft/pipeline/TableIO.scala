@@ -19,21 +19,25 @@ import java.util.Base64
   * Resume contract (north rule "resumable from snapshot + checkpoint
   * manifests"): each commit appends a snapshot directory
   * `snap-<k>/part-*.parquet` plus a line in `manifest.json` recording
-  * the snapshot id and row count. Pending work = input anti-joined on
-  * the committed key column, so a re-run after a partial failure
-  * processes only missing rows and converges to the identical table.
+  * the snapshot id, row count, schema and the caller's `tag` — what the
+  * snapshot was computed under (an input key, a key scheme), committed
+  * atomically with the data it describes. Pending work = input
+  * anti-joined on the committed key column, so a re-run after a partial
+  * failure processes only missing rows and converges to the identical
+  * table.
   */
 final class TableIO(val root: String) {
   import TableIO.Snapshot
   private val manifestPath = Paths.get(root, "manifest.json")
 
-  /** One manifest line; `schema64` is last so the fixed-order regex
-    * parse of the leading fields is unaffected (legacy lines simply
-    * lack it).
+  /** One manifest line. `schema64` and `tag` follow the fixed leading
+    * fields and are written only when non-empty; lines that lack them
+    * (older commits) read them as "".
     */
   private def manifestLine(s: Snapshot): String =
-    if (s.schema64.isEmpty) s"""{"id":${s.id},"dir":"${s.dir}","rows":${s.rows}}"""
-    else s"""{"id":${s.id},"dir":"${s.dir}","rows":${s.rows},"schema64":"${s.schema64}"}"""
+    s"""{"id":${s.id},"dir":"${s.dir}","rows":${s.rows}""" +
+      (if (s.schema64.isEmpty) "" else s""","schema64":"${s.schema64}"""") +
+      (if (s.tag.isEmpty) "" else s""","tag":"${s.tag}"""") + "}"
 
   /** Every commit also files a copy of the live manifest under
     * `manifests/manifest-<id>.json` — an append-only history that makes
@@ -129,16 +133,16 @@ final class TableIO(val root: String) {
         val id = """"id":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
         val dir = """"dir":"([^"]+)"""".r.findFirstMatchIn(line).get.group(1)
         val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).get.group(1).toLong
-        val schema64 = """"schema64":"([A-Za-z0-9+/=]*)"""".r
+        def opt(field: String) = s""""$field":"([^"]*)"""".r
           .findFirstMatchIn(line).map(_.group(1)).getOrElse("")
-        Snapshot(id, dir, rows, schema64)
+        Snapshot(id, dir, rows, opt("schema64"), opt("tag"))
       }
   }
 
   /** Single-entry relation memo for [[readTable]]: resolving a parquet
     * relation costs a driver job (file listing + schema inference), and
     * resume paths read the same table several times per run (probe,
-    * payload, freshness). Keyed by the LIVE manifest bytes — snapshots
+    * payload, downstream reads). Keyed by the LIVE manifest bytes — snapshots
     * are immutable and the manifest names exactly the visible set, so
     * equal manifest ⟹ the cached plan still reads the correct files;
     * any commit/rollback changes the manifest and misses the cache.
@@ -187,7 +191,10 @@ final class TableIO(val root: String) {
     * inference returns for these files, as the same JSON text — so
     * [[readTable]] skips the per-relation inference job.
     */
-  private def writeSnapshot(df: DataFrame): Snapshot = {
+  private def writeSnapshot(df: DataFrame, tag: String): Snapshot = {
+    // the tag is written into the manifest line unescaped
+    require(tag.matches("[A-Za-z0-9._:+-]*"),
+      s"snapshot tag '$tag' has a character outside [A-Za-z0-9._:+-]")
     val id = nextId()
     val dir = reserveDir(id)
     // Append, NOT Overwrite: Overwrite DELETES the target first, and the
@@ -204,19 +211,37 @@ final class TableIO(val root: String) {
     catch { case _: TimeoutException => throw new IllegalStateException(
       s"row count of $root/$dir never arrived; the snapshot is not committed") }
     val schema = TableIO.asNullable(df.schema).json.getBytes(StandardCharsets.UTF_8)
-    Snapshot(id, dir, rows, Base64.getEncoder.encodeToString(schema))
+    Snapshot(id, dir, rows, Base64.getEncoder.encodeToString(schema), tag)
   }
 
-  /** Append `df` as a new snapshot; manifest write is atomic (tmp +
-    * move) so a crash mid-commit leaves the previous snapshot intact.
+  /** Append `df` as a new snapshot tagged `tag`; manifest write is
+    * atomic (tmp + move) so a crash mid-commit leaves the previous
+    * snapshot intact. An append of no rows commits nothing: the
+    * write's observed count is 0, so its reserved dir is removed, the
+    * manifest stays byte-identical and the returned (uncommitted)
+    * snapshot has `rows = 0` — a resume with nothing pending leaves no
+    * trace and needs no emptiness probe of its own.
     */
-  def appendSnapshot(df: DataFrame): Snapshot = {
+  def appendSnapshot(df: DataFrame, tag: String = ""): Snapshot = {
     val base = manifestBase()
     val prev = snapshots()
-    val snap = writeSnapshot(df)
-    val all = (prev :+ snap).map(manifestLine).mkString("", "\n", "\n")
-    commitManifest(all, snap.id, base)
+    val snap = writeSnapshot(df, tag)
+    if (snap.rows == 0L) {
+      val files = Files.walk(Paths.get(root, snap.dir))
+      try files.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally files.close()
+    } else
+      commitManifest((prev :+ snap).map(manifestLine).mkString("", "\n", "\n"), snap.id, base)
     snap
+  }
+
+  /** The tag every live snapshot carries ("" if they differ or none
+    * is live): the rewrites of the live table ([[mergeByKey]],
+    * [[deleteWhere]], [[compact]]) keep it.
+    */
+  private def liveTag(): String = snapshots().map(_.tag).distinct match {
+    case Seq(t) => t
+    case _ => ""
   }
 
   /** True iff [[pending]] over `input` has any row, answered from
@@ -285,17 +310,19 @@ final class TableIO(val root: String) {
         val survivors = committed.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         survivors.unionByName(updates)
     }
-    replaceWith(merged)
+    replaceWith(merged, liveTag())
   }
 
   /** Replace the whole table content with `df` as a single new snapshot
-    * (Iceberg `overwritePartitions` analog). Earlier snapshot dirs stay
-    * on disk for rollback; the manifest only references the new one.
+    * tagged `tag` (Iceberg `overwritePartitions` analog). Earlier
+    * snapshot dirs stay on disk for rollback; the manifest only
+    * references the new one. Unlike [[appendSnapshot]], an empty `df`
+    * still commits: the table then holds no rows.
     */
-  def replaceWith(df: DataFrame): Snapshot = {
+  def replaceWith(df: DataFrame, tag: String = ""): Snapshot = {
     val base = manifestBase()
     // materialize BEFORE truncating the manifest: df may read prior snapshots
-    val snap = writeSnapshot(df)
+    val snap = writeSnapshot(df, tag)
     commitManifest(manifestLine(snap) + "\n", snap.id, base)
     snap
   }
@@ -312,7 +339,7 @@ final class TableIO(val root: String) {
     // rows where it evaluates NULL (e.g. a NULL key against isin) are
     // survivors — a bare !condition would silently destroy them
     readTable(spark).map(committed =>
-      replaceWith(committed.filter(!coalesce(condition, lit(false)))))
+      replaceWith(committed.filter(!coalesce(condition, lit(false))), liveTag()))
 
   /** Key-list convenience over [[deleteWhere]] (delete one report's /
     * environment's rows by id).
@@ -329,13 +356,15 @@ final class TableIO(val root: String) {
     */
   def compact(spark: SparkSession): Option[Snapshot] =
     if (snapshots().size <= 1) None
-    else readTable(spark).map(replaceWith)
+    else readTable(spark).map(replaceWith(_, liveTag()))
 
   /** Restore the table to a past snapshot by reinstalling that commit's
     * manifest as the live view (Iceberg rollback analog — the data dirs
     * were never deleted, so this is a metadata-only operation). Ids are
     * never reused, so commits after a rollback keep working; the
     * abandoned branch's dirs stay on disk, referenced only by history.
+    * The history manifest holds the snapshots' tags too, so the
+    * restored view carries the tags it was committed with.
     */
   def rollbackTo(snapshotId: Long): Unit = {
     val src = historyDir.resolve(s"manifest-$snapshotId.json")
@@ -349,7 +378,7 @@ final class TableIO(val root: String) {
 
 object TableIO {
   final case class Snapshot(id: Long, dir: String, rows: Long,
-                            schema64: String = "")
+                            schema64: String = "", tag: String = "")
 
   /** `t` with every struct field, array element and map value nullable —
     * parquet schema inference's view of data written with type `t`.
@@ -362,7 +391,8 @@ object TableIO {
   }
 
   /** Resumable run: extract + commit only pages whose url is not yet in
-    * the output table. Returns the number of newly committed rows.
+    * the output table. Returns the number of newly committed rows; a run
+    * with nothing pending commits no snapshot.
     * [[TableIO.pending]]'s two-phase shape keeps page bodies out of the
     * anti-join exchanges.
     */

@@ -43,4 +43,32 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.setDefaultSession(base)
     }
   }
+
+  test("GraftExtensions and GraftFunctions.register expose the same SQL functions") {
+    val base = SparkTestSession.spark
+    def names(s: SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    // newSession() starts from the built-ins alone: no temp function of
+    // the shared session, no extension
+    val builtin = names(base.newSession())
+    val registered = {
+      val s = base.newSession()
+      graft.functions.GraftFunctions.register(s)
+      names(s) -- builtin
+    }
+    val injected = try {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      names(SparkSession.builder().master("local[2]")
+        .withExtensions(new GraftExtensions())
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()) -- builtin
+    } finally {
+      SparkSession.setActiveSession(base)
+      SparkSession.setDefaultSession(base)
+    }
+    assert(registered.nonEmpty)
+    assert(registered == injected,
+      s"only registered: ${registered -- injected}; only injected: ${injected -- registered}")
+  }
 }

@@ -59,10 +59,12 @@ class MstrJoinSpec extends AnyFunSuite {
     val n3 = MstrJoinPipeline.resumeExtract(spark, pagesDs, io)
     assert(n3 == 0 && io.snapshots().size == snapsBefore)
 
-    // key-scheme guard: a committed table without the marker (a legacy
-    // selection-relative-ordinal table) must refuse to resume — its
-    // keys could alias the full-index ordinals this build writes
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "key-scheme"))
+    // key-scheme guard: a table holding a snapshot committed without the
+    // scheme tag (a legacy selection-relative-ordinal commit) must refuse
+    // to resume — its keys could alias the full-index ordinals this
+    // build writes
+    io.appendSnapshot(table.limit(1))
+    assert(io.snapshots().last.tag.isEmpty)
     intercept[IllegalArgumentException] {
       MstrJoinPipeline.resumeExtract(spark, pagesDs, io)
     }

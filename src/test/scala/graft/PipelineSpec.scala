@@ -283,6 +283,50 @@ class PipelineSpec extends AnyFunSuite {
     } finally sc.setJobDescription(null)
   }
 
+  test("a no-op resumeExtract commits nothing: manifest byte-identical, no new snapshot dir") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-noop-resume").toString
+    val io = new TableIO(root)
+    val pages = spark.createDataset(WebCorpus.generate(20).map(_.page))
+    assert(TableIO.resumeExtract(io, pages) == 20)
+    def manifest = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root, "manifest.json")).toSeq
+    def snapDirs = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      try s.toArray.toSeq.map(_.toString).filter(_.contains("snap-")).sorted finally s.close()
+    }
+    val (m, dirs) = (manifest, snapDirs)
+    assert(TableIO.resumeExtract(io, pages) == 0)
+    assert(manifest == m, "a no-op resume rewrote the manifest")
+    assert(snapDirs == dirs, "a no-op resume left a snapshot dir")
+  }
+
+  test("a stage table's manifest tag survives rollbackTo: the restored stage is fresh again") {
+    import spark.implicits._
+    val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft-tag-docs").toString
+    src.filter(col("doc_id") < 80).write.parquet(s"$dir/documents.parquet")
+    val root = java.nio.file.Files.createTempDirectory("graft-tag").toString
+    val cold = graft.ops.CorpusOps.corpusEndToEnd(spark, dir, root).collect().map(_.toString).sorted
+    val packed = new TableIO(s"$root/packed")
+    val committed = packed.snapshots()
+    assert(committed.size == 1 && committed.head.tag.nonEmpty, s"untagged stage: $committed")
+    // the rewrites of the live table keep its tag
+    packed.compact(spark)
+    packed.deleteWhere(spark, org.apache.spark.sql.functions.lit(false))
+    assert(packed.snapshots().map(_.tag) == Seq(committed.head.tag))
+    // a commit under another key, then the rollback to the stage's commit
+    packed.replaceWith(Seq(1).toDF("x"), "other-key")
+    packed.rollbackTo(committed.head.id)
+    assert(packed.snapshots() == committed)
+    val (again, log) = graft.obs.JobLog.record(spark, "after rollback") {
+      graft.ops.CorpusOps.corpusEndToEnd(spark, dir, root).collect().map(_.toString).sorted
+    }
+    assert(again.sameElements(cold))
+    assert(!log.jobs.flatMap(_.description).exists(_.endsWith("compute")),
+      s"a stage recomputed after the rollback: ${log.jobs.flatMap(_.description)}")
+    assert(packed.snapshots() == committed)
+  }
+
   test("mergeByKey: MERGE INTO-shaped upsert is idempotent and keeps rollback snapshots") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-merge").toString
@@ -480,7 +524,9 @@ class PipelineSpec extends AnyFunSuite {
     val none = Await.result(Future(empty.appendSnapshot(Seq.empty[(String, Int)].toDF("key", "v"))),
       120.seconds)
     assert(none.rows == 0)
-    assertCommitMetadata(empty, none)
+    // an empty append commits nothing: no manifest line, no snapshot dir
+    assert(empty.snapshots().isEmpty && !java.nio.file.Files.exists(
+      java.nio.file.Paths.get(empty.root, none.dir)))
   }
 
   test("a commit runs exactly one Spark job: the write") {

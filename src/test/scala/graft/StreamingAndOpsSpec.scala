@@ -304,6 +304,23 @@ class StreamingAndOpsSpec extends AnyFunSuite {
     assert(n == "EXPRESSAO")
   }
 
+  test("extract_main_text: a PDF page reads the same through Column, SQL and the pipeline") {
+    import spark.implicits._
+    val page = graft.pipeline.PageRow("pdf://1", new java.sql.Timestamp(0L),
+      graft.pdf.PdfGen.pdf(Seq("first pdf line", "second pdf line"), flate = true), "", "en")
+    val ds = spark.createDataset(Seq(page))
+    val viaPipeline = graft.pipeline.ExtractPipeline.run(ds).collect().head.text
+    assert(viaPipeline == "first pdf line\nsecond pdf line")
+    val viaCol = ds.select(
+      graft.functions.GraftFunctions.extract_main_text(col("html"), lit("utf-8")))
+      .as[String].collect().head
+    graft.functions.GraftFunctions.register(spark)
+    ds.toDF().createOrReplaceTempView("pdf_pages_v")
+    val viaSql = spark.sql("SELECT extract_main_text(html, 'utf-8') FROM pdf_pages_v")
+      .as[String].collect().head
+    assert(viaCol == viaPipeline && viaSql == viaPipeline)
+  }
+
   test("multimodal: REAL AVI/DIB decode inverts the hand-rolled container write") {
     import graft.ops.MultimodalOps
     // direct roundtrip: the generated bytes are a chunk-walkable AVI
