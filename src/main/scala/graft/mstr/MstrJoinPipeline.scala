@@ -508,9 +508,11 @@ object MstrJoinPipeline {
     *    table holding a snapshot committed under a different scheme, or
     *    under none (an older build's selection-relative ordinals), fails
     *    loudly instead of aliasing keys;
-    *  - nothing pending commits NO snapshot (an empty append commits
-    *    nothing), and the union of snapshots after any interrupt/resume
-    *    sequence equals a cold one-shot run's rows (MstrJoinSpec).
+    *  - nothing pending runs no pass and commits NO snapshot (an
+    *    empty work list returns before the pages layout, and an empty
+    *    append commits nothing), and the union of snapshots after any
+    *    interrupt/resume sequence equals a cold one-shot run's rows
+    *    (MstrJoinSpec).
     *
     * Returns the number of newly committed report rows.
     */
@@ -643,7 +645,6 @@ object MstrJoinPipeline {
     // driver's planning and every stage task — one parse, not two
     val handle = new IndexHandle(indexHtml, lang)
     val indexes = handle.indexes
-    val bIdx = spark.sparkContext.broadcast(handle)
 
     // The staged passes run on the RDD layer deliberately: every stage
     // is per-partition imperative logic over OPAQUE java-serialized
@@ -673,6 +674,13 @@ object MstrJoinPipeline {
     // the driver — bounded by index-file size); everything after it is
     // distributed.
     val reportReqs: Seq[ReportReq] = workOf(indexes.documento)
+    // nothing to extract (a no-op resume, a selection matching no
+    // report): no pages layout, no broadcast, no pass
+    if (reportReqs.isEmpty) {
+      lastRouting.set(RoutingTrace(Set.empty, Set.empty, 0))
+      return spark.emptyDataset[T](enc)
+    }
+    val bIdx = spark.sparkContext.broadcast(handle)
 
     // ---- hot-basename skew routing ----
     // The by-file partitioner serializes each file's whole request list

@@ -69,62 +69,6 @@ object MstrParsers {
     out.toIndexedSeq
   }
 
-  /** extract_table_data (base_parser.py:167-189). */
-  def extractTableData(s: Soup, table: Node, skipHeader: Boolean = true): List[List[String]] = {
-    val trs = s.findAllIn(table, "tr")
-    val start = if (skipHeader && trs.length > 1) 1 else 0
-    trs.drop(start).flatMap { tr =>
-      val row = s.findAllIn2(tr, "td", "th").map(s.textStrip).toList
-      if (row.exists(_.nonEmpty)) Some(row) else None
-    }.toList
-  }
-
-  /** get_table_headers (base_parser.py:192-207). */
-  def getTableHeaders(s: Soup, table: Node): List[String] = {
-    val tr = s.findIn(table, "tr")
-    if (tr < 0) Nil else s.findAllIn2(tr, "td", "th").map(s.textStrip).toList
-  }
-
-  /** find_next_table_after (base_parser.py:210-241): ≤10 tables, skip
-    * tables without header+data.
-    */
-  def findNextTableAfter(s: Soup, element: Node, skipEmpty: Boolean = true,
-                         maxSearch: Int = 10): Node = {
-    var current = element
-    var checked = 0
-    while (checked < maxSearch) {
-      current = s.findNext(current, "table")
-      if (current < 0) return -1
-      checked += 1
-      if (!skipEmpty) return current
-      if (s.findAllIn(current, "tr").length > 1) return current
-    }
-    -1
-  }
-
-  /** is_empty_table (base_parser.py:282-304). */
-  def isEmptyTable(s: Soup, table: Node): Boolean = {
-    val trs = s.findAllIn(table, "tr")
-    if (trs.isEmpty) return true
-    !trs.exists(tr => s.findAllIn2(tr, "td", "th").exists(c => s.textStrip(c).nonEmpty))
-  }
-
-  /** extract_links_from_cell (base_parser.py:244-279). */
-  def extractLinksFromCell(s: Soup, cell: Node): List[(String, String, Option[String])] = {
-    s.findAllIn(cell, "a").flatMap { a =>
-      val text = s.textStrip(a)
-      val href = s.attr(a, "href")
-      if (text.isEmpty || href.isEmpty) None
-      else {
-        val id = idFromPlaceholder(href).orElse {
-          val (_, anc) = splitHref(href)
-          if (href.contains("#")) Some(anc) else None
-        }
-        Some((text, href, id))
-      }
-    }.toList
-  }
-
   /** extract_datasets_from_report (report_parser.py:131-205). */
   def extractDatasetsFromReport(s: Soup, loc: MstrLocale, objectName: String,
                                 anchor: Option[String]): List[(String, Option[String], String)] = {
@@ -853,45 +797,6 @@ object MstrParsers {
             idFromPlaceholder(href).foreach { id =>
               if (!out.exists(_.id == id))
                 out += LogicTable(name, id, None, columnName)
-            }
-          }
-        }
-      }
-    }
-    out.toList
-  }
-
-  /** extract_expressions_table (fact_parser.py:285-337). */
-  def extractExpressionsTable(s: Soup, loc: MstrLocale, objectName: String,
-                              anchor: Option[String]): List[(String, String)] = {
-    val section = findObjectSection(s, objectName, anchor)
-    if (section < 0) return Nil
-    val out = ArrayBuffer.empty[(String, String)]
-    for (header <- s.findAllIn(section, "td") if s.t.hasClass(header, "SECTIONHEADER")) {
-      val headerText = s.t.textRaw(header)
-      if (headerText.contains(loc.expressoes) || headerText.contains("EXPRESS")) {
-        val nextTable = s.findNext(header, "table")
-        if (nextTable >= 0) {
-          val headerRow = s.findIn(nextTable, "tr")
-          if (headerRow >= 0) {
-            val headers = s.findAllIn2(headerRow, "td", "th").map(s.textStrip)
-            var exprCol = -1
-            var tableCol = -1
-            for ((h, i) <- headers.zipWithIndex) {
-              val hu = h.toUpperCase(java.util.Locale.ROOT)
-              if (hu.contains(loc.expressao.toUpperCase(java.util.Locale.ROOT)) ||
-                hu.contains(loc.expression)) exprCol = i
-              if (hu.contains(loc.tabelasFonte) || hu.contains(loc.sourceTables)) tableCol = i
-            }
-            if (exprCol >= 0 && tableCol >= 0) {
-              for (row <- s.findAllIn(nextTable, "tr").drop(1)) {
-                val cells = s.findAllIn2(row, "td", "th")
-                if (cells.length > math.max(exprCol, tableCol)) {
-                  val expr = s.textStrip(cells(exprCol))
-                  val tab = s.textStrip(cells(tableCol))
-                  if (expr.nonEmpty) out += ((expr, tab))
-                }
-              }
             }
           }
         }

@@ -17,9 +17,6 @@ final class Soup(val t: TagTree) {
 
   @inline def n: Int = t.size
 
-  def findFirstElem(nm: String, from: Int = 0, until: Int = -1): Int =
-    t.findElem(from, if (until < 0) n else until, nm)
-
   /** Lazily-built first-occurrence index over `<a name=...>`: the
     * giant-hot-page profile (MstrHotSkewBench, BASELINE.md round-5
     * salt section) showed the per-salt straggler floor was NOT the
@@ -59,13 +56,6 @@ final class Soup(val t: TagTree) {
   /** element.find_next(name) — first match strictly after pre-order i. */
   def findNext(i: Int, nm: String): Int =
     t.findFirst(i + 1, n)(j => t.isElem(j) && t.name(j) == nm)
-
-  /** element.find_next() — next node (any element) in parse order. */
-  def findNextAny(i: Int): Int = {
-    var j = i + 1
-    while (j < n && !t.isElem(j) && !t.isText(j) && !t.isComment(j)) j += 1
-    if (j < n) j else -1
-  }
 
   /** find_next('table', class_=cls) */
   def findNextTableWithClass(i: Int, cls: String): Int =

@@ -429,23 +429,16 @@ object CorpusOps {
     * decontaminate output.
     */
   def filterPipeline(spark: SparkSession, dir: String): DataFrame =
-    filterPipelineScoped(spark, dir, identity)
+    filterPipelineOver(spark, dir, trainingDocs(spark, dir))
 
-  /** [[filterPipeline]] with `scope` restricting the TRAINING-side docs
-    * every signal computes over — the incremental-resume hook: a
-    * resumed run anti-joins the committed keys here, so
-    * already-decided documents never pay language-ID, quality, the
-    * bigram explode, or the decontamination semi-join again. The
-    * benchmark reference slice is never scoped (decontamination must
-    * always compare against the full held-out set).
+  /** The source corpus' TRAINING-side docs, the input every
+    * standalone filter run decides. The benchmark slice never survives
+    * the join with `base` — it is filtered BEFORE the bigram explode
+    * instead of discarding its aggregated rows afterwards
+    * (decontaminateOf already takes the training cut).
     */
-  private def filterPipelineScoped(spark: SparkSession, dir: String,
-                                   scope: DataFrame => DataFrame): DataFrame =
-    // the benchmark slice never survives the join with `base` — filter
-    // it BEFORE the bigram explode instead of discarding its aggregated
-    // rows afterwards (decontaminateOf already takes the training cut)
-    filterPipelineOver(spark, dir,
-      scope(Par.spread(docs(spark, dir).filter(col("doc_id") % 11 =!= 0), dir)))
+  private[graft] def trainingDocs(spark: SparkSession, dir: String): DataFrame =
+    Par.spread(docs(spark, dir).filter(col("doc_id") % 11 =!= 0), dir)
 
   /** Filter signals over a caller-supplied TRAINING-side (doc_id, text)
     * table — the chained-pipeline hook: [[corpusEndToEnd]] feeds the
@@ -482,15 +475,17 @@ object CorpusOps {
     * doc, kept or not — committing drops too is what lets a resume skip
     * them) is appended as a snapshot, and a re-run anti-joins the
     * committed doc_ids BEFORE any signal computes, so only new
-    * documents pay the pipeline. Returns the rows committed by THIS
-    * run (a run with nothing pending commits no snapshot); the
-    * filtered corpus is `readTable(...).filter(col("keep"))`.
+    * documents pay the pipeline, and a run with nothing pending
+    * computes no signal ([[graft.pipeline.TableIO.appendPending]]).
+    * Returns the rows committed by THIS run; the filtered corpus is
+    * `readTable(...).filter(col("keep"))`. Only the training docs are
+    * narrowed to the pending ones: decontamination always compares
+    * against the full held-out set.
     */
   def filterPipelineIncremental(spark: SparkSession, dir: String,
-                                tableRoot: String): Long = {
-    val io = new graft.pipeline.TableIO(tableRoot)
-    io.appendSnapshot(filterPipelineScoped(spark, dir, d => io.pending(d, "doc_id"))).rows
-  }
+                                tableRoot: String): Long =
+    new graft.pipeline.TableIO(tableRoot)
+      .appendPending(trainingDocs(spark, dir), "doc_id")(filterPipelineOver(spark, dir, _))
 
   /** The brief's LLM-training-data pipeline as ONE resumable artifact:
     * extract → exact dedup → near-dup dedup (MinHash-LSH connected
@@ -544,24 +539,16 @@ object CorpusOps {
     // the pending anti-join runs over a urls-only projection (doc_id →
     // ExtractOps.docUrlCol, the documentsAsPages url rule) so committed docs
     // never pay page synthesis and no page body rides the anti-join —
-    // only the pending ids' pages are ever built. The keys-only
-    // hasPending probe gates that payload work: with nothing pending, no
-    // pending set is persisted and no page is synthesized or parsed
-    // (the empty append itself would commit nothing either way).
+    // only the pending ids' pages are ever built, and none when nothing
+    // is pending
     val livePages = docs(spark, dir).select(col("doc_id"),
       ExtractOps.docUrlCol(col("doc_id")).as("url"))
-    if (Scoped(spark, Some("e2e: extract pending probe"))(
-        extractIo.hasPending(livePages, "url"))) {
-      val pendingIds = extractIo.pending(livePages, "url")
-        .select(col("doc_id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val todoDir = docs(spark, dir).join(pendingIds, Seq("doc_id"))
-        val todoPages = ExtractOps.documentsAsPagesOf(todoDir)
-        Scoped(spark, Some("e2e: extract append"))(extractIo.appendSnapshot(
-          graft.pipeline.ExtractPipeline.run(todoPages, "utf-8").toDF()))
-      } finally pendingIds.unpersist(blocking = false)
-    }
+    Scoped(spark, Some("e2e: extract append"))(
+      extractIo.appendPending(livePages, "url") { todo =>
+        val todoPages = ExtractOps.documentsAsPagesOf(
+          docs(spark, dir).join(todo.select(col("doc_id")), Seq("doc_id")))
+        graft.pipeline.ExtractPipeline.run(todoPages, "utf-8").toDF()
+      })
     val extracted = extractIo.readTable(spark).get
       .select(
         ExtractOps.docIdCol(col("url")).as("doc_id"),
@@ -575,7 +562,7 @@ object CorpusOps {
       // steady-state resume used to pay every run is gone. Strictly
       // finer than a content fingerprint (a rewrite with identical
       // content recomputes downstream — the safe direction).
-      val extractedKey = manifestKey(extractIo)
+      val extractedKey = extractIo.manifestDigest()
 
       // ---- stage D: dedup survivors, stage-level freshness with
       // INCREMENTAL recompute on corpus growth (verdict r5 next #1) ----
@@ -594,19 +581,10 @@ object CorpusOps {
       val decisionsIo = new graft.pipeline.TableIO(s"$tableRoot/decisions")
       val training = extracted.join(survivors, Seq("doc_id"))
         .filter(col("doc_id") % 11 =!= 0)
-      // keys-only probe, as in stage E: it gates the filter signals —
-      // with nothing pending, the doc_id anti-join (text pruned out of
-      // both scans) is the only work, and pending()'s payload re-join
-      // and every signal are skipped
-      if (Scoped(spark, Some("e2e: decisions pending probe"))(
-          decisionsIo.hasPending(training, "doc_id"))) {
-        val todoDocs = decisionsIo.pending(training, "doc_id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          Scoped(spark, Some("e2e: decisions append"))(
-            decisionsIo.appendSnapshot(filterPipelineOver(spark, dir, todoDocs)))
-        } finally todoDocs.unpersist(blocking = false)
-      }
+      // gated as in stage E: with nothing pending, the doc_id anti-join
+      // (text pruned out of both scans) is the only work
+      Scoped(spark, Some("e2e: decisions append"))(
+        decisionsIo.appendPending(training, "doc_id")(filterPipelineOver(spark, dir, _)))
       // decisions may carry docs that stopped surviving after a corpus
       // grew (dedup found a smaller twin) — the survivors join drops
       // them. `def`, not `val`: resolving the decisions relation costs a
@@ -628,7 +606,7 @@ object CorpusOps {
       // changes no decision recomputes packed — the safe direction;
       // a count-keyed reuse of a stale table remains impossible).
       stageTable(spark, s"$tableRoot/packed",
-        s"$extractedKey.${manifestKey(decisionsIo)}") {
+        s"$extractedKey.${decisionsIo.manifestDigest()}") {
         packSequencesOf(extracted.join(kept, Seq("doc_id")))
       }
     } finally extracted.unpersist(blocking = false)
@@ -722,19 +700,6 @@ object CorpusOps {
       }
     }
     ccIo.readTable(spark).get
-  }
-
-  /** Content key for a committed table: the hex md5 of its live
-    * manifest bytes (of no bytes while it has none), the one digest
-    * behind every metadata-only staleness key here. Snapshot dirs are
-    * immutable and the manifest names exactly the visible set, so equal
-    * manifest ⟺ equal table content; no Spark job runs.
-    */
-  private def manifestKey(io: graft.pipeline.TableIO): String = {
-    val m = java.nio.file.Paths.get(io.root, "manifest.json")
-    java.security.MessageDigest.getInstance("MD5").digest(
-      if (java.nio.file.Files.exists(m)) java.nio.file.Files.readAllBytes(m)
-      else Array.emptyByteArray).map("%02x".format(_)).mkString
   }
 
   /** [[corpusEndToEnd]] with the table root derived from the corpus

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.spark.storage.StorageLevel
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -25,6 +26,14 @@ import java.util.Base64
   * anti-joined on the committed key column, so a re-run after a partial
   * failure processes only missing rows and converges to the identical
   * table.
+  *
+  * Per-key resume: [[appendPending]] is the one gated form — a
+  * keys-only [[hasPending]] probe, and only when something is pending
+  * the persisted [[pending]] rows, the caller's build and the append; a
+  * resume with nothing pending runs no stage work. [[TableIO.resumeExtract]]
+  * stays ungated (`pending` straight into the append): its build is one
+  * narrow map fused into the write, so the probe would only add a job
+  * to a warm resume that otherwise runs in three.
   */
 final class TableIO(val root: String) {
   import TableIO.Snapshot
@@ -254,6 +263,34 @@ final class TableIO(val root: String) {
       case None => !input.select(col(keyCol)).isEmpty
       case Some(committed) => !pendingKeys(input, committed, keyCol).isEmpty
     }
+
+  /** Appends `build` over the input rows whose key is not yet
+    * committed and returns the rows committed. The keys-only
+    * [[hasPending]] probe runs first: with nothing pending `build` is
+    * never called and 0 is returned. Otherwise the [[pending]] rows are
+    * persisted for the build (which may read them more than once) and
+    * released once the append is done, committed or not.
+    * [[TableIO.resumeExtract]] skips the probe: its build is one narrow
+    * map fused into the write, so there the probe would cost more than
+    * it saves.
+    */
+  def appendPending(input: DataFrame, keyCol: String)(build: DataFrame => DataFrame): Long =
+    if (!hasPending(input, keyCol)) 0L
+    else {
+      val todo = pending(input, keyCol).persist(StorageLevel.MEMORY_AND_DISK)
+      try appendSnapshot(build(todo)).rows
+      finally todo.unpersist(blocking = false)
+    }
+
+  /** Hex md5 of the live manifest bytes (of no bytes while there is
+    * none): a content key for the table, since snapshot dirs are
+    * immutable and the manifest names exactly the visible set. Equal
+    * digest ⟺ equal table content, answered without a Spark job.
+    */
+  def manifestDigest(): String =
+    java.security.MessageDigest.getInstance("MD5").digest(
+      if (Files.exists(manifestPath)) Files.readAllBytes(manifestPath) else Array.emptyByteArray)
+      .map("%02x".format(_)).mkString
 
   /** Input keys with no committed row (null keys included: a null
     * equals no committed key). Duplicates stay; no caller needs them

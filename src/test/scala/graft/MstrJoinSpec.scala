@@ -70,6 +70,27 @@ class MstrJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("an empty work list runs no pass: no-op resumeExtract and a selection matching nothing") {
+    import spark.implicits._
+    val pagesDs = spark.createDataset(graft.fixtures.MstrGen.pages(4)).repartition(4)
+    val io = new graft.pipeline.TableIO(
+      java.nio.file.Files.createTempDirectory("graft-mstr-noop").toString)
+    assert(MstrJoinPipeline.resumeExtract(spark, pagesDs, io) == 4)
+    val passes = Set("stage R", "stage D", "assembly").map(p => s"mstr join: $p")
+    def ranPass(log: JobLog): Seq[String] = log.jobs.flatMap(_.description)
+      .filter(d => passes(d) || d.startsWith("mstr join: level "))
+    val (n, noop) = JobLog.record(spark, "mstr no-op resume") {
+      MstrJoinPipeline.resumeExtract(spark, pagesDs, io)
+    }
+    assert(n == 0)
+    assert(ranPass(noop).isEmpty, s"a no-op resume ran passes: ${ranPass(noop)}")
+    val (rows, none) = JobLog.record(spark, "mstr empty selection") {
+      MstrJoinPipeline.run(spark, pagesDs, select = Some(_ => Nil)).count()
+    }
+    assert(rows == 0)
+    assert(ranPass(none).isEmpty, s"an empty selection ran passes: ${ranPass(none)}")
+  }
+
   test("hot-basename corpus: salted routing engages and stays byte-identical to broadcast") {
     import spark.implicits._
     // all cube sections in ONE content file: its request fan-in exceeds

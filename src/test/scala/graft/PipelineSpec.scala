@@ -50,7 +50,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.sameElements(b))
   }
 
-  test("skew routing separates giant pages and lineage metrics add up") {
+  test("lineage metrics add up: doc and parse-failure sums") {
     import spark.implicits._
     val fixtures = WebCorpus.generate(80, giantEvery = 20, giantParagraphs = 200)
     val pages = spark.createDataset(fixtures.map(_.page))
@@ -62,8 +62,6 @@ class PipelineSpec extends AnyFunSuite {
     val rows = lineage.asScala.toSeq
     assert(rows.map(_.docs).sum == 80)
     assert(rows.map(_.parse_failures).sum == 0)
-    // giant pages (4 of them) land in the dedicated tail partitions
-    val giantUrls = fixtures.filter(_.page.html.length >= (1 << 20)).map(_.page.url)
     assert(rows.nonEmpty)
   }
 
@@ -103,6 +101,23 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id", "lang_ok", "quality_ok", "repetition_ok", "decontam_ok", "keep")
       .collect().map(_.toString).sorted.toSeq
     assert(resumedTable == oneShot)
+  }
+
+  test("a no-op filterPipelineIncremental runs no more jobs than its pending probe") {
+    val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val root = java.nio.file.Files.createTempDirectory("graft-filter-noop").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-filter-noop-docs").toString
+    src.filter(col("doc_id") < 120).write.parquet(s"$dir/documents.parquet")
+    assert(graft.ops.CorpusOps.filterPipelineIncremental(spark, dir, root) > 0)
+    def jobsOf[T](label: String)(body: => T): (T, Int) = {
+      val (out, log) = graft.obs.JobLog.record(spark, label)(body)
+      (out, log.jobs.size)
+    }
+    val (n, noop) = jobsOf("no-op filter")(graft.ops.CorpusOps.filterPipelineIncremental(spark, dir, root))
+    val (pending, probe) = jobsOf("pending probe")(
+      new TableIO(root).hasPending(graft.ops.CorpusOps.trainingDocs(spark, dir), "doc_id"))
+    assert(n == 0 && !pending)
+    assert(noop <= probe, s"a no-op filter run ran $noop jobs, its probe alone $probe")
   }
 
   test("doc url rule: column form is byte-identical to the literal form (resume key contract)") {
