@@ -6,9 +6,9 @@ import scala.collection.mutable.ArrayBuffer
 
 /** What one body of Spark work ran: its jobs, its submitted stages (a
   * skipped stage never submits) and every task of those stages, with
-  * its run time, GC time, shuffle-write and spill bytes. Built by
-  * [[JobLog.record]]; [[json]] sums it up under perfbench's per-layer
-  * metric names.
+  * its run time, deserialization time, GC time, shuffle-write and
+  * spill bytes. Built by [[JobLog.record]]; [[json]] sums it up under
+  * perfbench's per-layer metric names.
   */
 final case class JobLog(label: String, wallS: Double, jobs: Seq[JobLog.Job],
                         stages: Seq[Int], tasks: Seq[JobLog.Task]) {
@@ -19,7 +19,8 @@ final case class JobLog(label: String, wallS: Double, jobs: Seq[JobLog.Job],
     val run = runS
     f"""{"label":"$label","jobs":${jobs.size},"stages":${stages.size},"tasks":${tasks.size},""" +
       f""""task_s_sum":${run.sum}%.3f,"task_s_max":${run.lastOption.getOrElse(0.0)}%.3f,""" +
-      f""""task_s_median":${JobLog.median(run)}%.3f,"gc_s":${tasks.map(_.gcMs).sum / 1e3}%.3f,""" +
+      f""""task_s_median":${JobLog.median(run)}%.3f,"deser_s_sum":${tasks.map(_.deserMs).sum / 1e3}%.3f,""" +
+      f""""gc_s":${tasks.map(_.gcMs).sum / 1e3}%.3f,""" +
       s""""shuffle_write_bytes":${tasks.map(_.shuffleWriteBytes).sum},""" +
       s""""spill_bytes":${tasks.map(_.spillBytes).sum}}"""
   }
@@ -27,8 +28,11 @@ final case class JobLog(label: String, wallS: Double, jobs: Seq[JobLog.Job],
 
 object JobLog {
   final case class Job(id: Int, description: Option[String], startMs: Long, endMs: Long)
-  final case class Task(stageId: Int, runMs: Long, gcMs: Long, shuffleWriteBytes: Long,
-                        spillBytes: Long)
+  /** `deserMs` is the executor's task deserialization time, which
+    * `runMs` (`executorRunTime`) does not include.
+    */
+  final case class Task(stageId: Int, runMs: Long, deserMs: Long, gcMs: Long,
+                        shuffleWriteBytes: Long, spillBytes: Long)
 
   /** Runs `body` under a fresh job tag and logs the jobs that carry it.
     * The caller's job group and description are left alone. The
@@ -81,7 +85,7 @@ object JobLog {
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       val m = e.taskMetrics
       if (m != null && stages.contains(e.stageId))
-        tasks += Task(e.stageId, m.executorRunTime, m.jvmGCTime,
+        tasks += Task(e.stageId, m.executorRunTime, m.executorDeserializeTime, m.jvmGCTime,
           m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled)
     }
 

@@ -1,11 +1,19 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.storage.StorageLevel
-import scala.concurrent.{Await, TimeoutException}
-import scala.concurrent.duration._
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import java.util.Base64
@@ -26,6 +34,18 @@ import java.util.Base64
   * anti-joined on the committed key column, so a re-run after a partial
   * failure processes only missing rows and converges to the identical
   * table.
+  *
+  * Commit protocol, the Iceberg writer's shape (data files straight into
+  * the table, made visible by the manifest alone): a commit reserves
+  * `snap-<k>` and writes it in ONE Spark job of its own over the query's
+  * rows. The Hadoop conf is prepared once on the driver and reaches the
+  * tasks as one broadcast. Each task writes its partition's file under a
+  * `.`-prefixed in-progress name and renames it to `part-…parquet` only
+  * once Spark's output commit coordinator authorizes that attempt, so
+  * one attempt per partition lands and no `_temporary` dir, task or job
+  * rename, or `_SUCCESS` marker is involved. The driver sums the
+  * committed tasks' rows and installs the manifest line; until then no
+  * reader sees the snapshot.
   *
   * Per-key resume: [[appendPending]] is the one gated form — a
   * keys-only [[hasPending]] probe, and only when something is pending
@@ -192,13 +212,11 @@ final class TableIO(val root: String) {
   }
 
   /** Reserve the next snapshot dir and write `df` into it with ONE
-    * Spark job, nothing read back: the row count rides the write as an
-    * observed metric, exact under task retry and speculation (an
-    * accumulator on the write's result stage, merged once per partition;
-    * attempts that fail or lose the output commit are never merged).
-    * The recorded schema is `df`'s made nullable — what parquet
-    * inference returns for these files, as the same JSON text — so
-    * [[readTable]] skips the per-relation inference job.
+    * Spark job, nothing read back ([[TableIO.writeParquet]]); the row
+    * count is the committed tasks' own. The recorded schema is `df`'s
+    * made nullable — what parquet inference returns for these files, as
+    * the same JSON text — so [[readTable]] skips the per-relation
+    * inference job.
     */
   private def writeSnapshot(df: DataFrame, tag: String): Snapshot = {
     // the tag is written into the manifest line unescaped
@@ -206,19 +224,7 @@ final class TableIO(val root: String) {
       s"snapshot tag '$tag' has a character outside [A-Za-z0-9._:+-]")
     val id = nextId()
     val dir = reserveDir(id)
-    // Append, NOT Overwrite: Overwrite DELETES the target first, and the
-    // reserved dir IS the reservation marker — deleting it mid-write lets
-    // a concurrent writer's nextId() re-reserve the same id and clobber
-    // this write's _temporary staging (seen as a chmod-on-missing-path
-    // task failure). reserveDir just created the dir empty, so Append
-    // lands exactly this write's files.
-    val obs = Observation(s"tableio-$dir-${java.util.UUID.randomUUID()}")
-    df.observe(obs, count(lit(1))).write.mode(SaveMode.Append).parquet(s"$root/$dir")
-    // a listener-bus event posts the metric: bounded, so a lost event
-    // fails the commit loudly instead of hanging it
-    val rows = try Await.result(obs.future, 5.minutes).getLong(0)
-    catch { case _: TimeoutException => throw new IllegalStateException(
-      s"row count of $root/$dir never arrived; the snapshot is not committed") }
+    val rows = TableIO.writeParquet(df, s"$root/$dir")
     val schema = TableIO.asNullable(df.schema).json.getBytes(StandardCharsets.UTF_8)
     Snapshot(id, dir, rows, Base64.getEncoder.encodeToString(schema), tag)
   }
@@ -226,7 +232,7 @@ final class TableIO(val root: String) {
   /** Append `df` as a new snapshot tagged `tag`; manifest write is
     * atomic (tmp + move) so a crash mid-commit leaves the previous
     * snapshot intact. An append of no rows commits nothing: the
-    * write's observed count is 0, so its reserved dir is removed, the
+    * write's committed count is 0, so its reserved dir is removed, the
     * manifest stays byte-identical and the returned (uncommitted)
     * snapshot has `rows = 0` — a resume with nothing pending leaves no
     * trace and needs no emptiness probe of its own.
@@ -265,17 +271,19 @@ final class TableIO(val root: String) {
     }
 
   /** Appends `build` over the input rows whose key is not yet
-    * committed and returns the rows committed. The keys-only
-    * [[hasPending]] probe runs first: with nothing pending `build` is
-    * never called and 0 is returned. Otherwise the [[pending]] rows are
-    * persisted for the build (which may read them more than once) and
-    * released once the append is done, committed or not.
-    * [[TableIO.resumeExtract]] skips the probe: its build is one narrow
-    * map fused into the write, so there the probe would cost more than
-    * it saves.
+    * committed and returns the rows committed. Over a committed table
+    * the keys-only [[hasPending]] probe runs first: with nothing pending
+    * `build` is never called and 0 is returned. With nothing committed
+    * every input row is pending, so there is no probe: an empty input
+    * builds nothing and its empty append commits nothing. Otherwise the
+    * [[pending]] rows are persisted for the build (which may read them
+    * more than once) and released once the append is done, committed or
+    * not. [[TableIO.resumeExtract]] skips the probe: its build is one
+    * narrow map fused into the write, so there the probe would cost more
+    * than it saves.
     */
   def appendPending(input: DataFrame, keyCol: String)(build: DataFrame => DataFrame): Long =
-    if (!hasPending(input, keyCol)) 0L
+    if (readTable(input.sparkSession).nonEmpty && !hasPending(input, keyCol)) 0L
     else {
       val todo = pending(input, keyCol).persist(StorageLevel.MEMORY_AND_DISK)
       try appendSnapshot(build(todo)).rows
@@ -426,6 +434,68 @@ object TableIO {
     case MapType(k, v, _) => MapType(asNullable(k), asNullable(v), valueContainsNull = true)
     case other => other
   }
+
+  /** Writes `df` as parquet files into the existing, empty dir `dir` in
+    * one Spark job and returns the rows committed. Parquet's
+    * [[ParquetFileFormat.prepareWrite]] prepares the Hadoop conf once on
+    * the driver and the conf travels to the tasks as one broadcast, so
+    * no task deserializes a conf of its own. The job runs under a SQL
+    * execution id of `df`'s query, so job descriptions, job tags and
+    * `QueryExecutionListener`s see it as they see Spark's own writes.
+    * The committed tasks' row counts sum to the result: one count per
+    * partition, exact under task retry and speculation.
+    */
+  private def writeParquet(df: DataFrame, dir: String): Long = {
+    val spark = df.sparkSession
+    val format = new ParquetFileFormat()
+    val schema = df.schema
+    schema.foreach(f => require(format.supportDataType(f.dataType),
+      s"parquet cannot hold column ${f.name} of type ${f.dataType.sql}"))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val writeId = java.util.UUID.randomUUID().toString
+    val qe = df.queryExecution
+    val parts = try SQLExecution.withNewExecutionId(qe, Some("save")) {
+      spark.sparkContext.runJob(qe.toRdd, (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+        writePart(ctx, rows, dir, writeId, schema, factory, conf.value.value))
+    } finally conf.destroy()
+    parts.sum
+  }
+
+  /** A write task: `rows` into one parquet file of `dir` (none for an
+    * empty partition); returns the rows committed. The file is written
+    * under a `.`-prefixed in-progress name of this attempt, which no
+    * reader lists, and renamed to its final `part-` name only once the
+    * driver's output commit coordinator authorizes this attempt
+    * ([[org.apache.spark.TaskCommit]]), so exactly one attempt per
+    * partition commits. A failed or denied attempt deletes its
+    * in-progress file. `conf` is the broadcast value, shared by every
+    * task of the executor: read only.
+    */
+  private def writePart(ctx: TaskContext, rows: Iterator[InternalRow], dir: String,
+                        writeId: String, schema: StructType, factory: OutputWriterFactory,
+                        conf: Configuration): Long =
+    if (!rows.hasNext) 0L
+    else {
+      val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID(
+        "tableio", ctx.stageId(), TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
+      val name = f"part-${ctx.partitionId()}%05d-$writeId-c000${factory.getFileExtension(attempt)}"
+      val (file, inProgress) = (new Path(dir, name), new Path(dir, s".$name.${ctx.taskAttemptId()}"))
+      val fs = file.getFileSystem(conf)
+      try {
+        var n = 0L
+        val out = factory.newInstance(inProgress.toString, schema, attempt)
+        try rows.foreach { r => out.write(r); n += 1 } finally out.close()
+        org.apache.spark.TaskCommit(fs.getFileStatus(inProgress).getLen, n) {
+          if (!fs.rename(inProgress, file))
+            throw new java.io.IOException(s"could not rename $inProgress to $file")
+        }
+        n
+      } catch {
+        case t: Throwable => fs.delete(inProgress, false); throw t
+      }
+    }
 
   /** Resumable run: extract + commit only pages whose url is not yet in
     * the output table. Returns the number of newly committed rows; a run
