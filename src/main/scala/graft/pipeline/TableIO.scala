@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
@@ -39,13 +38,17 @@ import java.util.Base64
   * the table, made visible by the manifest alone): a commit reserves
   * `snap-<k>` and writes it in ONE Spark job of its own over the query's
   * rows. The Hadoop conf is prepared once on the driver and reaches the
-  * tasks as one broadcast. Each task writes its partition's file under a
-  * `.`-prefixed in-progress name and renames it to `part-…parquet` only
-  * once Spark's output commit coordinator authorizes that attempt, so
-  * one attempt per partition lands and no `_temporary` dir, task or job
-  * rename, or `_SUCCESS` marker is involved. The driver sums the
-  * committed tasks' rows and installs the manifest line; until then no
-  * reader sees the snapshot.
+  * tasks as one broadcast. Each task writes its partition's file with
+  * Spark's parquet writer (every `parquet.*` setting applies, and the
+  * bytes are those `df.write.parquet` writes) under a `.`-prefixed
+  * in-progress name, and moves it to `part-…parquet` only once Spark's
+  * output commit coordinator authorizes that attempt, so one attempt
+  * per partition lands and no `_temporary` dir, task or job rename, or
+  * `_SUCCESS` marker is involved. Files are created through
+  * [[NioLocalFileSystem]], a raw local file system: no child process
+  * per file, and no `.crc` sidecar. The driver sums the committed
+  * tasks' rows and installs the manifest line; until then no reader
+  * sees the snapshot.
   *
   * Per-key resume: [[appendPending]] is the one gated form — a
   * keys-only [[hasPending]] probe, and only when something is pending
@@ -439,7 +442,8 @@ object TableIO {
     * one Spark job and returns the rows committed. Parquet's
     * [[ParquetFileFormat.prepareWrite]] prepares the Hadoop conf once on
     * the driver and the conf travels to the tasks as one broadcast, so
-    * no task deserializes a conf of its own. The job runs under a SQL
+    * no task deserializes a conf of its own; that conf alone maps the
+    * `file` scheme to [[NioLocalFileSystem]]. The job runs under a SQL
     * execution id of `df`'s query, so job descriptions, job tags and
     * `QueryExecutionListener`s see it as they see Spark's own writes.
     * The committed tasks' row counts sum to the result: one count per
@@ -453,6 +457,10 @@ object TableIO {
       s"parquet cannot hold column ${f.name} of type ${f.dataType.sql}"))
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val factory = format.prepareWrite(spark, job, Map.empty, schema)
+    // files are created through NioLocalFileSystem; the JVM-wide
+    // FileSystem cache already holds the session's checksummed one
+    job.getConfiguration.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
     val writeId = java.util.UUID.randomUUID().toString
     val qe = df.queryExecution
@@ -466,12 +474,12 @@ object TableIO {
   /** A write task: `rows` into one parquet file of `dir` (none for an
     * empty partition); returns the rows committed. The file is written
     * under a `.`-prefixed in-progress name of this attempt, which no
-    * reader lists, and renamed to its final `part-` name only once the
-    * driver's output commit coordinator authorizes this attempt
-    * ([[org.apache.spark.TaskCommit]]), so exactly one attempt per
-    * partition commits. A failed or denied attempt deletes its
-    * in-progress file. `conf` is the broadcast value, shared by every
-    * task of the executor: read only.
+    * reader lists, and moved (atomically, `java.nio`) to its final
+    * `part-` name only once the driver's output commit coordinator
+    * authorizes this attempt ([[org.apache.spark.TaskCommit]]), so
+    * exactly one attempt per partition commits. A failed or denied
+    * attempt deletes its in-progress file. `conf` is the broadcast
+    * value, shared by every task of the executor: read only.
     */
   private def writePart(ctx: TaskContext, rows: Iterator[InternalRow], dir: String,
                         writeId: String, schema: StructType, factory: OutputWriterFactory,
@@ -481,19 +489,17 @@ object TableIO {
       val attempt = new TaskAttemptContextImpl(conf, new TaskAttemptID(
         "tableio", ctx.stageId(), TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
       val name = f"part-${ctx.partitionId()}%05d-$writeId-c000${factory.getFileExtension(attempt)}"
-      val (file, inProgress) = (new Path(dir, name), new Path(dir, s".$name.${ctx.taskAttemptId()}"))
-      val fs = file.getFileSystem(conf)
+      val (file, inProgress) = (Paths.get(dir, name), Paths.get(dir, s".$name.${ctx.taskAttemptId()}"))
       try {
         var n = 0L
         val out = factory.newInstance(inProgress.toString, schema, attempt)
         try rows.foreach { r => out.write(r); n += 1 } finally out.close()
-        org.apache.spark.TaskCommit(fs.getFileStatus(inProgress).getLen, n) {
-          if (!fs.rename(inProgress, file))
-            throw new java.io.IOException(s"could not rename $inProgress to $file")
+        org.apache.spark.TaskCommit(Files.size(inProgress), n) {
+          Files.move(inProgress, file, StandardCopyOption.ATOMIC_MOVE)
         }
         n
       } catch {
-        case t: Throwable => fs.delete(inProgress, false); throw t
+        case t: Throwable => Files.deleteIfExists(inProgress); throw t
       }
     }
 

@@ -1,10 +1,10 @@
 package graft
 
 import graft.fixtures.WebCorpus
-import graft.pipeline.{ExtractPipeline, TableIO}
+import graft.pipeline.{ExtractPipeline, NioLocalFileSystem, TableIO}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TaskContext
@@ -45,9 +45,9 @@ class TableIOWriteSpec extends AnyFunSuite {
     assert(ids == (0L until TaskRetryWrite.Rows), "some row is missing or committed twice")
     assert(snap.rows == TaskRetryWrite.Rows)
     val files = names(Paths.get(root, snap.dir))
-    assert(files.forall(_.matches("""\.?part-\d{5}-[0-9a-f-]+-c000\.snappy\.parquet(\.crc)?""")),
-      s"more than committed files and their checksums: $files")
-    assert(files.count(f => f.startsWith("part-") && !f.endsWith(".crc")) == TaskRetryWrite.Parts)
+    assert(files.forall(_.matches("""part-\d{5}-[0-9a-f-]+-c000\.snappy\.parquet""")),
+      s"more than committed files: $files")
+    assert(files.size == TaskRetryWrite.Parts)
     assert(files.count(_.startsWith("part-00001-")) == 1, s"partition 1 committed twice: $files")
   }
 
@@ -69,9 +69,12 @@ class TableIOWriteSpec extends AnyFunSuite {
     ExtractPipeline.run(spark.createDataset(WebCorpus.generate(n).map(_.page))).toDF()
   }
 
-  test("snapshot files carry df.write.parquet's footer schema, key/value metadata and created_by") {
+  /** An `ExtractedDoc` frame and the commit-metadata spec's nested and
+    * typed frames.
+    */
+  private def parityFrames: Seq[(String, DataFrame)] = {
     import spark.implicits._
-    val frames = Seq(
+    Seq(
       "docs" -> extracted(12),
       "nested" -> Seq(
         CommitNested("a", Some("x"), Seq(1, 2), Map("k" -> Seq(1L)), CommitInner(Some(1), Seq("t"))),
@@ -79,7 +82,10 @@ class TableIOWriteSpec extends AnyFunSuite {
       "typed" -> Seq(
         CommitTyped("a", new java.sql.Timestamp(0L), Array[Byte](1, 2), BigDecimal("1.5"), 3, 4),
         CommitTyped("b", null, null, null, 5, 6)).toDF())
-    frames.foreach { case (label, df) =>
+  }
+
+  test("snapshot files carry df.write.parquet's footer schema, key/value metadata and created_by") {
+    parityFrames.foreach { case (label, df) =>
       val written = Files.createTempDirectory(s"graft-parity-$label").resolve("out").toString
       df.write.parquet(written)
       val io = new TableIO(Files.createTempDirectory(s"graft-parity-io-$label").toString)
@@ -88,6 +94,43 @@ class TableIOWriteSpec extends AnyFunSuite {
       assert(want.size == 1 && got == want, s"$label: footers differ\n$want\n$got")
       assert(rows(io.readTable(spark).get) == rows(spark.read.parquet(written)), s"$label: rows differ")
     }
+  }
+
+  test("a one-partition snapshot file is byte for byte the part file df.write.parquet writes") {
+    parityFrames.foreach { case (label, frame) =>
+      val df = frame.coalesce(1)
+      val written = Files.createTempDirectory(s"graft-bytes-$label").resolve("out")
+      df.write.parquet(written.toString)
+      val io = new TableIO(Files.createTempDirectory(s"graft-bytes-io-$label").toString)
+      val snap = io.appendSnapshot(df)
+      val Seq(want) = names(written).filter(_.startsWith("part-"))
+      val Seq(got) = names(Paths.get(io.root, snap.dir))
+      assert(got.startsWith("part-") && got.endsWith(".parquet"), s"$label: $got")
+      assert(java.util.Arrays.equals(Files.readAllBytes(written.resolve(want)),
+        Files.readAllBytes(Paths.get(io.root, snap.dir, got))), s"$label: $got differs from $want")
+    }
+  }
+
+  test("NioLocalFileSystem gives files and dirs LocalFileSystem's permission bits, and no .crc") {
+    val conf = spark.sessionState.newHadoopConf()
+    // a umask the process's own is unlikely to be, so the bits are set, not inherited
+    conf.set("fs.permissions.umask-mode", "027")
+    val root = java.net.URI.create("file:///")
+    val base = Files.createTempDirectory("graft-perms")
+    def perms(p: Path): String =
+      java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    val made = Seq("nio" -> new NioLocalFileSystem(), "local" -> new LocalFileSystem()).map {
+      case (label, fs) =>
+        fs.initialize(root, conf)
+        try {
+          val dir = base.resolve(s"$label-dir")
+          assert(fs.mkdirs(new HPath(dir.toString)))
+          fs.create(new HPath(dir.resolve("f").toString)).close()
+          label -> (perms(dir), perms(dir.resolve("f")), names(dir))
+        } finally fs.close()
+    }.toMap
+    assert(made("nio") == ("rwxr-x---", "rw-r-----", Seq("f")), made)
+    assert(made("local") == ("rwxr-x---", "rw-r-----", Seq(".f.crc", "f")), made)
   }
 
   test("a table whose first snapshot Spark's writer committed reads and resumes as the union") {
@@ -156,7 +199,7 @@ object TaskRetryWrite {
           val dir = Paths.get(root, "snap-1")
           val s = Files.list(dir)
           try s.toArray.toSeq.map(_.asInstanceOf[Path])
-            .filter(p => p.getFileName.toString.startsWith(".part-00001-") && !p.toString.endsWith(".crc"))
+            .filter(_.getFileName.toString.startsWith(".part-00001-"))
             .foreach(p => println(s"IN-PROGRESS ${p.getFileName} ${Files.size(p)}"))
           finally s.close()
           throw new RuntimeException("forced failure of attempt 0")
